@@ -28,8 +28,6 @@ import json
 import sys
 import time
 
-import numpy as np
-
 
 def _existing_or_new_session(args):
     from pyspark.sql import SparkSession
@@ -106,13 +104,8 @@ def main(argv=None) -> int:
     elif args.command == "transform":
         with open(args.artifacts) as f:
             art = sp.ArtifactSet.from_row(json.load(f))
-        if args.work_dir:
-            runner = StageRunner(spark, args.work_dir)
-            runner.run_stage("features", lambda: pipe.transform(df, [art])) \
-                .write.mode("overwrite").parquet(args.output)
-        else:
-            pipe.transform(df, [art]).write.mode("overwrite") \
-                .parquet(args.output)
+        pipe.transform(df, [art]).write.mode("overwrite") \
+            .parquet(args.output)
         print(json.dumps({"command": "transform", "output": args.output,
                           "rows": spark.read.parquet(args.output).count()}))
     elif args.command == "pit":
@@ -161,7 +154,6 @@ def main(argv=None) -> int:
         print(json.dumps({"command": "bench-serve", "rows": n,
                           "seconds": round(dt, 3),
                           "rows_per_sec": round(n / dt, 1)}))
-    _ = np
     return 0
 
 

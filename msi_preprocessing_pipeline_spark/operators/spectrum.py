@@ -269,18 +269,19 @@ def masked_mean_reference(df: DataFrame, vec_col: str,
     (partition × source)) → driver combine. No applyInPandas group
     materialization, no skew sensitivity.
 
-    ``scale_to_tic`` fuses the TIC-normalize stage into this pass: each
-    float32 row is rescaled by ``tic / float32_row_sum`` before float64
-    accumulation — bitwise-identical values to materializing
-    :func:`tic_normalize_stage` first (float32 scaling, float64 widening),
-    without shipping the normalized vectors through another Arrow round
-    trip.
+    ``scale_to_tic`` fuses the TIC normalize (oracle stage 6) into this
+    pass: each float32 row is rescaled by ``tic / float32_row_sum`` before
+    float64 accumulation, without shipping the normalized vectors through
+    another Arrow round trip. The arithmetic is bitwise that of the serve
+    path (:func:`serve_features`); oracle stage 6 divides in float32 where
+    this factor is a float64 divide rounded to float32, so the normalized
+    rows match the oracle's to one float32 rounding — allclose, not
+    bitwise.
     """
 
     def _scaled64(mat32: np.ndarray) -> np.ndarray:
-        """float32 per-row TIC rescale then float64 widen — the exact
-        arithmetic of tic_normalize_stage (float32 row sum, float64 scalar
-        divide, float32 multiply)."""
+        """float32 per-row TIC rescale then float64 widen (float32 row sum,
+        float64 scalar divide, float32 multiply)."""
         factors = np.asarray(
             [scale_to_tic / float(r.sum()) for r in mat32], dtype=np.float64)
         return (mat32 * factors[:, None].astype(np.float32)) \
@@ -399,57 +400,6 @@ def pafft_stage(df: DataFrame, reference: np.ndarray, mz_axis: np.ndarray,
             yield pa.RecordBatch.from_arrays(cols, names=out_names)
 
     return df.mapInArrow(run, schema=schema)
-
-
-def tic_normalize_stage(df: DataFrame, reference_tic: float,
-                        vec_col: str = "aligned") -> DataFrame:
-    """Stage 6: rescale each row to the reference TIC. The row TIC is the
-    float32 sum of the aligned row (oracle parity), hence numpy-side."""
-    passthrough = [c for c in df.columns if c != vec_col]
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-         if f.name != vec_col] + ["normalized array<double>"])
-    ref_tic = float(reference_tic)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            normed = [
-                np.asarray(v, dtype=np.float32)
-                * (ref_tic / float(np.asarray(v, dtype=np.float32).sum()))
-                for v in pdf[vec_col]
-            ]
-            out = pdf[passthrough].copy()
-            out["normalized"] = normed
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def featurize_stage(df: DataFrame, artifacts: ArtifactSet,
-                    vec_col: str = "normalized") -> DataFrame:
-    """Stages 9+10 fused: banded GMM convolution + column merge, one batch
-    matmul per Arrow batch (the hot kernel, reference
-    ``components/convolve.py:14-27``)."""
-    spark = df.sparkSession
-    art_bc = spark.sparkContext.broadcast(artifacts)
-    passthrough = [c for c in df.columns if c != vec_col]
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-         if f.name != vec_col] + ["features array<float>"])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        art: ArtifactSet = art_bc.value
-        bands = _bands_for(art)
-        for pdf in batches:
-            mat = np.stack([np.asarray(v, dtype=float) for v in pdf[vec_col]])
-            feats = convolve_k.featurize_batch(mat, bands)
-            merged = merge_k.apply_merging(feats, art.merge_starts,
-                                           art.merge_lengths)
-            out = pdf[passthrough].copy()
-            out["features"] = list(merged)
-            yield out
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def smooth_stage(df: DataFrame, vec_col: str = "spectrum", window: int = 5,

@@ -19,16 +19,38 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import axis as axis_k, gmm as gmm_k, merge as merge_k
+from ..kernels import outlier as outlier_k
 from ..oracle import PipelineConfig, filter_components
 from ..operators import spectrum as sp
-from ..operators.asof import asof_join, asof_join_broadcast
+from ..operators.asof import asof_join_broadcast
+
+
+class _PersistRunner:
+    """The in-memory stage runner behind :meth:`FeaturePipeline.fit`: stages
+    are persisted (and unpersisted by :meth:`close`), artifacts are returned
+    as built. Same ``run_stage`` / ``run_artifact`` interface as
+    :class:`..plans.runner.StageRunner`."""
+
+    def __init__(self):
+        self._persisted: list[DataFrame] = []
+
+    def run_stage(self, name: str, build) -> DataFrame:
+        df = build().persist()
+        self._persisted.append(df)
+        return df
+
+    def run_artifact(self, name: str, build):
+        return build()
+
+    def close(self) -> None:
+        for df in self._persisted:
+            df.unpersist()
 
 
 class FeaturePipeline:
     def __init__(self, spark: SparkSession,
                  source_axes: dict[str, np.ndarray],
-                 config: PipelineConfig | None = None,
-                 target_partitions: int | None = None):
+                 config: PipelineConfig | None = None):
         self.spark = spark
         self.source_axes = {s: np.asarray(a, dtype=float)
                             for s, a in source_axes.items()}
@@ -37,20 +59,17 @@ class FeaturePipeline:
         # per-threshold decomposition of the last fit's component filters,
         # exposed as a queryable metrics table via threshold_diagnostics_df()
         self.last_fit_diagnostics: list[dict] = []
-        # The UDF stages are CPU-bound (~3 ms/row — baseline + PaFFT), so
-        # partitioning must track cores, not bytes: byte-based AQE coalescing
-        # or a small parquet file would serialize the stage. 4× cores
-        # measured best (wave balancing) while keeping tasks >100 ms.
-        self.target_partitions = (
-            target_partitions
-            or 4 * spark.sparkContext.defaultParallelism)
 
     def _maybe_rebalance(self, df: DataFrame) -> DataFrame:
         """Round-robin repartition ONLY when the input is under-partitioned
-        for the CPU-bound UDF stages; a well-split scan stays shuffle-free."""
+        for the CPU-bound UDF stages; a well-split scan stays shuffle-free.
+
+        The UDF stages cost ~3 ms/row (baseline + PaFFT), so partitioning
+        tracks cores, not bytes: 4× cores measured best (wave balancing)
+        while keeping tasks >100 ms."""
         cores = self.spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < 2 * cores:
-            return df.repartition(self.target_partitions)
+            return df.repartition(4 * cores)
         return df
 
     # ---------------------------------------------------------------- fit
@@ -66,73 +85,23 @@ class FeaturePipeline:
         return axis_k.estimate_new_axis(axes[first], n_ticks,
                                         np.array([lo, hi]))
 
+    # the stages and artifacts of _fit in DAG order — targeted recompute
+    # (CLI ``recompute --stage X``) invalidates X and everything after it
+    CHECKPOINT_ORDER = (
+        "mz_axis", "resample_baseline", "tic_thresholds", "pafft_reference",
+        "pafft", "tic_reference_tic", "gmm_reference", "artifact_set")
+
     def fit(self, df: DataFrame, version: int = 1,
             valid_from_ts: int | None = None,
             max_ts: int | None = None) -> sp.ArtifactSet:
         """Fit all artifacts from ``df`` (optionally truncated at ``max_ts``
-        for point-in-time fitting). ``df`` must carry ``ts``."""
-        cfg = self.config
-        if max_ts is not None:
-            df = df.where(F.col("ts") <= F.lit(int(max_ts)))
-        mz_axis = self.common_axis()
-
-        stage_a = sp.resample_baseline_stage(
-            self._maybe_rebalance(df),
-            self.source_axes, mz_axis, cfg).persist()
+        for point-in-time fitting), holding the stages in memory. ``df``
+        must carry ``ts``."""
+        runner = _PersistRunner()
         try:
-            thr = sp.tic_outlier_thresholds(stage_a, seed=cfg.outlier_seed)
-            masked = sp.with_inlier_mask(stage_a, thr)
-            pafft_ref = sp.masked_mean_reference(masked, "spectrum")
-
-            # one pass fewer than the naive staging: pafft emits the float64
-            # row sum so the TIC reference is a JVM scalar aggregation, and
-            # the normalize stage is fused into the gmm-reference partials
-            # (bitwise-identical values, no extra Arrow round trip)
-            stage_b = sp.pafft_stage(masked, pafft_ref, mz_axis, cfg,
-                                     with_sum=True).persist()
-            try:
-                ref_tic = sp.masked_weighted_mean_scalar(stage_b,
-                                                         "aligned_sum")
-                gmm_ref = sp.masked_mean_reference(stage_b, "aligned",
-                                                   scale_to_tic=ref_tic)
-            finally:
-                stage_b.unpersist()
+            return self._fit(df, runner, version, valid_from_ts, max_ts)
         finally:
-            stage_a.unpersist()
-
-        # driver-side model fitting on the single reference vector
-        n_dense = (cfg.gmm_axis_points or
-                   int(cfg.gmm_axis_factor * mz_axis.size))
-        dense_axis = axis_k.estimate_new_axis(
-            mz_axis, n_dense,
-            np.array([float(np.min(mz_axis)), float(np.max(mz_axis))]))
-        dense_ref = np.interp(dense_axis, mz_axis, gmm_ref)
-        model = gmm_k.estimate_spectrum_gmm(
-            dense_axis, dense_ref,
-            max_components_per_segment=cfg.gmm_max_components_per_segment,
-            rel_threshold=cfg.gmm_rel_threshold)
-        diags: list[dict] = []
-        keep = filter_components(model, cfg, diagnostics=diags)
-        self.last_fit_diagnostics = diags
-        mu, sig, w = model.mu[keep], model.sig[keep], model.w[keep]
-        merged = merge_k.merge_components(mu, sig, w)
-
-        return sp.ArtifactSet(
-            version=version,
-            valid_from_ts=int(valid_from_ts if valid_from_ts is not None
-                              else cfg.epoch_base),
-            mz_axis=mz_axis, b1=thr.b1, b2=thr.b2,
-            pafft_reference=np.asarray(pafft_ref),
-            tic_reference_tic=ref_tic,
-            gmm_mu=mu, gmm_sig=sig, gmm_w=w,
-            merge_starts=merged.starts, merge_lengths=merged.lengths)
-
-    # checkpoint DAG order of fit_checkpointed — targeted recompute
-    # (CLI ``recompute --stage X``) invalidates X and everything after it
-    CHECKPOINT_ORDER = (
-        "mz_axis", "resample_baseline", "tic_thresholds", "pafft_reference",
-        "pafft", "tic_reference_tic", "normalized", "gmm_reference",
-        "artifact_set")
+            runner.close()
 
     def fit_checkpointed(self, df: DataFrame, runner, version: int = 1,
                          valid_from_ts: int | None = None,
@@ -141,7 +110,17 @@ class FeaturePipeline:
         :class:`..plans.runner.StageRunner`; a rerun (after a crash or kill)
         skips committed stages and produces byte-identical artifacts (the
         Luigi target-existence-skip analog, FIXTURES.md F5)."""
+        return self._fit(df, runner, version, valid_from_ts, max_ts)
+
+    def _fit(self, df: DataFrame, runner, version: int,
+             valid_from_ts: int | None,
+             max_ts: int | None) -> sp.ArtifactSet:
+        """The artifact spine over ``runner.run_stage(name, build)`` /
+        ``runner.run_artifact(name, build)``, one call per
+        :attr:`CHECKPOINT_ORDER` entry. Artifacts are JSON-shaped (lists,
+        floats) so either runner returns the same values."""
         cfg = self.config
+        self.last_fit_diagnostics = []
         if max_ts is not None:
             df = df.where(F.col("ts") <= F.lit(int(max_ts)))
         mz_axis = np.asarray(runner.run_artifact(
@@ -152,39 +131,35 @@ class FeaturePipeline:
             lambda: sp.resample_baseline_stage(
                 self._maybe_rebalance(df), self.source_axes,
                 mz_axis, cfg))
-        thr_vals = runner.run_artifact(
+        thr = outlier_k.TicThresholds(*runner.run_artifact(
             "tic_thresholds",
             lambda: list(sp.tic_outlier_thresholds(stage_a,
-                                                   seed=cfg.outlier_seed)))
-        from ..kernels.outlier import TicThresholds
-        thr = TicThresholds(*thr_vals)
+                                                   seed=cfg.outlier_seed))))
         masked = sp.with_inlier_mask(stage_a, thr)
         pafft_ref = np.asarray(runner.run_artifact(
             "pafft_reference",
             lambda: sp.masked_mean_reference(masked, "spectrum").tolist()))
 
-        # same fused staging as fit(): the TIC reference is a JVM scalar
-        # aggregation over per-row float64 sums, so fit() and
-        # fit_checkpointed() yield IDENTICAL artifacts for the same input.
-        # (Relative to the oracle's np.sum over the mean vector this is a
-        # reordered-sum equivalence — allclose, not bitwise; only the
-        # TIC-normalize fusion itself is bitwise-identical.)
+        # pafft emits the float64 row sum so the TIC reference is a JVM
+        # scalar aggregation (relative to the oracle's np.sum over the mean
+        # vector a reordered sum — allclose, not bitwise), and the TIC
+        # normalize is fused into the gmm-reference partials: no normalized
+        # stage, no extra Arrow round trip.
         stage_b = runner.run_stage(
             "pafft", lambda: sp.pafft_stage(masked, pafft_ref, mz_axis, cfg,
                                             with_sum=True))
         ref_tic = float(runner.run_artifact(
             "tic_reference_tic",
             lambda: sp.masked_weighted_mean_scalar(stage_b, "aligned_sum")))
-
-        stage_c = runner.run_stage(
-            "normalized", lambda: sp.tic_normalize_stage(stage_b, ref_tic))
         gmm_ref = np.asarray(runner.run_artifact(
             "gmm_reference",
-            lambda: sp.masked_mean_reference(stage_c, "normalized").tolist()))
+            lambda: sp.masked_mean_reference(
+                stage_b, "aligned", scale_to_tic=ref_tic).tolist()))
 
         def build_model() -> dict:
+            # driver-side model fitting on the single reference vector
             n_dense = (cfg.gmm_axis_points or
-                   int(cfg.gmm_axis_factor * mz_axis.size))
+                       int(cfg.gmm_axis_factor * mz_axis.size))
             dense_axis = axis_k.estimate_new_axis(
                 mz_axis, n_dense,
                 np.array([float(np.min(mz_axis)), float(np.max(mz_axis))]))
@@ -193,7 +168,9 @@ class FeaturePipeline:
                 dense_axis, dense_ref,
                 max_components_per_segment=cfg.gmm_max_components_per_segment,
                 rel_threshold=cfg.gmm_rel_threshold)
-            keep = filter_components(model, cfg)
+            diags: list[dict] = []
+            keep = filter_components(model, cfg, diagnostics=diags)
+            self.last_fit_diagnostics = diags
             mu, sig, w = model.mu[keep], model.sig[keep], model.w[keep]
             merged = merge_k.merge_components(mu, sig, w)
             return sp.ArtifactSet(
@@ -241,50 +218,29 @@ class FeaturePipeline:
             rows, schema="source string, valid_from_ts long, "
                          "artifact_version long")
 
-    def transform(self, df: DataFrame, artifacts: list[sp.ArtifactSet],
-                  salt_buckets: int | None = None,
-                  asof_strategy: str = "broadcast",
-                  rebalance: bool | str = "auto") -> DataFrame:
+    def transform(self, df: DataFrame,
+                  artifacts: list[sp.ArtifactSet]) -> DataFrame:
         """Serving: as-of join rows to their artifact version, then the fused
         featurization UDF. Rows before the first version yield null features.
 
-        ``asof_strategy='broadcast'`` (default): the artifact spine is a tiny
-        per-entity timeline → broadcast join + array pick, ZERO shuffle on the
-        row side and inherently skew-immune. ``'window'``: the general
-        union+window sort-merge as-of (use when the right side is large);
-        ``salt_buckets`` applies to that path.
-
-        ``rebalance``: the serve UDF is CPU-bound per row, so parallelism
-        must track cores. ``'auto'`` (default) keeps the plan SHUFFLE-FREE
-        when the scan already yields enough splits (small
-        ``maxPartitionBytes`` — see ``session.py``) and falls back to a
-        round-robin repartition only when the input is under-partitioned
-        (e.g. one fat file). ``True``/``False`` force either path.
+        The artifact spine is a tiny per-entity timeline, so the as-of join
+        is a broadcast join + array pick: ZERO shuffle on the row side and
+        inherently skew-immune. The serve UDF is CPU-bound per row, so the
+        input goes through :meth:`_maybe_rebalance`: a scan that already
+        yields enough splits (small ``maxPartitionBytes`` — see
+        ``session.py``) stays SHUFFLE-FREE, an under-partitioned one (e.g.
+        one fat file) gets a round-robin repartition.
         """
-        spine = self.artifact_spine(artifacts)
-        if asof_strategy == "broadcast":
-            joined = asof_join_broadcast(df, spine, on="source",
-                                         left_ts="ts",
-                                         right_ts="valid_from_ts",
-                                         value_cols=["artifact_version"])
-        else:
-            joined = asof_join(df, spine, on="source", left_ts="ts",
-                               right_ts="valid_from_ts",
-                               value_cols=["artifact_version"],
-                               direction="backward",
-                               salt_buckets=salt_buckets)
+        joined = asof_join_broadcast(self._maybe_rebalance(df),
+                                     self.artifact_spine(artifacts),
+                                     on="source", left_ts="ts",
+                                     right_ts="valid_from_ts",
+                                     value_cols=["artifact_version"])
         versions = {a.version: a for a in artifacts}
-        if rebalance == "auto":
-            cores = self.spark.sparkContext.defaultParallelism
-            rebalance = df.rdd.getNumPartitions() < 2 * cores
-        if rebalance:
-            joined = joined.repartition(self.target_partitions)
         return sp.serve_features(joined, versions, self.source_axes,
                                  self.config)
 
-    def fit_transform(self, df: DataFrame,
-                      salt_buckets: int | None = None) -> DataFrame:
+    def fit_transform(self, df: DataFrame) -> DataFrame:
         """The reference's batch semantics: fit on everything, apply to
         everything (single artifact version)."""
-        art = self.fit(df)
-        return self.transform(df, [art], salt_buckets=salt_buckets)
+        return self.transform(df, [self.fit(df)])

@@ -65,17 +65,52 @@ def test_cli_recompute_single_stage_reuses_upstream(spark, tmp_path, capsys):
 
     # --only-stage: strictly one stage rebuilt
     assert main(["recompute", "--input", in_dir, "--work-dir", work,
-                 "--stage", "normalized", "--only-stage",
+                 "--stage", "pafft", "--only-stage",
                  "--sources", "src-000,src-001",
                  "--base-channels", "512"]) == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out2["recomputed"] == ["normalized"]
+    assert out2["recomputed"] == ["pafft"]
 
 
-def test_threshold_diagnostics_table(spark):
+def test_cli_transform_work_dir_serves_current_artifacts(spark, tmp_path,
+                                                         capsys):
+    """A second transform with new artifacts in the same work dir must serve
+    the new artifacts, not re-emit the first transform's features."""
+    df = synthetic.sequences_df(spark, {"src-000": 8, "src-001": 8},
+                                base_channels=512)
+    in_dir = str(tmp_path / "seq")
+    df.write.parquet(in_dir)
+    work = str(tmp_path / "work")
+    art1 = str(tmp_path / "art1.json")
+    common = ["--input", in_dir, "--work-dir", work,
+              "--sources", "src-000,src-001", "--base-channels", "512"]
+
+    assert main(["fit", "--artifacts", art1] + common) == 0
+    with open(art1) as f:
+        row = json.load(f)
+    row["version"] = 2
+    art2 = str(tmp_path / "art2.json")
+    with open(art2, "w") as f:
+        json.dump(row, f)
+
+    for art, version in ((art1, 1), (art2, 2)):
+        out_dir = str(tmp_path / f"feats{version}")
+        assert main(["transform", "--artifacts", art, "--output", out_dir]
+                    + common) == 0
+        capsys.readouterr()
+        got = {r.artifact_version for r in
+               spark.read.parquet(out_dir).select("artifact_version")
+               .distinct().collect()}
+        assert got == {version}
+
+
+def test_threshold_diagnostics_table(spark, tmp_path):
+    import pandas as pd
+
     from msi_preprocessing_pipeline_spark.oracle import PipelineConfig
     from msi_preprocessing_pipeline_spark.operators import spectrum as sp
     from msi_preprocessing_pipeline_spark.plans.pipeline import FeaturePipeline
+    from msi_preprocessing_pipeline_spark.plans.runner import StageRunner
     from msi_preprocessing_pipeline_spark.sources import synthetic
 
     plan = synthetic.source_plan(2, 8)
@@ -84,6 +119,18 @@ def test_threshold_diagnostics_table(spark):
     pipe = FeaturePipeline(spark, axes, PipelineConfig())
     art = pipe.fit(df)
     diag = pipe.threshold_diagnostics_df().toPandas()
+    assert len(diag) > 0
+
+    # a fresh checkpointed fit reports the same table; a fit resumed from
+    # the artifact_set checkpoint reports an empty one, never a stale one
+    ckpt = FeaturePipeline(spark, axes, PipelineConfig())
+    work = str(tmp_path / "work")
+    ckpt.fit_checkpointed(df, StageRunner(spark, work))
+    pd.testing.assert_frame_equal(
+        ckpt.threshold_diagnostics_df().toPandas(), diag)
+    ckpt.fit_checkpointed(df, StageRunner(spark, work))
+    assert ckpt.threshold_diagnostics_df().count() == 0
+
     # one chosen threshold per stage that produced thresholds; n_kept for the
     # chosen amplitude threshold must equal the survivors entering variance
     assert set(diag.columns) == {"stage", "threshold_index", "threshold",

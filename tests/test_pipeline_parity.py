@@ -74,15 +74,19 @@ def test_features_allclose_to_oracle(table, axes, oracle_rows):
                                    atol=1e-3, err_msg=doc_id)
 
 
-def test_salted_transform_identical(table, axes):
+def test_transform_partitioning_invariant(table, axes):
+    """One input partition (the round-robin rebalance branch) and eight
+    (the shuffle-free branch) serve identical features."""
     pipe = FeaturePipeline(table.sparkSession, axes, CFG)
     art = pipe.fit(table)
-    plain = pipe.transform(table, [art]).toPandas() \
+    split = pipe.transform(table, [art]).toPandas() \
         .sort_values("doc_id").reset_index(drop=True)
-    salted = pipe.transform(table, [art], salt_buckets=4).toPandas() \
+    single = pipe.transform(table.coalesce(1), [art]).toPandas() \
         .sort_values("doc_id").reset_index(drop=True)
-    assert plain["artifact_version"].equals(salted["artifact_version"])
-    for a, b in zip(plain["features"], salted["features"]):
+    assert table.rdd.getNumPartitions() == 8
+    assert split["doc_id"].equals(single["doc_id"])
+    assert split["artifact_version"].equals(single["artifact_version"])
+    for a, b in zip(split["features"], single["features"]):
         np.testing.assert_array_equal(np.asarray(a), np.asarray(b))
 
 
