@@ -9,10 +9,10 @@ Vanilla Spark has no as-of join (SURVEY.md §4); two strategies are provided:
   skew, and ``salt_buckets`` splits pathological hot entities (the right side
   is replicated per salt so every bucket still sees the full artifact
   timeline — correctness is preserved by construction).
-* :func:`asof_join_merge` — **cogrouped sort-merge** via ``applyInPandas`` +
-  ``pd.merge_asof`` per key group: the classic sort-merge as-of; useful when
-  the right side is wide or the caller wants tolerance semantics computed in
-  pandas.
+* :func:`asof_join_broadcast` — **broadcast timeline**: for a small right
+  side (artifact/dimension timelines), one sorted timeline array per key is
+  broadcast onto the left and the as-of element picked with JVM array
+  functions; ZERO shuffle on the left.
 
 Zero temporal leakage contract: ``direction='backward'`` matches the latest
 right row with ``right_ts <= left_ts`` — a row can never observe an artifact
@@ -23,7 +23,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -187,49 +186,6 @@ def asof_join_broadcast(left: DataFrame, right: DataFrame,
         *[pick[c].alias(c) for c in value_cols],
     )
     return out
-
-
-def asof_join_merge(left: DataFrame, right: DataFrame,
-                    on: Sequence[str] | str, left_ts: str = "ts",
-                    right_ts: str | None = None,
-                    value_cols: Sequence[str] | None = None,
-                    direction: str = "backward",
-                    tolerance: float | None = None) -> DataFrame:
-    """Cogrouped sort-merge as-of join: ``pd.merge_asof`` per key group.
-
-    Both sides shuffle once on the keys; within a group pandas does the
-    backward/forward binary-search merge. Prefer :func:`asof_join` unless the
-    right side is wide.
-    """
-    on = _as_list(on)
-    right_ts = right_ts or left_ts
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in on and c != right_ts]
-    value_cols = _as_list(value_cols)
-
-    out_schema = left.schema
-    right_schema = right.schema
-    from pyspark.sql.types import StructType
-    fields = list(out_schema.fields) + \
-        [right_schema[c] for c in value_cols]
-    schema = StructType(fields)
-    left_cols = left.columns
-
-    def merge_group(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        l_sorted = l_pdf.sort_values(left_ts, kind="mergesort")
-        if r_pdf.empty:
-            for c in value_cols:
-                l_sorted[c] = None
-            return l_sorted[left_cols + value_cols]
-        r_sorted = r_pdf.sort_values(right_ts, kind="mergesort")
-        merged = pd.merge_asof(
-            l_sorted, r_sorted[[right_ts] + value_cols],
-            left_on=left_ts, right_on=right_ts, direction=direction,
-            tolerance=tolerance, suffixes=("", "__r"))
-        return merged[left_cols + value_cols]
-
-    return (left.groupBy(*on).cogroup(right.groupBy(*on))
-            .applyInPandas(merge_group, schema=schema))
 
 
 def backfill(df: DataFrame, cols: Sequence[str] | str,

@@ -4,9 +4,14 @@ artifacts.
 Each operator is the Spark expression of one reference pipeline stage
 (SURVEY.md §2.6/§2.9). The shape is always the same: small artifacts
 (axis / reference vector / GMM model) are broadcast; rows stream through
-``mapInPandas`` in Arrow batches; the numerical kernel is the SAME module the
-numpy oracle uses (``..kernels``), so parity is arithmetic-identical modulo
-float64 aggregation order.
+``mapInArrow`` in Arrow record batches; the numerical kernel is the SAME
+module the numpy oracle uses (``..kernels``), so parity is
+arithmetic-identical modulo float64 aggregation order.
+
+The per-row chain — resample → baseline (:func:`_spectra`), PaFFT
+(:func:`_aligned`), TIC rescale (:func:`_tic_scaled`) — is written once;
+the fit stages and the serve UDF are thin ``mapInArrow`` bodies over it, so
+serving applies exactly the stage arithmetic the fit used.
 
 No per-row Python at the DataFrame level: the per-row loops live inside the
 UDF over numpy arrays (the reference's ``Pool.map(chunksize=800)`` analog is
@@ -16,12 +21,12 @@ UDF over numpy arrays (the reference's ``Pool.map(chunksize=800)`` analog is
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..kernels import alignment, axis as axis_k, baseline as baseline_k
@@ -103,6 +108,71 @@ def _uniform_list_array(mat: np.ndarray) -> "pa.ListArray":
     return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel()))
 
 
+def _matrix(batch: "pa.RecordBatch", name: str) -> np.ndarray:
+    """[n, w] numpy view of a list column whose rows all have length w."""
+    flat, offs = _list_col_np(batch, name)
+    n = batch.num_rows
+    width = int(offs[1] - offs[0]) if n else 0
+    assert offs[-1] - offs[0] == n * width, f"ragged {name} column"
+    return flat[offs[0]:offs[-1]].reshape(n, width)
+
+
+# --------------------------------------------------------------------------
+# The per-row spectrum chain. The fit stages and the serve UDF call these and
+# nothing else per row, so serving applies exactly the fit's arithmetic.
+
+def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
+             new_axis: np.ndarray, cfg: PipelineConfig,
+             rows: Sequence[int]) -> np.ndarray:
+    """Stages 2+3 for ``rows`` of ``batch``: each row's ``tokens`` resampled
+    from its source's m/z axis onto ``new_axis``, then baseline-removed.
+    Returns float32 ``[len(rows), new_axis.size]``.
+
+    A row whose source has no axis, or whose token count (0 for empty or
+    null ``tokens``) differs from its source axis length, raises
+    ``ValueError`` naming the row's ``doc_id``."""
+    names = batch.schema.names
+    tokens = batch.column(names.index("tokens"))
+    flat, offs = _list_col_np(batch, "tokens")
+    nulls = tokens.is_null().to_numpy(zero_copy_only=False)
+    srcs = batch.column(names.index("source")).to_pylist()
+    out = np.empty((len(rows), new_axis.size), dtype=np.float32)
+    for j, i in enumerate(rows):
+        ax = axes.get(srcs[i])
+        n_tok = 0 if nulls[i] else int(offs[i + 1] - offs[i])
+        if ax is None or n_tok != ax.size:
+            doc_id = batch.column(names.index("doc_id"))[i].as_py()
+            reason = ("no m/z axis artifact for the source" if ax is None
+                      else f"{n_tok} tokens != source axis length {ax.size}")
+            raise ValueError(
+                f"row doc_id={doc_id!r} source={srcs[i]!r}: {reason}")
+        x = axis_k.resample_row(new_axis, ax,
+                                flat[offs[i]:offs[i + 1]].astype(float))
+        out[j] = baseline_k.remove_baseline(
+            new_axis, x, cfg.baseline_max_width, cfg.baseline_min_width,
+            cfg.baseline_increment)
+    return out
+
+
+def _aligned(mat: np.ndarray, ref: np.ndarray, axis: np.ndarray,
+             cfg: PipelineConfig) -> np.ndarray:
+    """Stage 5: each float32 row of ``mat`` PaFFT-aligned to ``ref``."""
+    out = np.empty_like(mat)
+    for i, row in enumerate(mat):
+        out[i] = alignment.pafft(row, ref, axis, cfg.pafft_minimum_segment,
+                                 cfg.pafft_shift_limit)
+    return out
+
+
+def _tic_scaled(mat: np.ndarray, tic: float) -> np.ndarray:
+    """Stage 6: each float32 row rescaled to total ``tic`` — float32 row sum,
+    float64 divide, factor rounded to float32, float32 multiply. A zero-sum
+    row raises ``FloatingPointError`` rather than yielding NaN."""
+    with np.errstate(divide="raise", invalid="raise"):
+        factors = tic / mat.sum(axis=1).astype(np.float64)
+    return mat * factors.astype(np.float32)[:, None]
+
+
 _BANDS_CACHE: dict[tuple, "convolve_k.ComponentBands"] = {}
 
 
@@ -157,40 +227,16 @@ def resample_baseline_stage(df: DataFrame, source_axes: dict[str, np.ndarray],
     axes_bc = spark.sparkContext.broadcast(
         {s: np.asarray(a, dtype=float) for s, a in source_axes.items()})
     new_axis_bc = spark.sparkContext.broadcast(np.asarray(new_axis, dtype=float))
-    bw, bmin, binc = (config.baseline_max_width, config.baseline_min_width,
-                      config.baseline_increment)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        axes = axes_bc.value
-        new_ax = new_axis_bc.value
-        width = new_ax.size
+        axes, new_ax = axes_bc.value, new_axis_bc.value
         for b in batches:
+            out = _spectra(b, axes, new_ax, config, range(b.num_rows))
             names = b.schema.names
-            flat, offs = _list_col_np(b, "tokens")
-            srcs = b.column(names.index("source")).to_pylist()
-            n = b.num_rows
-            out = np.empty((n, width), dtype=np.float32)
-            tic = np.empty(n, dtype=np.float64)
-            for i in range(n):
-                src = srcs[i]
-                ax = axes.get(src)
-                if ax is None:
-                    raise ValueError(f"no m/z axis artifact for source "
-                                     f"{src!r}")
-                toks = flat[offs[i]:offs[i + 1]].astype(float)
-                if toks.size != ax.size:
-                    raise ValueError(
-                        f"row token length {toks.size} != source axis length "
-                        f"{ax.size} for source {src!r}")
-                x = axis_k.resample_row(new_ax, ax, toks)
-                x = baseline_k.remove_baseline(new_ax, x, bw, bmin, binc)
-                out[i] = x
-                tic[i] = float(x.sum())
             yield pa.RecordBatch.from_arrays(
-                [b.column(names.index("doc_id")),
-                 b.column(names.index("source")),
-                 b.column(names.index("ts")),
-                 _uniform_list_array(out), pa.array(tic)],
+                [b.column(names.index(c)) for c in ("doc_id", "source", "ts")]
+                + [_uniform_list_array(out),
+                   pa.array(out.sum(axis=1).astype(np.float64))],
                 names=["doc_id", "source", "ts", "spectrum", "tic"])
 
     return df.mapInArrow(
@@ -270,47 +316,30 @@ def masked_mean_reference(df: DataFrame, vec_col: str,
     materialization, no skew sensitivity.
 
     ``scale_to_tic`` fuses the TIC normalize (oracle stage 6) into this
-    pass: each float32 row is rescaled by ``tic / float32_row_sum`` before
-    float64 accumulation, without shipping the normalized vectors through
-    another Arrow round trip. The arithmetic is bitwise that of the serve
-    path (:func:`serve_features`); oracle stage 6 divides in float32 where
-    this factor is a float64 divide rounded to float32, so the normalized
-    rows match the oracle's to one float32 rounding — allclose, not
-    bitwise.
+    pass: each float32 row goes through :func:`_tic_scaled` — the same
+    function the serve UDF calls — before float64 accumulation, without
+    shipping the normalized vectors through another Arrow round trip.
+    Oracle stage 6 divides in float32 where :func:`_tic_scaled` rounds a
+    float64 factor to float32, so the normalized rows match the oracle's to
+    one float32 rounding — allclose, not bitwise.
     """
-
-    def _scaled64(mat32: np.ndarray) -> np.ndarray:
-        """float32 per-row TIC rescale then float64 widen (float32 row sum,
-        float64 scalar divide, float32 multiply)."""
-        factors = np.asarray(
-            [scale_to_tic / float(r.sum()) for r in mat32], dtype=np.float64)
-        return (mat32 * factors[:, None].astype(np.float32)) \
-            .astype(np.float64)
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc: dict[str, tuple[np.ndarray, int]] = {}
         for b in batches:
             names = b.schema.names
-            flat, offs = _list_col_np(b, vec_col)
+            mat = _matrix(b, vec_col)
             mask = b.column(names.index(mask_col)) \
                 .to_numpy(zero_copy_only=False).astype(bool)
             srcs = np.asarray(
                 b.column(names.index("source")).to_pylist(), dtype=object)
-            n = b.num_rows
-            if n == 0:
-                continue
-            width = offs[1] - offs[0]
-            assert offs[-1] - offs[0] == n * width, "ragged vector column"
-            mat = flat[offs[0]:offs[-1]].reshape(n, width)
             for src in sorted(set(srcs[mask])):
                 sub = mat[mask & (srcs == src)]
                 if scale_to_tic is not None:
-                    sub = _scaled64(np.ascontiguousarray(sub,
-                                                         dtype=np.float32))
-                else:
-                    sub = sub.astype(np.float64)
+                    sub = _tic_scaled(sub, scale_to_tic)
                 s, c = acc.get(src, (0.0, 0))
-                acc[src] = (s + sub.sum(axis=0), c + len(sub))
+                acc[src] = (s + sub.astype(np.float64).sum(axis=0),
+                            c + len(sub))
         if acc:
             keys = list(acc)
             mat = np.stack([acc[k][0] for k in keys])
@@ -362,42 +391,31 @@ def masked_weighted_mean_scalar(df: DataFrame, col: str,
 
 
 def pafft_stage(df: DataFrame, reference: np.ndarray, mz_axis: np.ndarray,
-                config: PipelineConfig,
-                vec_col: str = "spectrum",
-                with_sum: bool = False) -> DataFrame:
-    """Stage 5: PaFFT alignment against the broadcast reference.
-
-    ``with_sum`` also emits ``aligned_sum`` (float64 row sum of the aligned
-    float32 row) so downstream scalar reductions (the TIC reference) can run
-    as JVM aggregations instead of another full-vector Arrow pass."""
+                config: PipelineConfig) -> DataFrame:
+    """Stage 5: PaFFT alignment of ``spectrum`` against the broadcast
+    reference. Replaces ``spectrum`` with ``aligned`` and adds
+    ``aligned_sum`` (float64 row sum of the aligned float32 row) so the TIC
+    reference runs as a JVM aggregation instead of another full-vector Arrow
+    pass."""
     spark = df.sparkSession
     ref_bc = spark.sparkContext.broadcast(np.asarray(reference, dtype=float))
     ax_bc = spark.sparkContext.broadcast(np.asarray(mz_axis, dtype=float))
-    seg, lim = config.pafft_minimum_segment, config.pafft_shift_limit
-    passthrough = [c for c in df.columns if c != vec_col]
+    passthrough = [c for c in df.columns if c != "spectrum"]
     schema = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-         if f.name != vec_col] + ["aligned array<float>"]
-        + (["aligned_sum double"] if with_sum else []))
+         if f.name != "spectrum"]
+        + ["aligned array<float>", "aligned_sum double"])
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ref, ax = ref_bc.value, ax_bc.value
-        width = ax.size
         for b in batches:
+            out = _aligned(_matrix(b, "spectrum"), ref, ax, config)
             names = b.schema.names
-            flat, offs = _list_col_np(b, vec_col)
-            n = b.num_rows
-            out = np.empty((n, width), dtype=np.float32)
-            for i in range(n):
-                out[i] = alignment.pafft(flat[offs[i]:offs[i + 1]], ref, ax,
-                                         seg, lim)
-            cols = [b.column(names.index(c)) for c in passthrough]
-            cols.append(_uniform_list_array(out))
-            out_names = list(passthrough) + ["aligned"]
-            if with_sum:
-                cols.append(pa.array(out.sum(axis=1, dtype=np.float64)))
-                out_names.append("aligned_sum")
-            yield pa.RecordBatch.from_arrays(cols, names=out_names)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(names.index(c)) for c in passthrough]
+                + [_uniform_list_array(out),
+                   pa.array(out.sum(axis=1, dtype=np.float64))],
+                names=passthrough + ["aligned", "aligned_sum"])
 
     return df.mapInArrow(run, schema=schema)
 
@@ -480,68 +498,49 @@ def export_csv(df: DataFrame, vec_col: str, path: str,
 
 def serve_features(df: DataFrame, artifact_versions: dict[int, ArtifactSet],
                    source_axes: dict[str, np.ndarray],
-                   config: PipelineConfig,
-                   version_col: str = "artifact_version") -> DataFrame:
+                   config: PipelineConfig) -> DataFrame:
     """THE hot path: fused serving UDF. Rows arrive already as-of-joined to an
-    artifact version; one ``mapInPandas`` pass runs resample → baseline →
-    PaFFT → TIC-normalize → convolve → merge per row against the broadcast
-    artifact set of its version. Rows with no artifact version (ts before the
-    first checkpoint) get null features — never a leaked artifact.
+    ``artifact_version``; one ``mapInArrow`` pass runs, per version,
+    :func:`_spectra` → :func:`_aligned` → :func:`_tic_scaled` → convolve →
+    merge against the broadcast artifact set of that version. Rows with no
+    artifact version (ts before the first checkpoint) get null features —
+    never a leaked artifact.
     """
     spark = df.sparkSession
     arts_bc = spark.sparkContext.broadcast(artifact_versions)
     axes_bc = spark.sparkContext.broadcast(
         {s: np.asarray(a, dtype=float) for s, a in source_axes.items()})
-    bw, bmin, binc = (config.baseline_max_width, config.baseline_min_width,
-                      config.baseline_increment)
-    seg, lim = config.pafft_minimum_segment, config.pafft_shift_limit
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arts = arts_bc.value
-        axes = axes_bc.value
+        arts, axes = arts_bc.value, axes_bc.value
         for b in batches:
             names = b.schema.names
-            flat, offs = _list_col_np(b, "tokens")
-            srcs = b.column(names.index("source")).to_pylist()
-            vers = b.column(names.index(version_col)).to_pylist()
-            n = b.num_rows
-            features: list = [None] * n
+            vers = b.column(names.index("artifact_version"))
+            features: list = [None] * b.num_rows
             by_ver: dict[int, list[int]] = {}
-            for i, v in enumerate(vers):
+            for i, v in enumerate(vers.to_pylist()):
                 if v is not None:
                     by_ver.setdefault(int(v), []).append(i)
             for ver, idxs in by_ver.items():
                 art = arts.get(ver)
                 if art is None:
                     continue
-                bands = _bands_for(art)
-                rows = np.empty((len(idxs), art.mz_axis.size),
-                                dtype=np.float32)
-                for j, i in enumerate(idxs):
-                    toks = flat[offs[i]:offs[i + 1]].astype(float)
-                    ax = axes.get(srcs[i])
-                    if ax is None:
-                        raise ValueError(
-                            f"no m/z axis artifact for source {srcs[i]!r}")
-                    x = axis_k.resample_row(art.mz_axis, ax, toks)
-                    x = baseline_k.remove_baseline(art.mz_axis, x, bw, bmin,
-                                                   binc)
-                    x = alignment.pafft(x, art.pafft_reference, art.mz_axis,
-                                        seg, lim)
-                    rows[j] = x * (art.tic_reference_tic / float(x.sum()))
-                feats = convolve_k.featurize_batch(rows, bands)
+                rows = _tic_scaled(
+                    _aligned(_spectra(b, axes, art.mz_axis, config, idxs),
+                             art.pafft_reference, art.mz_axis, config),
+                    art.tic_reference_tic)
+                feats = convolve_k.featurize_batch(rows, _bands_for(art))
                 merged = merge_k.apply_merging(feats, art.merge_starts,
                                                art.merge_lengths)
                 for i, vec in zip(idxs, merged):
                     features[i] = vec
             yield pa.RecordBatch.from_arrays(
-                [b.column(names.index("doc_id")),
-                 b.column(names.index("source")),
-                 b.column(names.index("ts")),
-                 b.column(names.index(version_col)).cast(pa.int64()),
-                 pa.array(features, type=pa.list_(pa.float32()))],
-                names=["doc_id", "source", "ts", version_col, "features"])
+                [b.column(names.index(c)) for c in ("doc_id", "source", "ts")]
+                + [vers.cast(pa.int64()),
+                   pa.array(features, type=pa.list_(pa.float32()))],
+                names=["doc_id", "source", "ts", "artifact_version",
+                       "features"])
 
     return df.mapInArrow(
-        run, schema=f"doc_id string, source string, ts long, "
-                    f"{version_col} long, features array<float>")
+        run, schema="doc_id string, source string, ts long, "
+                    "artifact_version long, features array<float>")

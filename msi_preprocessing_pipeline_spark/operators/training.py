@@ -9,27 +9,27 @@ every stage consumes the artifacts fitted strictly before it).
 
 Scale shapes, pick per workload:
 * :func:`build_training_set` — one as-of join per feature (strategy
-  ``shuffle`` / ``broadcast`` / ``merge``, all result-identical);
+  ``shuffle`` / ``broadcast``, result-identical);
 * :func:`build_training_set_fused` — every backward feature in ONE
   union + one fused window (1 shuffle total vs F);
 * :func:`pit_window_agg` / :func:`pit_window_agg_multi` — trailing
   (feature) or leading (label) interval aggregates at each observation,
   any number of horizons/sources/aggregates in one Window node, hot
   entities split by time bucket with boundary carry.
-No Python on any hot path except the opt-in ``merge`` strategy;
-composition is purely lazy, so Catalyst sees the whole multi-join program
-and can reorder scans/prune columns across stages.
+No Python on any hot path; composition is purely lazy, so Catalyst sees
+the whole multi-join program and can reorder scans/prune columns across
+stages.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .asof import asof_join, asof_join_broadcast, asof_join_merge
+from .asof import asof_join, asof_join_broadcast
 from ..functions.util import as_list as _as_list
 
 
@@ -48,10 +48,8 @@ class FeatureSpec:
     entity key, skew-saltable via ``salt_buckets``), ``'broadcast'``
     (per-key timeline arrays broadcast onto the spine — ZERO shuffle on the
     spine; the right plan when the feature table is dimension-sized, e.g.
-    model/artifact timelines, and what keeps a 10^12-row spine map-only),
-    or ``'merge'`` (cogrouped ``pd.merge_asof`` per entity — prefer when
-    the feature table is very wide, since pandas merges columns without a
-    union schema). All three are result-identical (tested).
+    model/artifact timelines, and what keeps a 10^12-row spine map-only).
+    Both are result-identical (tested).
     """
 
     df: DataFrame
@@ -64,7 +62,6 @@ class FeatureSpec:
     salt_buckets: int | None = None
     matched_ts: bool = True
     strategy: str = "shuffle"
-    extra: dict = field(default_factory=dict)
 
 
 def build_training_set(spine: DataFrame, on: Sequence[str] | str,
@@ -86,20 +83,17 @@ def build_training_set(spine: DataFrame, on: Sequence[str] | str,
             renamed = renamed.withColumnRenamed(c, f"{spec.prefix}{c}")
         keys = spec.on if spec.on is not None else on
         out_cols = [f"{spec.prefix}{c}" for c in cols]
-        if spec.strategy in ("broadcast", "merge"):
-            # these strategies carry the matched timestamp as a regular
+        if spec.strategy == "broadcast":
+            # the broadcast plan carries the matched timestamp as a regular
             # value column duplicated from the feature's ts
             if spec.matched_ts:
                 renamed = renamed.withColumn(f"{spec.prefix}ts",
                                              F.col(spec.ts_col))
                 out_cols = out_cols + [f"{spec.prefix}ts"]
-            join_fn = (asof_join_broadcast if spec.strategy == "broadcast"
-                       else asof_join_merge)
-            out = join_fn(
+            out = asof_join_broadcast(
                 out, renamed, on=keys, left_ts=spine_ts,
                 right_ts=spec.ts_col, value_cols=out_cols,
-                direction=spec.direction, tolerance=spec.tolerance,
-                **spec.extra)
+                direction=spec.direction, tolerance=spec.tolerance)
         elif spec.strategy == "shuffle":
             out = asof_join(
                 out, renamed, on=keys, left_ts=spine_ts,
@@ -107,11 +101,10 @@ def build_training_set(spine: DataFrame, on: Sequence[str] | str,
                 direction=spec.direction, tolerance=spec.tolerance,
                 salt_buckets=spec.salt_buckets,
                 matched_ts_col=(f"{spec.prefix}ts" if spec.matched_ts
-                                else None),
-                **spec.extra)
+                                else None))
         else:
             raise ValueError(
-                f"strategy must be shuffle|broadcast|merge, "
+                f"strategy must be shuffle|broadcast, "
                 f"got {spec.strategy!r}")
     return out
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..kernels import axis as axis_k, gmm as gmm_k, merge as merge_k
 from ..kernels import outlier as outlier_k
+from .. import oracle
 from ..oracle import PipelineConfig, filter_components
 from ..operators import spectrum as sp
 from ..operators.asof import asof_join_broadcast
@@ -66,7 +67,10 @@ class FeaturePipeline:
 
         The UDF stages cost ~3 ms/row (baseline + PaFFT), so partitioning
         tracks cores, not bytes: 4× cores measured best (wave balancing)
-        while keeping tasks >100 ms."""
+        while keeping tasks >100 ms. A stream is returned unchanged (its
+        partitioning is per micro-batch and ``df.rdd`` cannot run on it)."""
+        if df.isStreaming:
+            return df
         cores = self.spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < 2 * cores:
             return df.repartition(4 * cores)
@@ -76,14 +80,7 @@ class FeaturePipeline:
 
     def common_axis(self) -> np.ndarray:
         """Stage 1 (driver-side: axes are tiny per-source artifacts)."""
-        axes = self.source_axes
-        lo = max(float(np.min(a)) for a in axes.values())
-        hi = min(float(np.max(a)) for a in axes.values())
-        n_ticks = min(int(np.sum((a >= lo) & (a <= hi)))
-                      for a in axes.values())
-        first = sorted(axes)[0]
-        return axis_k.estimate_new_axis(axes[first], n_ticks,
-                                        np.array([lo, hi]))
+        return oracle.common_axis(self.source_axes)
 
     # the stages and artifacts of _fit in DAG order — targeted recompute
     # (CLI ``recompute --stage X``) invalidates X and everything after it
@@ -146,8 +143,7 @@ class FeaturePipeline:
         # normalize is fused into the gmm-reference partials: no normalized
         # stage, no extra Arrow round trip.
         stage_b = runner.run_stage(
-            "pafft", lambda: sp.pafft_stage(masked, pafft_ref, mz_axis, cfg,
-                                            with_sum=True))
+            "pafft", lambda: sp.pafft_stage(masked, pafft_ref, mz_axis, cfg))
         ref_tic = float(runner.run_artifact(
             "tic_reference_tic",
             lambda: sp.masked_weighted_mean_scalar(stage_b, "aligned_sum")))

@@ -44,8 +44,7 @@ def build_session(app_name: str = "msi-spark", parallelism: int | None = None,
         # Split-by-bytes also lets the serve path stay SHUFFLE-FREE (scan →
         # broadcast as-of join → mapInArrow) instead of round-robin
         # repartitioning the full token payload.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
+        .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "2m")
     )
     for k, v in (extra_conf or {}).items():

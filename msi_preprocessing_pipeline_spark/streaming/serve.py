@@ -3,9 +3,10 @@
 The serving hot path (as-of version attach + fused featurization UDF) is
 stateless given a fitted artifact set, so it runs unchanged as a Structured
 Streaming transformation: ``readStream`` over the sequence table directory →
-broadcast as-of attach → ``mapInArrow`` → ``writeStream``. Late/replayed
-rows are handled by the same zero-leakage as-of semantics (a row only ever
-sees artifact versions at-or-before its ts).
+:meth:`FeaturePipeline.transform` (broadcast as-of attach → ``mapInArrow``)
+→ ``writeStream``. Late/replayed rows are handled by the same zero-leakage
+as-of semantics (a row only ever sees artifact versions at-or-before its
+ts).
 """
 
 from __future__ import annotations
@@ -13,8 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import spectrum as sp
-from ..operators.asof import asof_join_broadcast
 from ..oracle import PipelineConfig
+from ..plans.pipeline import FeaturePipeline
 
 
 def streaming_features(spark: SparkSession, input_dir: str,
@@ -27,19 +28,8 @@ def streaming_features(spark: SparkSession, input_dir: str,
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(input_dir))
-    spine_rows = [
-        {"source": s, "valid_from_ts": a.valid_from_ts,
-         "artifact_version": a.version}
-        for a in artifacts for s in sorted(source_axes)
-    ]
-    spine = spark.createDataFrame(
-        spine_rows, schema="source string, valid_from_ts long, "
-                           "artifact_version long")
-    joined = asof_join_broadcast(stream, spine, on="source", left_ts="ts",
-                                 right_ts="valid_from_ts",
-                                 value_cols=["artifact_version"])
-    versions = {a.version: a for a in artifacts}
-    return sp.serve_features(joined, versions, source_axes, config)
+    return FeaturePipeline(spark, source_axes, config).transform(stream,
+                                                                 artifacts)
 
 
 def run_stream_to_parquet(features: DataFrame, out_dir: str,

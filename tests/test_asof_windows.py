@@ -122,18 +122,6 @@ def test_asof_broadcast_matches_window_variant(events, artifacts):
         pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
-def test_asof_merge_variant_matches_pandas(events, artifacts):
-    left, left_pdf = events
-    right, right_pdf = artifacts
-    got = (asof.asof_join_merge(left, right, on="entity", left_ts="ts",
-                                right_ts="valid_from",
-                                value_cols=["version", "payload"])
-           .toPandas().sort_values("row_id").reset_index(drop=True))
-    exp = _expected_asof(left_pdf, right_pdf)
-    pd.testing.assert_series_equal(got["payload"], exp["payload"],
-                                   check_names=False)
-
-
 def test_asof_no_leakage(events, artifacts):
     # a left row must never see an artifact with valid_from > its ts
     left, _ = events

@@ -5,9 +5,12 @@ per-row merged GMM feature vectors numpy-allclose at every entity×timestamp,
 and no row's features change when future rows are removed.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from msi_preprocessing_pipeline_spark import oracle
 from msi_preprocessing_pipeline_spark.kernels import synth
@@ -156,3 +159,41 @@ def test_rows_before_first_checkpoint_get_null_features(table, axes):
     assert len(early) > 0
     assert early["features"].isna().all()
     assert early["artifact_version"].isna().all()
+
+
+def test_short_token_row_error_names_the_row(table, axes):
+    """A row whose token count is not its source axis length fails the fit
+    and the serve with an error naming its doc_id and both lengths."""
+    pipe = FeaturePipeline(table.sparkSession, axes, CFG)
+    bad_id, bad_src = table.orderBy(F.desc("doc_id")).select(
+        "doc_id", "source").first()
+    short = table.withColumn(
+        "tokens", F.when(F.col("doc_id") == bad_id, F.slice("tokens", 1, 10))
+        .otherwise(F.col("tokens")))
+    reason = (rf"doc_id={re.escape(repr(bad_id))} "
+              rf"source={re.escape(repr(bad_src))}: 10 tokens != "
+              rf"source axis length {axes[bad_src].size}")
+    with pytest.raises(Exception, match=reason):
+        pipe.fit(short)
+    art = pipe.fit(table)
+    with pytest.raises(Exception, match=reason):
+        pipe.transform(short, [art]).collect()
+
+
+@pytest.mark.parametrize("width", [7, 512, 1033, 4096])
+def test_tic_scaled_is_the_per_row_rescale(width):
+    """The vectorized TIC rescale is bitwise the per-row loop it replaced
+    (float32 row sum, float64 divide, float32 multiply)."""
+    rng = np.random.default_rng(width)
+    mat = (rng.random((9, width)) * 1e3).astype(np.float32)
+    tic = 12345.6789
+    loop = np.stack([r * (tic / float(r.sum())) for r in mat])
+    assert loop.dtype == np.float32
+    np.testing.assert_array_equal(sp._tic_scaled(mat, tic), loop)
+
+
+def test_tic_scaled_rejects_zero_sum_row():
+    mat = np.ones((3, 8), dtype=np.float32)
+    mat[1] = 0.0
+    with pytest.raises(FloatingPointError):
+        sp._tic_scaled(mat, 100.0)
