@@ -16,13 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .special import interp1d_cubic_or_linear, pearsonr_p
-
-
-def _has_trend(x: np.ndarray, y: np.ndarray, significance: float = 0.05) -> bool:
-    with np.errstate(all="ignore"):
-        _, p = pearsonr_p(x, y)
-    return bool(p < significance)
+from .special import interp1d_cubic_or_linear
 
 
 _R2_CRIT_CACHE: dict[tuple[int, float], float] = {}

@@ -68,11 +68,3 @@ def featurize_batch(spectra: np.ndarray, bands: ComponentBands) -> np.ndarray:
         if last > first:
             out[:, i] = spectra[:, first:last] @ bands.profiles[i]
     return out
-
-
-def featurize_rows_reference_order(spectra: np.ndarray, mzs: np.ndarray,
-                                   mu: np.ndarray, sig: np.ndarray,
-                                   w: np.ndarray) -> np.ndarray:
-    """Oracle variant: builds bands inline (component loop outer, like the
-    reference's numba kernel) — used only by tests."""
-    return featurize_batch(spectra, build_bands(mzs, mu, sig, w))

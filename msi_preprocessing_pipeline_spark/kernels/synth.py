@@ -91,7 +91,3 @@ def make_table(sources: dict[str, int], base_channels: int = 2048):
             toks = row_tokens(source, doc_id, base_channels)
             rows.append((doc_id, toks, np.int32(toks.size), source))
     return rows
-
-
-def doc_ids_for(source: str, n_rows: int) -> list[str]:
-    return [f"{source}-{i:08d}" for i in range(n_rows)]

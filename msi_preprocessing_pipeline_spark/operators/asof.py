@@ -148,9 +148,9 @@ def asof_join_broadcast(left: DataFrame, right: DataFrame,
     binary-search-equivalent pick the as-of element with JVM array functions.
 
     ZERO shuffle on the left side (the broadcast join is map-side) — the
-    correct plan when the right side is an artifact/dimension timeline; skew
-    on the left is irrelevant because nothing repartitions. Falls back to
-    :func:`asof_join` for large right sides.
+    correct plan when the right side is a small dimension timeline; skew on
+    the left is irrelevant because nothing repartitions. A large right side
+    needs :func:`asof_join` instead.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction}")

@@ -20,6 +20,7 @@ UDF over numpy arrays (the reference's ``Pool.map(chunksize=800)`` analog is
 
 from __future__ import annotations
 
+from bisect import bisect_right
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
@@ -171,27 +172,6 @@ def _tic_scaled(mat: np.ndarray, tic: float) -> np.ndarray:
     with np.errstate(divide="raise", invalid="raise"):
         factors = tic / mat.sum(axis=1).astype(np.float64)
     return mat * factors.astype(np.float32)[:, None]
-
-
-_BANDS_CACHE: dict[tuple, "convolve_k.ComponentBands"] = {}
-
-
-def _bands_for(art: "ArtifactSet") -> "convolve_k.ComponentBands":
-    """Per-worker-process cache of the banded Gaussian design.
-
-    ``build_bands`` runs per (axis, model); without this cache every TASK
-    paid it (reused Python workers run many tasks), a fixed cost that grows
-    with task count and erodes scaling efficiency at high parallelism."""
-    key = (art.version, art.valid_from_ts, art.gmm_mu.size,
-           hash(art.gmm_mu.tobytes()), hash(art.mz_axis.tobytes()))
-    bands = _BANDS_CACHE.get(key)
-    if bands is None:
-        bands = convolve_k.build_bands(art.mz_axis, art.gmm_mu, art.gmm_sig,
-                                       art.gmm_w)
-        if len(_BANDS_CACHE) > 16:
-            _BANDS_CACHE.clear()
-        _BANDS_CACHE[key] = bands
-    return bands
 
 
 ARTIFACT_SCHEMA = (
@@ -496,47 +476,55 @@ def export_csv(df: DataFrame, vec_col: str, path: str,
      .write.mode("overwrite").text(path))
 
 
-def serve_features(df: DataFrame, artifact_versions: dict[int, ArtifactSet],
+def serve_features(df: DataFrame, artifacts: Sequence[ArtifactSet],
                    source_axes: dict[str, np.ndarray],
                    config: PipelineConfig) -> DataFrame:
-    """THE hot path: fused serving UDF. Rows arrive already as-of-joined to an
-    ``artifact_version``; one ``mapInArrow`` pass runs, per version,
-    :func:`_spectra` → :func:`_aligned` → :func:`_tic_scaled` → convolve →
-    merge against the broadcast artifact set of that version. Rows with no
-    artifact version (ts before the first checkpoint) get null features —
-    never a leaked artifact.
+    """THE hot path: the whole serve step in one ``mapInArrow`` pass.
+
+    The artifact timeline — ``artifacts`` sorted by
+    ``(valid_from_ts, version)``, each with its banded Gaussian design built
+    once here on the driver — is broadcast with the source axes; no join
+    attaches versions to rows. Per Arrow batch, each row's version is the
+    last one with ``valid_from_ts <= ts`` (ties go to the greater version);
+    its rows run :func:`_spectra` → :func:`_aligned` → :func:`_tic_scaled` →
+    convolve → merge against that version. A row with null ``ts`` or a
+    ``ts`` before the first version gets null ``artifact_version`` and null
+    features — never a leaked artifact.
     """
     spark = df.sparkSession
-    arts_bc = spark.sparkContext.broadcast(artifact_versions)
+    timeline = sorted(artifacts, key=lambda a: (a.valid_from_ts, a.version))
+    timeline_bc = spark.sparkContext.broadcast([
+        (a, convolve_k.build_bands(a.mz_axis, a.gmm_mu, a.gmm_sig, a.gmm_w))
+        for a in timeline])
     axes_bc = spark.sparkContext.broadcast(
         {s: np.asarray(a, dtype=float) for s, a in source_axes.items()})
+    valid_from = [a.valid_from_ts for a in timeline]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        arts, axes = arts_bc.value, axes_bc.value
+        pairs, axes = timeline_bc.value, axes_bc.value
         for b in batches:
             names = b.schema.names
-            vers = b.column(names.index("artifact_version"))
+            by_pos: dict[int, list[int]] = {}
+            for i, ts in enumerate(b.column(names.index("ts")).to_pylist()):
+                pos = -1 if ts is None else bisect_right(valid_from, ts) - 1
+                if pos >= 0:
+                    by_pos.setdefault(pos, []).append(i)
+            versions: list = [None] * b.num_rows
             features: list = [None] * b.num_rows
-            by_ver: dict[int, list[int]] = {}
-            for i, v in enumerate(vers.to_pylist()):
-                if v is not None:
-                    by_ver.setdefault(int(v), []).append(i)
-            for ver, idxs in by_ver.items():
-                art = arts.get(ver)
-                if art is None:
-                    continue
+            for pos, idxs in by_pos.items():
+                art, bands = pairs[pos]
                 rows = _tic_scaled(
                     _aligned(_spectra(b, axes, art.mz_axis, config, idxs),
                              art.pafft_reference, art.mz_axis, config),
                     art.tic_reference_tic)
-                feats = convolve_k.featurize_batch(rows, _bands_for(art))
-                merged = merge_k.apply_merging(feats, art.merge_starts,
-                                               art.merge_lengths)
+                merged = merge_k.apply_merging(
+                    convolve_k.featurize_batch(rows, bands),
+                    art.merge_starts, art.merge_lengths)
                 for i, vec in zip(idxs, merged):
-                    features[i] = vec
+                    versions[i], features[i] = art.version, vec
             yield pa.RecordBatch.from_arrays(
                 [b.column(names.index(c)) for c in ("doc_id", "source", "ts")]
-                + [vers.cast(pa.int64()),
+                + [pa.array(versions, type=pa.int64()),
                    pa.array(features, type=pa.list_(pa.float32()))],
                 names=["doc_id", "source", "ts", "artifact_version",
                        "features"])

@@ -189,16 +189,6 @@ THRESHOLD_DIAGNOSTICS_SCHEMA = (
     "n_candidates int, n_kept int, chosen boolean")
 
 
-def threshold_diagnostics_rows(model: gmm.GmmModel,
-                               config: PipelineConfig) -> list[dict]:
-    """S9 substitute: the filter-threshold decomposition as a metrics table
-    (one row per candidate threshold per stage) instead of the reference's
-    HTML histogram plots — queryable, join-able, and testable."""
-    diags: list[dict] = []
-    filter_components(model, config, diagnostics=diags)
-    return diags
-
-
 def fit_artifacts(rows: Sequence[tuple],
                   source_axes: dict[str, np.ndarray],
                   config: PipelineConfig) -> PipelineArtifacts:
@@ -291,7 +281,7 @@ def transform_rows(rows: Sequence[tuple],
                    config: PipelineConfig) -> np.ndarray:
     """Apply fitted artifacts to rows → merged feature matrix (row order =
     input order). This is the 'serving' pass — in the Spark engine it is the
-    as-of-joined hot path."""
+    serve UDF (``operators.spectrum.serve_features``)."""
     bands = convolve.build_bands(art.mz_axis, art.gmm_mu, art.gmm_sig,
                                  art.gmm_w)
     out = []

@@ -2,14 +2,13 @@
 
 ``fit`` runs the reference's artifact-building stages (the Luigi DAG's
 aggregate spine, SURVEY.md §3.1) as DataFrame jobs; ``transform`` is the hot
-serving path: a point-in-time **as-of join** of rows against the versioned
-artifact spine followed by ONE fused vectorized UDF pass
-(``operators.spectrum.serve_features``).
+serving path: ONE fused vectorized UDF pass
+(``operators.spectrum.serve_features``) that picks each row's artifact
+version from the broadcast timeline and featurizes the row under it.
 
 Point-in-time mode (``fit_pit``) fits one artifact version per checkpoint
-from the rows at-or-before it; the backward as-of join guarantees zero
-temporal leakage (a row only ever sees an artifact version with
-``valid_from_ts <= ts``).
+from the rows at-or-before it; serving guarantees zero temporal leakage (a
+row only ever sees an artifact version with ``valid_from_ts <= ts``).
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from ..kernels import outlier as outlier_k
 from .. import oracle
 from ..oracle import PipelineConfig, filter_components
 from ..operators import spectrum as sp
-from ..operators.asof import asof_join_broadcast
 
 
 class _PersistRunner:
@@ -202,39 +200,22 @@ class FeaturePipeline:
 
     # ---------------------------------------------------------- transform
 
-    def artifact_spine(self, artifacts: list[sp.ArtifactSet]) -> DataFrame:
-        """Entity-keyed artifact timeline for the as-of join: one row per
-        (source, version). Tiny — broadcast side of the join."""
-        rows = [
-            {"source": s, "valid_from_ts": a.valid_from_ts,
-             "artifact_version": a.version}
-            for a in artifacts for s in sorted(self.source_axes)
-        ]
-        return self.spark.createDataFrame(
-            rows, schema="source string, valid_from_ts long, "
-                         "artifact_version long")
-
     def transform(self, df: DataFrame,
                   artifacts: list[sp.ArtifactSet]) -> DataFrame:
-        """Serving: as-of join rows to their artifact version, then the fused
-        featurization UDF. Rows before the first version yield null features.
+        """Serving: each row featurized under the latest of ``artifacts``
+        with ``valid_from_ts <= ts``, in one fused UDF pass; rows with null
+        ``ts`` or before the first version yield null features.
 
-        The artifact spine is a tiny per-entity timeline, so the as-of join
-        is a broadcast join + array pick: ZERO shuffle on the row side and
-        inherently skew-immune. The serve UDF is CPU-bound per row, so the
-        input goes through :meth:`_maybe_rebalance`: a scan that already
-        yields enough splits (small ``maxPartitionBytes`` — see
-        ``session.py``) stays SHUFFLE-FREE, an under-partitioned one (e.g.
-        one fat file) gets a round-robin repartition.
+        The artifact timeline travels with the UDF as one broadcast, so the
+        row side has no join and no shuffle and is inherently skew-immune.
+        The serve UDF is CPU-bound per row, so the input goes through
+        :meth:`_maybe_rebalance`: a scan that already yields enough splits
+        (small ``maxPartitionBytes`` — see ``session.py``) stays
+        SHUFFLE-FREE, an under-partitioned one (e.g. one fat file) gets a
+        round-robin repartition.
         """
-        joined = asof_join_broadcast(self._maybe_rebalance(df),
-                                     self.artifact_spine(artifacts),
-                                     on="source", left_ts="ts",
-                                     right_ts="valid_from_ts",
-                                     value_cols=["artifact_version"])
-        versions = {a.version: a for a in artifacts}
-        return sp.serve_features(joined, versions, self.source_axes,
-                                 self.config)
+        return sp.serve_features(self._maybe_rebalance(df), artifacts,
+                                 self.source_axes, self.config)
 
     def fit_transform(self, df: DataFrame) -> DataFrame:
         """The reference's batch semantics: fit on everything, apply to

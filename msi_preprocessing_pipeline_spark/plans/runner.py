@@ -60,9 +60,6 @@ class StageRunner:
     def _artifact_path(self, name: str) -> str:
         return os.path.join(self.work_dir, f"artifact_{name}.json")
 
-    def artifact_done(self, name: str) -> bool:
-        return os.path.exists(self._artifact_path(name))
-
     def run_artifact(self, name: str, build) -> dict:
         """JSON-serializable artifact checkpoint (atomic rename commit)."""
         path = self._artifact_path(name)

@@ -1,12 +1,11 @@
 """Streaming feature serving.
 
-The serving hot path (as-of version attach + fused featurization UDF) is
-stateless given a fitted artifact set, so it runs unchanged as a Structured
-Streaming transformation: ``readStream`` over the sequence table directory →
-:meth:`FeaturePipeline.transform` (broadcast as-of attach → ``mapInArrow``)
-→ ``writeStream``. Late/replayed rows are handled by the same zero-leakage
-as-of semantics (a row only ever sees artifact versions at-or-before its
-ts).
+The serving hot path (per-row version pick + fused featurization, one UDF)
+is stateless given a fitted artifact set, so it runs unchanged as a
+Structured Streaming transformation: ``readStream`` over the sequence table
+directory → :meth:`FeaturePipeline.transform` (one ``mapInArrow``) →
+``writeStream``. Late/replayed rows get the same zero-leakage semantics (a
+row only ever sees artifact versions at-or-before its ts).
 """
 
 from __future__ import annotations

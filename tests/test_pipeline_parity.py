@@ -180,6 +180,66 @@ def test_short_token_row_error_names_the_row(table, axes):
         pipe.transform(short, [art]).collect()
 
 
+def test_unknown_source_row_error_names_the_row(table, axes):
+    """A row whose source has no m/z axis fails the serve with an error
+    naming its doc_id — never silent null features."""
+    pipe = FeaturePipeline(table.sparkSession, axes, CFG)
+    bad_id = table.orderBy(F.desc("doc_id")).select("doc_id").first()[0]
+    unknown = table.withColumn(
+        "source", F.when(F.col("doc_id") == bad_id, F.lit("zzz"))
+        .otherwise(F.col("source")))
+    art = pipe.fit(table)
+    with pytest.raises(Exception, match=(
+            rf"doc_id={re.escape(repr(bad_id))} source='zzz': "
+            "no m/z axis artifact for the source")):
+        pipe.transform(unknown, [art]).collect()
+
+
+def test_serve_version_pick(spark):
+    """Each row is served under the greatest (valid_from_ts, version) with
+    valid_from_ts <= ts, whatever order the versions are passed in; a null
+    ts or a ts before the first version gets no version and no features."""
+    sources = {"src-000": 4, "src-001": 3}
+    axes = synthetic.source_axes_for(sources, 512)
+    pipe = FeaturePipeline(spark, axes, CFG)
+    ax = pipe.common_axis()
+
+    def art(version, valid_from_ts, tic):
+        return sp.ArtifactSet(
+            version=version, valid_from_ts=valid_from_ts, mz_axis=ax,
+            b1=float("-inf"), b2=float("inf"),
+            pafft_reference=np.ones(ax.size), tic_reference_tic=tic,
+            gmm_mu=np.array([ax[ax.size // 3], ax[2 * ax.size // 3]]),
+            gmm_sig=np.array([2.0, 3.0]), gmm_w=np.array([0.5, 0.5]),
+            merge_starts=np.array([0, 1]), merge_lengths=np.array([1, 1]))
+
+    arts = [art(3, 200, 3000.0), art(1, 100, 1000.0), art(2, 200, 2000.0)]
+    ts = [None, 50, 100, 150, 199, 200, 10**6]
+    rows = [(doc_id, toks.tolist(), int(n), src, t)
+            for (doc_id, toks, n, src), t in
+            zip(synth.make_table(sources, base_channels=512), ts)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string, "
+              "ts long")
+
+    def picked(t):
+        fits = [(a.valid_from_ts, a.version) for a in arts
+                if t is not None and a.valid_from_ts <= t]
+        return max(fits)[1] if fits else None
+
+    got = {r["doc_id"]: r for r in pipe.transform(df, arts).collect()}
+    assert [got[r[0]]["artifact_version"] for r in rows] == \
+        [picked(t) for t in ts] == [None, None, 1, 1, 1, 3, 3]
+    for version in (1, 3):
+        alone = {r["doc_id"]: r["features"] for r in pipe.transform(
+            df, [a for a in arts if a.version == version]).collect()}
+        for doc_id, r in got.items():
+            if r["artifact_version"] == version:
+                assert r["features"] == alone[doc_id] != [0.0, 0.0]
+    assert all(r["features"] is None for r in got.values()
+               if r["artifact_version"] is None)
+
+
 @pytest.mark.parametrize("width", [7, 512, 1033, 4096])
 def test_tic_scaled_is_the_per_row_rescale(width):
     """The vectorized TIC rescale is bitwise the per-row loop it replaced
