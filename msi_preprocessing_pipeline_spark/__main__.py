@@ -5,8 +5,8 @@ driver. Subcommands:
 
 * ``fit``        — fit the artifact chain (checkpoint-resumable) from a
                    sequence parquet table and write the artifact set.
-* ``transform``  — as-of join + fused featurization against fitted artifacts;
-                   writes the feature table.
+* ``transform``  — featurize each row under the artifact version valid at
+                   its ts (one map pass); writes the feature table.
 * ``pit``        — point-in-time end-to-end: fit one artifact version per
                    checkpoint, serve all rows, write features.
 * ``bench-serve``— time the serving hot path (for spark-submit-level

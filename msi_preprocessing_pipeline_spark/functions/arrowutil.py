@@ -1,4 +1,4 @@
-"""Arrow-native helpers for embedding operators.
+"""Arrow-native helpers for ``mapInArrow`` operators (embeddings, spectra).
 
 ``mapInArrow`` UDFs receive raw RecordBatches; a uniform-length
 ``array<float>`` column is one contiguous values buffer + offsets, so the

@@ -180,19 +180,6 @@ def _apply_shift(segment: np.ndarray, shift: int) -> np.ndarray:
     return np.hstack((segment[-shift:], pad))
 
 
-def _next_chunk(counts: np.ndarray, reference: np.ndarray, start: int,
-                nominal_size: int):
-    """Slice the next alignment chunk; the right boundary is refined by the
-    co-minimum cut-point search inside the look-ahead window."""
-    probe_end = start + max(nominal_size * 2, 1)
-    if probe_end >= counts.size:
-        return counts[start:], reference[start:]
-    probe = counts[start + nominal_size:probe_end]
-    probe_ref = reference[start + nominal_size:probe_end]
-    end = start + _cut_point(probe, probe_ref) + nominal_size + 1
-    return counts[start:end], reference[start:end]
-
-
 def pafft(counts: np.ndarray, reference_counts: np.ndarray, mzs: np.ndarray,
           minimum_segment: float = 0.7, shift_limit: float = 0.1) -> np.ndarray:
     """Align ``counts`` to ``reference_counts`` over the shared ``mzs`` axis.
@@ -226,10 +213,11 @@ def pafft(counts: np.ndarray, reference_counts: np.ndarray, mzs: np.ndarray,
     start = 0
     while start < n:
         nominal_size = nominal_sizes[start]
-        # inline of _next_chunk's common path: with typical ~14-channel
-        # nominal segments the probe window is < 30 channels, so the
-        # cut-point search always hits its take<=1 branch (= probe argmin)
-        # — skip two function calls and the ref-side slice per segment
+        # next chunk: the right boundary is the co-minimum cut point inside
+        # the look-ahead window. With typical ~14-channel nominal segments
+        # the window is < 30 channels and the cut point is the probe argmin
+        # (_cut_point's take<=1 branch), computed here without the call and
+        # the ref-side slice
         probe_end = start + max(nominal_size * 2, 1)
         if probe_end >= n:
             segment = counts[start:]

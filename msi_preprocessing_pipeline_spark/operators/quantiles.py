@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..kernels.stats import interp_quantile_from_sorted, matlab_positions
+from .layout import global_rank
 
 
 COLLECT_THRESHOLD = 10_000_000  # scalars; ~80 MB on the driver
@@ -44,48 +45,19 @@ def exact_quantiles(df: DataFrame, col: str, qs,
         # object per value (~10× wall on 10^6 scalars)
         vals = values.toPandas()[values.columns[0]].to_numpy(dtype=float)
         return np.percentile(vals, 100.0 * qs)
-    # Catalyst-native global ranks (no RDD scan, AQE stays on): range-sort,
-    # then rank = per-partition offset + row_number within the sorted
-    # partition. The offsets job is a map-side-combined count per partition
-    # id (tiny); the window's hash exchange on the partition id moves each
-    # range-partition as one balanced group.
-    sorted_vals = (values.sort(col)
-                   .select(F.col(col).alias("__v"),
-                           F.spark_partition_id().alias("__pid"))
-                   .persist())
-    try:
-        wanted: set[int] = set()
-        plans = []
-        for q in qs:
-            lo, hi, frac = interp_quantile_from_sorted(n, float(q))
-            plans.append((lo, hi, frac))
-            wanted.add(lo)
-            wanted.add(hi)
-        counts = sorted_vals.groupBy("__pid").count().collect()
-        offsets = {}
-        acc = 0
-        for row in sorted(counts, key=lambda r: r["__pid"]):
-            offsets[row["__pid"]] = acc
-            acc += row["count"]
-        spark = df.sparkSession
-        off_df = F.broadcast(spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()],
-            schema="__pid int, __off long"))
-        w = Window.partitionBy("__pid").orderBy("__v")
-        ranked = (sorted_vals.join(off_df, "__pid")
-                  .withColumn("__gr",
-                              F.col("__off") + F.row_number().over(w) - 1))
-        fetched = {
-            int(r["__gr"]): float(r["__v"])
-            for r in ranked.where(
-                F.col("__gr").isin(*[int(x) for x in wanted])).collect()
-        }
-        return np.array([
-            fetched[lo] + frac * (fetched[hi] - fetched[lo])
-            for lo, hi, frac in plans
-        ])
-    finally:
-        sorted_vals.unpersist()
+    # distributed: global ranks, then fetch only the 2·|q| boundary rows
+    ranked = global_rank(values.select(F.col(col).alias("__v")),
+                         [F.col("__v")], "__gr")
+    plans = [interp_quantile_from_sorted(n, float(q)) for q in qs]
+    wanted = {i for lo, hi, _frac in plans for i in (lo, hi)}
+    fetched = {
+        int(r["__gr"]): float(r["__v"])
+        for r in ranked.where(F.col("__gr").isin(*wanted)).collect()
+    }
+    return np.array([
+        fetched[lo] + frac * (fetched[hi] - fetched[lo])
+        for lo, hi, frac in plans
+    ])
 
 
 def matlab_quantiles(df: DataFrame, col: str, qs) -> np.ndarray:

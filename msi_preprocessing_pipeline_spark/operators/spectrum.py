@@ -30,6 +30,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.arrowutil import list_col_matrix
 from ..kernels import alignment, axis as axis_k, baseline as baseline_k
 from ..kernels import convolve as convolve_k, merge as merge_k
 from ..kernels import outlier as outlier_k
@@ -109,15 +110,6 @@ def _uniform_list_array(mat: np.ndarray) -> "pa.ListArray":
     return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel()))
 
 
-def _matrix(batch: "pa.RecordBatch", name: str) -> np.ndarray:
-    """[n, w] numpy view of a list column whose rows all have length w."""
-    flat, offs = _list_col_np(batch, name)
-    n = batch.num_rows
-    width = int(offs[1] - offs[0]) if n else 0
-    assert offs[-1] - offs[0] == n * width, f"ragged {name} column"
-    return flat[offs[0]:offs[-1]].reshape(n, width)
-
-
 # --------------------------------------------------------------------------
 # The per-row spectrum chain. The fit stages and the serve UDF call these and
 # nothing else per row, so serving applies exactly the fit's arithmetic.
@@ -172,14 +164,6 @@ def _tic_scaled(mat: np.ndarray, tic: float) -> np.ndarray:
     with np.errstate(divide="raise", invalid="raise"):
         factors = tic / mat.sum(axis=1).astype(np.float64)
     return mat * factors.astype(np.float32)[:, None]
-
-
-ARTIFACT_SCHEMA = (
-    "version int, valid_from_ts long, mz_axis array<double>, b1 double, "
-    "b2 double, pafft_reference array<double>, tic_reference_tic double, "
-    "gmm_mu array<double>, gmm_sig array<double>, gmm_w array<double>, "
-    "merge_starts array<long>, merge_lengths array<long>"
-)
 
 
 def with_ts(df: DataFrame, config: PipelineConfig | None = None) -> DataFrame:
@@ -308,7 +292,7 @@ def masked_mean_reference(df: DataFrame, vec_col: str,
         acc: dict[str, tuple[np.ndarray, int]] = {}
         for b in batches:
             names = b.schema.names
-            mat = _matrix(b, vec_col)
+            mat = list_col_matrix(b, vec_col, np.float32)
             mask = b.column(names.index(mask_col)) \
                 .to_numpy(zero_copy_only=False).astype(bool)
             srcs = np.asarray(
@@ -389,7 +373,8 @@ def pafft_stage(df: DataFrame, reference: np.ndarray, mz_axis: np.ndarray,
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ref, ax = ref_bc.value, ax_bc.value
         for b in batches:
-            out = _aligned(_matrix(b, "spectrum"), ref, ax, config)
+            mat = list_col_matrix(b, "spectrum", np.float32)
+            out = _aligned(mat, ref, ax, config)
             names = b.schema.names
             yield pa.RecordBatch.from_arrays(
                 [b.column(names.index(c)) for c in passthrough]

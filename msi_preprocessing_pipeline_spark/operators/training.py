@@ -8,14 +8,16 @@ feature source" (reference workflow: pipeline/_preprocessing.py:24-77, where
 every stage consumes the artifacts fitted strictly before it).
 
 Scale shapes, pick per workload:
-* :func:`build_training_set` — one as-of join per feature (strategy
-  ``shuffle`` / ``broadcast``, result-identical);
+* :func:`build_training_set` — every ``shuffle`` feature through
+  :func:`build_training_set_fused`, every ``broadcast`` feature as a
+  map-only broadcast timeline join (result-identical strategies);
 * :func:`build_training_set_fused` — every backward feature in ONE
   union + one fused window (1 shuffle total vs F);
 * :func:`pit_window_agg` / :func:`pit_window_agg_multi` — trailing
   (feature) or leading (label) interval aggregates at each observation,
   any number of horizons/sources/aggregates in one Window node, hot
-  entities split by time bucket with boundary carry.
+  entities split by time bucket with boundary carry (one shared plan,
+  :func:`_interval_agg`).
 No Python on any hot path; composition is purely lazy, so Catalyst sees
 the whole multi-join program and can reorder scans/prune columns across
 stages.
@@ -29,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .asof import asof_join, asof_join_broadcast
+from .asof import asof_join_broadcast
 from ..functions.util import as_list as _as_list
 
 
@@ -37,18 +39,20 @@ from ..functions.util import as_list as _as_list
 class FeatureSpec:
     """One feature source to attach to the spine.
 
-    ``df`` must carry the entity key(s) ``on``, an event-time column
+    ``df`` must carry the spine's entity key(s), an event-time column
     ``ts_col`` and the ``value_cols`` to expose. ``prefix`` namespaces the
     output columns (``<prefix><value_col>``); ``matched_ts`` additionally
     exposes the matched feature timestamp as ``<prefix>ts`` so staleness is
     auditable (and temporal leakage testable: matched ts <= spine ts).
+    ``tolerance`` (ts units) nulls a match older than the bound.
 
     ``strategy`` picks the physical as-of plan per feature table:
-    ``'shuffle'`` (union + window — one exchange of spine+feature on the
-    entity key, skew-saltable via ``salt_buckets``), ``'broadcast'``
-    (per-key timeline arrays broadcast onto the spine — ZERO shuffle on the
-    spine; the right plan when the feature table is dimension-sized, e.g.
-    model/artifact timelines, and what keeps a 10^12-row spine map-only).
+    ``'shuffle'`` (union + window — all shuffle specs share ONE exchange
+    of spine+features on the entity key, :func:`build_training_set_fused`),
+    ``'broadcast'`` (per-key timeline arrays broadcast onto the spine — ZERO
+    shuffle on the spine; the right plan when the feature table is
+    dimension-sized, e.g. model/artifact timelines, what keeps a
+    10^12-row spine map-only, and the plan that runs on a streaming spine).
     Both are result-identical (tested).
     """
 
@@ -56,12 +60,15 @@ class FeatureSpec:
     ts_col: str
     value_cols: Sequence[str]
     prefix: str
-    on: Sequence[str] | str | None = None  # default: the spine's keys
-    direction: str = "backward"
     tolerance: float | int | None = None
-    salt_buckets: int | None = None
     matched_ts: bool = True
     strategy: str = "shuffle"
+
+
+def _feature_columns(spec: FeatureSpec) -> list[str]:
+    """The output columns ``spec`` adds to the spine, in order."""
+    return [f"{spec.prefix}{c}" for c in spec.value_cols] + \
+        ([f"{spec.prefix}ts"] if spec.matched_ts else [])
 
 
 def build_training_set(spine: DataFrame, on: Sequence[str] | str,
@@ -70,43 +77,39 @@ def build_training_set(spine: DataFrame, on: Sequence[str] | str,
     """Attach every :class:`FeatureSpec` to ``spine`` as of ``spine_ts``.
 
     Each feature's columns come out as ``<prefix><col>`` (plus
-    ``<prefix>ts`` when ``matched_ts``), so independently-built feature
-    tables cannot collide. Point-in-time correctness per feature is the
-    as-of contract: for ``direction='backward'`` only feature rows with
+    ``<prefix>ts`` when ``matched_ts``) after the spine's columns, in
+    ``features`` order, so independently-built feature tables cannot
+    collide. All ``strategy='shuffle'`` specs go to
+    :func:`build_training_set_fused` in one call (one exchange however many
+    there are); each ``'broadcast'`` spec is one
+    :func:`asof_join_broadcast` on top. Point-in-time correctness per
+    feature is the backward as-of contract: only feature rows with
     ``feature.ts <= spine.ts`` are visible — zero temporal leakage.
     """
-    out = spine
     for spec in features:
-        cols = list(spec.value_cols)
-        renamed = spec.df
-        for c in cols:
-            renamed = renamed.withColumnRenamed(c, f"{spec.prefix}{c}")
-        keys = spec.on if spec.on is not None else on
-        out_cols = [f"{spec.prefix}{c}" for c in cols]
-        if spec.strategy == "broadcast":
-            # the broadcast plan carries the matched timestamp as a regular
-            # value column duplicated from the feature's ts
-            if spec.matched_ts:
-                renamed = renamed.withColumn(f"{spec.prefix}ts",
-                                             F.col(spec.ts_col))
-                out_cols = out_cols + [f"{spec.prefix}ts"]
-            out = asof_join_broadcast(
-                out, renamed, on=keys, left_ts=spine_ts,
-                right_ts=spec.ts_col, value_cols=out_cols,
-                direction=spec.direction, tolerance=spec.tolerance)
-        elif spec.strategy == "shuffle":
-            out = asof_join(
-                out, renamed, on=keys, left_ts=spine_ts,
-                right_ts=spec.ts_col, value_cols=out_cols,
-                direction=spec.direction, tolerance=spec.tolerance,
-                salt_buckets=spec.salt_buckets,
-                matched_ts_col=(f"{spec.prefix}ts" if spec.matched_ts
-                                else None))
-        else:
+        if spec.strategy not in ("shuffle", "broadcast"):
             raise ValueError(
                 f"strategy must be shuffle|broadcast, "
                 f"got {spec.strategy!r}")
-    return out
+    shuffled = [s for s in features if s.strategy == "shuffle"]
+    out = (build_training_set_fused(spine, on, spine_ts, shuffled)
+           if shuffled else spine)
+    for spec in features:
+        if spec.strategy != "broadcast":
+            continue
+        renamed = spec.df
+        for c in spec.value_cols:
+            renamed = renamed.withColumnRenamed(c, f"{spec.prefix}{c}")
+        # the broadcast plan carries the matched timestamp as a regular
+        # value column duplicated from the feature's ts
+        if spec.matched_ts:
+            renamed = renamed.withColumn(f"{spec.prefix}ts",
+                                         F.col(spec.ts_col))
+        out = asof_join_broadcast(
+            out, renamed, on=on, left_ts=spine_ts, right_ts=spec.ts_col,
+            value_cols=_feature_columns(spec), tolerance=spec.tolerance)
+    return out.select(*spine.columns,
+                      *[c for s in features for c in _feature_columns(s)])
 
 
 def pit_window_agg(spine: DataFrame, events: DataFrame,
@@ -121,6 +124,8 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
     """Trailing-window aggregate features evaluated AT each spine row's
     timestamp: "count/sum/avg of the entity's events in the ``window``
     units before the observation" — the aggregate-at-label-time primitive.
+    Aggregates keep ``value_col``'s own type (a sum over ``long`` is
+    ``long``).
 
     Physical shape — the union trick: spine rows (tagged, value = null) and
     event rows are unioned and sorted once per entity; every aggregate is a
@@ -156,112 +161,41 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
     same zero-peeking-backward symmetry and the bucket carry mirrored into
     the PREVIOUS bucket.
     """
-    if frame not in ("trailing", "leading"):
-        raise ValueError(f"frame must be trailing|leading, got {frame!r}")
-    keys = [on] if isinstance(on, str) else list(on)
-    ev_val = events.select(F.col(value_col)).schema[0].dataType
-    ev2 = events.select(
-        *[F.col(k) for k in keys],
-        F.col(event_ts).cast("long").alias("__ts"),
-        F.col(value_col).alias("__val"))
-    for c in spine.columns:
-        if c not in keys:
-            ev2 = ev2.withColumn(c, F.lit(None).cast(spine.schema[c].dataType))
-    ev2 = ev2.withColumn("__side", F.lit(0))
-    sp2 = (spine
-           .withColumn("__ts", F.col(spine_ts).cast("long"))
-           .withColumn("__val", F.lit(None).cast(ev_val))
-           .withColumn("__side", F.lit(1)))
-    u = sp2.unionByName(ev2.select(*sp2.columns))
-
-    windows = [window] if isinstance(window, int) else list(window)
-    part_keys = list(keys)
-    drop_cols = ["__ts", "__val", "__side"]
-    if bucket_width is not None:
-        max_win = max(int(w) for w in windows)
-        bw = int(bucket_width)
-        if bw < max_win:
-            raise ValueError(
-                f"bucket_width {bw} < max window {max_win}: a "
-                "frame would span more than two buckets")
-        bucket = F.floor(F.col("__ts") / F.lit(bw))
-        own = u.withColumn("__bucket", bucket)
-        # event rows near a bucket boundary also serve the adjacent
-        # bucket's frames; spine rows live only in their own bucket
-        if frame == "trailing":
-            carry = (u.where((F.col("__side") == 0)
-                             & (F.col("__ts") >= (bucket + 1) * F.lit(bw)
-                                - F.lit(max_win)))
-                     .withColumn("__bucket", bucket + F.lit(1)))
-        else:
-            carry = (u.where((F.col("__side") == 0)
-                             & (F.col("__ts") < bucket * F.lit(bw)
-                                + F.lit(max_win)))
-                     .withColumn("__bucket", bucket - F.lit(1)))
-        u = own.unionByName(carry)
-        part_keys = part_keys + ["__bucket"]
-        drop_cols.append("__bucket")
-    # all window columns in ONE select so Catalyst emits one fused Window
-    # node (chained withColumn blocks CollapseWindow across frames)
-    exprs = []
-    for win in windows:
-        if frame == "trailing":
-            lo, hi = -int(win), (0 if include_current_instant else -1)
-        else:
-            lo, hi = (0 if include_current_instant else 1), int(win)
-        w = (Window.partitionBy(*part_keys).orderBy("__ts")
-             .rangeBetween(lo, hi))
-        for fn in fns:
-            name = f"{prefix}{fn}_{win}"
-            agg = (F.count("__val") if fn == "count"
-                   else getattr(F, fn)(F.col("__val")))
-            exprs.append(agg.over(w).alias(name))
-    return (u.select("*", *exprs)
-            .where(F.col("__side") == 1)
-            .drop(*drop_cols))
+    source = EventSource(events, event_ts, value_col, prefix)
+    return _interval_agg(spine, on, spine_ts, [source], window, fns,
+                         include_current_instant, bucket_width, frame,
+                         value_type=None)
 
 
 def build_training_set_fused(spine: DataFrame, on: Sequence[str] | str,
                              spine_ts: str,
                              features: Sequence[FeatureSpec]) -> DataFrame:
-    """All-backward multi-feature PIT assembly in ONE shuffle.
+    """All-backward multi-feature PIT assembly in ONE shuffle — the plan
+    behind :func:`build_training_set`'s ``shuffle`` strategy.
 
-    :func:`build_training_set` with the shuffle strategy exchanges the
-    (growing) spine once PER feature table — F features cost F shuffles of
-    the biggest relation. This variant unions the spine with EVERY feature
-    source at once (each row tagged with its source index) and computes all
-    as-of picks in a single entity-partitioned window:
+    One as-of join per feature table would exchange the (growing) spine
+    once PER feature — F features cost F shuffles of the biggest relation.
+    This plan unions the spine with EVERY feature source at once (each row
+    tagged with its source index) and computes all as-of picks in a single
+    entity-partitioned window:
     ``last(when(side == i, col), ignore nulls)`` per feature column. One
     exchange + one sort + one fused Window node total; at 10^12 spine rows
     the saving is (F-1) full shuffles.
 
-    Constraints (falls back is the caller's choice): every spec must be
-    ``direction='backward'``, unsalted, and keyed on the spine keys.
-    Result-identical to the sequential composition (tested), including
+    Every spec is matched backward on the spine keys ``on``. Result-identical
+    to per-feature :func:`~.asof.asof_join` calls (tested), including
     per-spec ``tolerance`` and ``<prefix>ts`` audit columns.
     """
-    keys = [on] if isinstance(on, str) else list(on)
-    for spec in features:
-        if spec.direction != "backward":
-            raise ValueError("fused training set supports backward only")
-        if spec.salt_buckets:
-            raise ValueError("fused training set does not salt; use "
-                             "build_training_set per-feature for hot keys")
-        if spec.on is not None and list(
-                [spec.on] if isinstance(spec.on, str) else spec.on) != keys:
-            raise ValueError("fused training set requires all specs keyed "
-                             "on the spine keys")
-
+    keys = _as_list(on)
     spine_cols = spine.columns
     spine_types = {f.name: f.dataType for f in spine.schema.fields}
-    # (out_name, dtype, side_idx, spec) for every exposed feature column
+    # (out_name, dtype, side_idx) for every exposed feature column
     plan = []
     for i, spec in enumerate(features, start=1):
         for c in spec.value_cols:
             plan.append((f"{spec.prefix}{c}",
                          spec.df.select(F.col(c)).schema[0].dataType, i))
-    names = [n for n, _t, _i in plan] + [f"{s.prefix}ts" for s in features
-                                         if s.matched_ts]
+    names = [n for s in features for n in _feature_columns(s)]
     dupes = {n for n in names if names.count(n) > 1} | \
         (set(names) & set(spine_cols))
     if dupes:
@@ -343,32 +277,53 @@ def pit_window_agg_multi(spine: DataFrame, on: Sequence[str] | str,
     Aggregates select their stream via ``fn(when(src == i, val))`` inside
     the shared RANGE frame (``frame='trailing'`` for features,
     ``'leading'`` for labels). Same leakage contract and ``bucket_width``
-    skew handling as the single-source operator.
+    skew handling as the single-source operator; values are aggregated as
+    double.
     """
-    if frame not in ("trailing", "leading"):
-        raise ValueError(f"frame must be trailing|leading, got {frame!r}")
-    keys = [on] if isinstance(on, str) else list(on)
     prefixes = [src.prefix for src in sources]
     dupes = {p for p in prefixes if prefixes.count(p) > 1}
     if dupes:
         raise ValueError(
             f"duplicate EventSource prefixes: {sorted(dupes)} — feature "
             "columns would collide")
-    sp2 = (spine
-           .withColumn("__ts", F.col(spine_ts).cast("long"))
-           .withColumn("__val", F.lit(None).cast("double"))
-           .withColumn("__src", F.lit(0)))
-    unioned = sp2
+    return _interval_agg(spine, on, spine_ts, sources, window, fns,
+                         include_current_instant, bucket_width, frame,
+                         value_type="double")
+
+
+def _interval_agg(spine: DataFrame, on: Sequence[str] | str, spine_ts: str,
+                  sources: Sequence[EventSource],
+                  window: int | Sequence[int], fns: Sequence[str],
+                  include_current_instant: bool, bucket_width: int | None,
+                  frame: str, value_type: str | None) -> DataFrame:
+    """The one plan behind :func:`pit_window_agg` and
+    :func:`pit_window_agg_multi`: the spine (tag 0, value null) and source
+    ``i`` (tag ``i``) in one union; every (horizon, source, fn) feature
+    ``<prefix><fn>_<horizon>`` is ``fn(when(tag == i, value))`` over a
+    RANGE frame on ``ts`` in ONE select (one exchange, one Window node);
+    the spine rows are then filtered back out. ``value_type=None`` keeps
+    the source's own value type; otherwise every value is cast to it."""
+    if frame not in ("trailing", "leading"):
+        raise ValueError(f"frame must be trailing|leading, got {frame!r}")
+    keys = _as_list(on)
+    spine_types = {f.name: f.dataType for f in spine.schema.fields}
+
+    def value(src: EventSource):
+        v = F.col(src.value_col)
+        return v if value_type is None else v.cast(value_type)
+
+    spine_value = value_type or \
+        sources[0].df.select(sources[0].value_col).schema[0].dataType
+    unioned = spine.select("*", F.col(spine_ts).cast("long").alias("__ts"),
+                           F.lit(None).cast(spine_value).alias("__val"),
+                           F.lit(0).alias("__src"))
     for i, src in enumerate(sources, start=1):
-        ev = src.df.select(
-            *[F.col(k) for k in keys],
+        unioned = unioned.unionByName(src.df.select(
+            *[F.col(c) if c in keys
+              else F.lit(None).cast(spine_types[c]).alias(c)
+              for c in spine.columns],
             F.col(src.ts_col).cast("long").alias("__ts"),
-            F.col(src.value_col).cast("double").alias("__val"))
-        for c in spine.columns:
-            if c not in keys:
-                ev = ev.withColumn(c,
-                                   F.lit(None).cast(spine.schema[c].dataType))
-        unioned = unioned.unionByName(ev.withColumn("__src", F.lit(i)))
+            value(src).alias("__val"), F.lit(i).alias("__src")))
 
     windows = [window] if isinstance(window, int) else list(window)
     part_keys = list(keys)
@@ -378,23 +333,25 @@ def pit_window_agg_multi(spine: DataFrame, on: Sequence[str] | str,
         bw = int(bucket_width)
         if bw < max_win:
             raise ValueError(
-                f"bucket_width {bw} < max window {max_win}")
+                f"bucket_width {bw} < max window {max_win}: a "
+                "frame would span more than two buckets")
         bucket = F.floor(F.col("__ts") / F.lit(bw))
-        own = unioned.withColumn("__bucket", bucket)
+        # event rows near a bucket boundary also serve the adjacent
+        # bucket's frames (the next one for a trailing frame, the previous
+        # one for a leading frame); spine rows live only in their own bucket
         if frame == "trailing":
-            carry = (unioned.where((F.col("__src") > 0)
-                                   & (F.col("__ts") >= (bucket + 1)
-                                      * F.lit(bw) - F.lit(max_win)))
-                     .withColumn("__bucket", bucket + F.lit(1)))
+            near = F.col("__ts") >= (bucket + 1) * F.lit(bw) - F.lit(max_win)
+            adjacent = bucket + F.lit(1)
         else:
-            carry = (unioned.where((F.col("__src") > 0)
-                                   & (F.col("__ts") < bucket * F.lit(bw)
-                                      + F.lit(max_win)))
-                     .withColumn("__bucket", bucket - F.lit(1)))
-        unioned = own.unionByName(carry)
+            near = F.col("__ts") < bucket * F.lit(bw) + F.lit(max_win)
+            adjacent = bucket - F.lit(1)
+        carry = (unioned.where((F.col("__src") > 0) & near)
+                 .withColumn("__bucket", adjacent))
+        unioned = unioned.withColumn("__bucket", bucket).unionByName(carry)
         part_keys.append("__bucket")
         drop_cols.append("__bucket")
-
+    # all window columns in ONE select so Catalyst emits one fused Window
+    # node (chained withColumn blocks CollapseWindow across frames)
     exprs = []
     for win in windows:
         if frame == "trailing":
@@ -406,10 +363,8 @@ def pit_window_agg_multi(spine: DataFrame, on: Sequence[str] | str,
         for i, src in enumerate(sources, start=1):
             mine = F.when(F.col("__src") == i, F.col("__val"))
             for fn in fns:
-                name = f"{src.prefix}{fn}_{win}"
-                expr = (F.count(mine) if fn == "count"
-                        else getattr(F, fn)(mine))
-                exprs.append(expr.over(w).alias(name))
+                agg = F.count(mine) if fn == "count" else getattr(F, fn)(mine)
+                exprs.append(agg.over(w).alias(f"{src.prefix}{fn}_{win}"))
     return (unioned.select("*", *exprs)
             .where(F.col("__src") == 0)
             .drop(*drop_cols))

@@ -42,8 +42,8 @@ def build_session(app_name: str = "msi-spark", parallelism: int | None = None,
         # 4 MB splits ≈ 500–2000 rows/task here; on a production cluster with
         # the same per-row cost, 8–16 MB is the same rows-per-task ballpark.
         # Split-by-bytes also lets the serve path stay SHUFFLE-FREE (scan →
-        # broadcast as-of join → mapInArrow) instead of round-robin
-        # repartitioning the full token payload.
+        # one mapInArrow) instead of round-robin repartitioning the full
+        # token payload.
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "2m")
     )

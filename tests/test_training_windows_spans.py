@@ -402,8 +402,9 @@ def test_fused_training_set_matches_sequential(spark):
     tolerance nulling and matched-ts audit columns."""
     import numpy as np
 
+    from msi_preprocessing_pipeline_spark.operators.asof import asof_join
     from msi_preprocessing_pipeline_spark.operators.training import (
-        FeatureSpec, build_training_set, build_training_set_fused)
+        FeatureSpec, build_training_set_fused)
 
     rng = np.random.RandomState(9)
     spine = pd.DataFrame({
@@ -426,8 +427,16 @@ def test_fused_training_set_matches_sequential(spark):
         FeatureSpec(spark.createDataFrame(fb), ts_col="bts",
                     value_cols=["b", "b2"], prefix="fb_", tolerance=50),
     ]
-    seq = build_training_set(sdf, on="user_id", spine_ts="ts",
-                             features=specs)
+    # the reference: one backward as-of join per spec, applied in turn
+    seq = sdf
+    for spec in specs:
+        renamed = spec.df
+        for c in spec.value_cols:
+            renamed = renamed.withColumnRenamed(c, f"{spec.prefix}{c}")
+        seq = asof_join(
+            seq, renamed, on="user_id", left_ts="ts", right_ts=spec.ts_col,
+            value_cols=[f"{spec.prefix}{c}" for c in spec.value_cols],
+            tolerance=spec.tolerance, matched_ts_col=f"{spec.prefix}ts")
     fused = build_training_set_fused(sdf, on="user_id", spine_ts="ts",
                                      features=specs)
     assert sorted(seq.columns) == sorted(fused.columns)
@@ -498,6 +507,33 @@ def test_pit_window_agg_multi_source_matches_separate(spark):
             .split("== Initial Plan ==")[0])
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("Window") == 1
+
+
+def test_pit_window_agg_output_types(spark):
+    """pit_window_agg aggregates in the value column's own type (a sum over
+    long stays long); pit_window_agg_multi casts every source to double."""
+    from msi_preprocessing_pipeline_spark.operators.training import (
+        EventSource, pit_window_agg, pit_window_agg_multi)
+
+    spine = spark.createDataFrame([(1, 100)], "k long, ts long")
+    ev_long = spark.createDataFrame([(1, 99, 3)], "k long, ets long, v long")
+    ev_dbl = spark.createDataFrame([(1, 99, 3.0)],
+                                   "k long, ets long, v double")
+    types = lambda df: {f.name: f.dataType.simpleString()  # noqa: E731
+                        for f in df.schema.fields}
+
+    out = pit_window_agg(spine, ev_long, "k", "ts", "ets", "v", window=10)
+    assert types(out)["f_count_10"] == "bigint"
+    assert types(out)["f_sum_10"] == "bigint"
+    assert out.collect()[0]["f_sum_10"] == 3
+    out = pit_window_agg(spine, ev_dbl, "k", "ts", "ets", "v", window=10)
+    assert types(out)["f_sum_10"] == "double"
+    multi = types(pit_window_agg_multi(
+        spine, on="k", spine_ts="ts",
+        sources=[EventSource(ev_long, "ets", "v", "a_"),
+                 EventSource(ev_dbl, "ets", "v", "b_")], window=10))
+    assert multi["a_sum_10"] == multi["b_sum_10"] == "double"
+    assert multi["a_count_10"] == multi["b_count_10"] == "bigint"
 
 
 def test_pit_window_agg_leading_frame_labels(spark):
