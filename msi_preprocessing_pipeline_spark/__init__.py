@@ -6,14 +6,15 @@ spectra matrices) as an idiomatic Spark library:
 
 * ``kernels``   — pure-numpy numerical kernels (shared by the Spark UDFs and
   the single-process test oracle so both paths run identical arithmetic).
-* ``operators`` — DataFrame-level operators: as-of/backfill joins, window ops,
-  sessionization, dedup, similarity search, and the spectrum feature stages.
+* ``operators`` — DataFrame-level operators: as-of/backfill joins, window ops
+  (lag/lead, sessions, rolling), dedup, similarity search, and the spectrum
+  feature stages.
 * ``sources``   — table loaders + the deterministic synthetic sequence
   generator.
 * ``functions`` — JVM-side column expression helpers (no Python in hot path).
 * ``plans``     — staged pipeline driver with checkpoint-resume and
   per-partition lineage/throughput metrics.
-* ``streaming`` — Structured Streaming variants (sessionize).
+* ``streaming`` — streaming feature serving (``transform`` over ``readStream``).
 """
 
 __version__ = "0.1.0"

@@ -37,6 +37,5 @@
 * :mod:`encoding`   — hashing-trick buckets, robust (median/IQR)
   standardization, equal-frequency quantile binning.
 * :mod:`drift`      — PSI feature-drift monitoring between snapshots
-  (fixed bins, Laplace-smoothed; shares its bin expression with the
-  streaming monitor).
+  (fixed bins, Laplace-smoothed).
 """

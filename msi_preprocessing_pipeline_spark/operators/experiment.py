@@ -571,8 +571,7 @@ def conformal_qhat(df: DataFrame, score_col: str, alpha: float = 0.1,
 
 def qhat_from_counts(dist: DataFrame, alpha: float = 0.1) -> DataFrame:
     """The conformal rank selection over a ``(s_u, c)`` quantized-score
-    count relation — shared by :func:`conformal_qhat` (batch) and the
-    streaming histogram-store landing (``streaming.conformal``).
+    count relation, behind :func:`conformal_qhat`.
 
     ONE lineage: running count AND the grand total ride the same window
     pass over the |distinct|-bounded relation (re-deriving the total as
@@ -920,9 +919,8 @@ def seq_ab_moments(df: DataFrame, treat_col: str, outcome_col: str,
     """The per-look exact moment relation feeding
     :func:`seq_ab_decisions`: ``(look, n_t, n_c, sy_t, sy_c, syy_t,
     syy_c)`` with decimal(38,0) sums over 10^scale micro-units.
-    Additive and commutative per look — the streaming landing merges
-    micro-batch moment relations by summation (``streaming.seqtest``)
-    and gets the identical table."""
+    Additive and commutative per look: moment relations of disjoint
+    slices merge by summation into the identical table."""
     t = F.col(treat_col).cast("int")
     # square IN DECIMAL (int64 wraps at |v| >= ~3037 at scale 6); the
     # oracle squares in hugeint — this keeps the engines in lockstep

@@ -51,20 +51,5 @@ def build_session(app_name: str = "msi-spark", parallelism: int | None = None,
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_ml_classes(spark)
     return spark
 
-
-def _warm_ml_classes(spark: SparkSession) -> None:
-    """One-time Spark ML class-loading warm-up (``NGram`` backs
-    ``text.word_grams`` on the dedup/text path). JVM class loading happens
-    once per executor JVM and amortizes to zero at scale, but in a fresh
-    local session it adds ~2 s to the FIRST gram query — which reads as
-    query cost in single-shot benchmarks. Doing it at session build keeps
-    per-query timings about the operator, not the classloader."""
-    try:
-        from pyspark.ml.feature import NGram
-        tiny = spark.createDataFrame([(["", ""],)], "w array<string>")
-        NGram(n=2, inputCol="w", outputCol="g").transform(tiny).count()
-    except Exception:
-        pass  # never let warm-up break session construction

@@ -1,2 +1,2 @@
-"""Structured Streaming operators: gap sessionization and streaming feature
-serving (the stateless hot path runs unchanged under ``readStream``)."""
+"""Structured Streaming: streaming feature serving (the stateless serve path
+runs unchanged under ``readStream``)."""

@@ -60,77 +60,6 @@ def test_empty_calibration(spark):
     assert r.n_cal == 0 and r.qhat_u is None
 
 
-# streaming twin: histogram-store landing
-
-
-def _two_batch_stream(spark, tmp_path, df):
-    import os
-    import shutil
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    half = df.count() // 2
-    df.limit(half).coalesce(1).write.parquet(str(tmp_path / "w0"))
-    df.subtract(df.limit(half)).coalesce(1) \
-        .write.parquet(str(tmp_path / "w1"))
-    for i in (0, 1):
-        src = [f for f in os.listdir(str(tmp_path / f"w{i}"))
-               if f.endswith(".parquet")][0]
-        shutil.copy(str(tmp_path / f"w{i}" / src),
-                    f"{in_dir}/b{i}.parquet")
-    return (spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1).parquet(in_dir))
-
-
-def test_streaming_qhat_batch_parity(spark, tmp_path):
-    import numpy as np
-    from msi_preprocessing_pipeline_spark.streaming.conformal import (
-        conformal_landing)
-
-    rng = np.random.RandomState(4)
-    df = _df(spark, np.abs(rng.normal(0, 1, 400))).cache()
-    store = str(tmp_path / "store")
-    qlog = str(tmp_path / "qhat")
-    q = (_two_batch_stream(spark, tmp_path, df).writeStream
-         .foreachBatch(conformal_landing(store, qlog, score_col="s",
-                                         alpha=0.1))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    log = spark.read.parquet(qlog).orderBy("batch_id").collect()
-    assert len(log) == 2  # one qhat row per micro-batch
-    exp = conformal_qhat(df, "s", alpha=0.1).collect()[0]
-    last = log[-1]
-    assert (last.n_cal, last.rank_r, last.qhat_u) == \
-        (exp.n_cal, exp.rank_r, exp.qhat_u)
-    # earlier batch saw fewer rows -> smaller n_cal, valid rank
-    assert log[0].n_cal < last.n_cal == 400
-
-
-def test_streaming_qhat_retry_replay_safe(spark, tmp_path):
-    import numpy as np
-    from msi_preprocessing_pipeline_spark.streaming.conformal import (
-        conformal_landing)
-
-    rng = np.random.RandomState(6)
-    df = _df(spark, np.abs(rng.normal(0, 1, 200))).cache()
-    b0 = df.limit(100)
-    b1 = df.subtract(b0)
-    store = str(tmp_path / "store")
-    qlog = str(tmp_path / "qhat")
-    land = conformal_landing(store, qlog, score_col="s", alpha=0.1)
-    land(b0, 0)
-    land(b1, 1)
-    first = spark.read.parquet(qlog).where("batch_id = 1").collect()
-    # retry batch 1 after its snapshot committed: must re-read the
-    # PRIOR snapshot (v0), not its own output, and re-emit identically
-    land(b1, 1)
-    again = spark.read.parquet(qlog).where("batch_id = 1").collect()
-    assert len(again) == 2 and again[0] == again[1] == first[0]
-    hist = spark.read.parquet(f"{store}/v1")
-    assert hist.agg(F.sum("c")).collect()[0][0] == 200  # no double count
-
-
 def test_mondrian_per_group_matches_global_on_each_slice(spark):
     import numpy as np
     from msi_preprocessing_pipeline_spark.operators.experiment import (

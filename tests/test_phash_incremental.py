@@ -149,88 +149,3 @@ def test_incremental_minhash_reingest_replaces(spark):
               .join(fresh.alias("f"), "doc_id")
               .where(F.col("s.signature") != F.col("f.signature")))
     assert joined.count() == 0  # store carries the NEW signatures
-
-
-# ---------------------------------------------------------------------------
-# streaming near-dup (foreachBatch landing over the incremental operator)
-
-
-def test_streaming_near_dup_batch_parity(spark, tmp_path):
-    import os
-    import shutil
-
-    from msi_preprocessing_pipeline_spark.streaming.dedup import (
-        near_dup_landing)
-
-    docs = spark.read.parquet(f"{SF001}/documents.parquet").cache()
-    # two arrival waves as two files -> two micro-batches
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    docs.where(F.col("doc_id") % 2 == 0).coalesce(1) \
-        .write.parquet(str(tmp_path / "w0"))
-    docs.where(F.col("doc_id") % 2 == 1).coalesce(1) \
-        .write.parquet(str(tmp_path / "w1"))
-    for i in (0, 1):
-        src = [f for f in os.listdir(str(tmp_path / f"w{i}"))
-               if f.endswith(".parquet")][0]
-        shutil.copy(str(tmp_path / f"w{i}" / src), f"{in_dir}/b{i}.parquet")
-
-    store = str(tmp_path / "store")
-    pairs_dir = str(tmp_path / "pairs")
-    stream = (spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", 1).parquet(in_dir))
-    q = (stream.writeStream
-         .foreachBatch(near_dup_landing(store, pairs_dir, threshold=0.2))
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = (spark.read.parquet(pairs_dir)
-           .select("doc_a", "doc_b", "est_jaccard").toPandas()
-           .sort_values(["doc_a", "doc_b"]).reset_index(drop=True))
-    exp = (minhash_lsh_pairs(minhash_signatures(docs), threshold=0.2)
-           .toPandas().sort_values(["doc_a", "doc_b"])
-           .reset_index(drop=True))
-    pd.testing.assert_frame_equal(got, exp)
-    # latest snapshot has every doc signed; at most the consumed prior
-    # snapshot is retained beside it (replay safety)
-    versions = sorted(d for d in os.listdir(store) if d.startswith("v"))
-    assert 1 <= len(versions) <= 2
-    assert spark.read.parquet(f"{store}/{versions[-1]}").count() \
-        == docs.count()
-
-
-def test_streaming_near_dup_retry_replay_safe(spark, tmp_path):
-    """Replaying a micro-batch whose store snapshot already committed
-    (retry-before-checkpoint) must neither wedge on read-own-write nor
-    destroy the snapshot; recomputed pairs are identical."""
-    import os
-
-    from msi_preprocessing_pipeline_spark.streaming.dedup import (
-        near_dup_landing)
-
-    docs = spark.read.parquet(f"{SF001}/documents.parquet").cache()
-    b0 = docs.where(F.col("doc_id") % 2 == 0)
-    b1 = docs.where(F.col("doc_id") % 2 == 1)
-    store = str(tmp_path / "store")
-    pairs_dir = str(tmp_path / "pairs")
-    land = near_dup_landing(store, pairs_dir, threshold=0.2)
-    land(b0, 0)
-    land(b1, 1)
-    first = (spark.read.parquet(pairs_dir)
-             .where(F.col("batch_id") == 1)
-             .select("doc_a", "doc_b", "est_jaccard").toPandas()
-             .sort_values(["doc_a", "doc_b"]).reset_index(drop=True))
-    land(b1, 1)  # retry replay of batch 1
-    versions = sorted(d for d in os.listdir(store) if d.startswith("v"))
-    # v0 retained (the prior this batch consumed — replay needs it),
-    # v1 intact (not self-deleted)
-    assert versions == ["v0", "v1"]
-    assert spark.read.parquet(f"{store}/v1").count() == docs.count()
-    replay = spark.read.parquet(pairs_dir).where(F.col("batch_id") == 1)
-    # appended twice, identical values -> consumers dedup on the stamp
-    dedup = (replay.select("doc_a", "doc_b", "est_jaccard").distinct()
-             .toPandas().sort_values(["doc_a", "doc_b"])
-             .reset_index(drop=True))
-    assert replay.count() == 2 * len(first)
-    pd.testing.assert_frame_equal(dedup, first)

@@ -1,152 +1,12 @@
-"""Custom stateful streaming sessionizer vs the batch sessionizer.
-
-The stateful operator emits CLOSED sessions; with a bounded stream the last
-session of each entity stays open (in the state store), so the comparison is
-against every batch session that has a successor.
-"""
+"""Online point-in-time enrichment: the broadcast training-set plan over a
+streaming spine emits exactly the batch result."""
 
 import os
 import shutil
 
 from pyspark.sql import functions as F
 
-from msi_preprocessing_pipeline_spark.operators.windows import session_stats
-from msi_preprocessing_pipeline_spark.streaming.stateful import (
-    stateful_sessionize)
-
 SF_DIR = "/root/testdata/sf0.001"
-GAP_MS = 1_800_000
-
-
-def test_stateful_sessionize_matches_batch_closed_sessions(spark, tmp_path):
-    ev_dir = str(tmp_path / "events")
-    os.makedirs(ev_dir)
-    shutil.copy(f"{SF_DIR}/events.parquet", f"{ev_dir}/part-0.parquet")
-    raw = spark.read.parquet(ev_dir)
-    batch_ev = raw.select(
-        "user_id", "event_id",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ms"))
-
-    stream = (spark.readStream.schema(raw.schema).parquet(ev_dir)
-              .select("user_id",
-                      F.unix_millis(F.col("ts").cast("timestamp")).alias("ms")))
-    out = stateful_sessionize(stream, gap_ms=GAP_MS, idle_timeout=False)
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("closed_sessions").trigger(availableNow=True).start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("select * from closed_sessions").toPandas()
-    assert (got["closed_by"] == "gap").all()
-
-    batch = session_stats(batch_ev, "user_id", ts_col="ms",
-                          gap_seconds=float(GAP_MS),
-                          tiebreak=["event_id"]).toPandas()
-    # closed = every session except each user's last
-    last_per_user = batch.groupby("user_id")["session_id"].transform("max")
-    closed_exp = batch[batch.session_id != last_per_user]
-
-    key = ["user_id", "session_start", "session_end", "n_events"]
-    got_set = {tuple(r) for r in got[key].itertuples(index=False)}
-    exp_set = {tuple(r) for r in closed_exp.rename(
-        columns={})[["user_id", "session_start", "session_end",
-                     "n_events"]].itertuples(index=False)}
-    assert got_set == exp_set
-    assert len(got_set) > 50  # meaningful coverage
-
-
-def test_watermarked_tumbling_window_drops_late_data(spark, tmp_path):
-    """Append-mode watermark contract: a row arriving after the watermark
-    passed its window is DROPPED — the bounded-state guarantee."""
-    import os
-    import time as _time
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from msi_preprocessing_pipeline_spark.streaming.windows import (
-        streaming_windowed_agg)
-
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    schema = "user_id long, ts timestamp, value double"
-
-    def write_batch(name, rows):
-        pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf, schema=schema).coalesce(1) \
-            .write.parquet(f"{in_dir}/{name}")
-        _time.sleep(1.1)  # separate modification times → batch order
-
-    # batch 1: on-time rows in the 10:00 window plus a row at 11:00 that
-    # advances the watermark (30 min) past 10:10
-    write_batch("b1", [
-        (1, "2024-01-01 10:01:00", 1.0),
-        (1, "2024-01-01 10:05:00", 2.0),
-        (1, "2024-01-01 11:00:00", 5.0),
-    ])
-
-    stream = (spark.readStream.schema(schema)
-              .option("latestFirst", "false")
-              .parquet(in_dir + "/*"))
-    out = streaming_windowed_agg(stream, window="10 minutes",
-                                 watermark="30 minutes")
-    q = (out.writeStream.outputMode("append")
-         .format("memory").queryName("winagg").start())
-    try:
-        q.processAllAvailable()  # batch 1 → watermark advances to 10:30
-        # batch 2, strictly after: a LATE row for the closed 10:00 window
-        write_batch("b2", [(1, "2024-01-01 10:02:00", 100.0)])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("select * from winagg").toPandas()
-    ten = got[got.window_start.astype(str).str.contains("10:00")]
-    assert len(ten) == 1
-    # the late 100.0 must NOT be in the emitted window
-    assert int(ten.n_events.iloc[0]) == 2
-    assert float(ten.value_sum.iloc[0]) == 3.0
-
-
-def test_streaming_dedup_exact(spark, tmp_path):
-    """Streaming ingest dedup: one survivor per content fingerprint; matches
-    the batch exact-dedup group structure on the same input."""
-    import pandas as pd
-
-    from msi_preprocessing_pipeline_spark.streaming.dedup import (
-        streaming_dedup_exact)
-
-    docs_dir = str(tmp_path / "docs")
-    os.makedirs(docs_dir)
-    pdf = pd.DataFrame({
-        "doc_id": range(12),
-        # 4 distinct contents; '  Hello  World ' normalizes to 'hello world'
-        "text": (["hello world", "  Hello  World ", "spark engine",
-                  "spark   ENGINE", "unique one", "unique two"] * 2),
-        "ts": pd.to_datetime("2024-01-01") + pd.to_timedelta(
-            range(12), unit="min"),
-    })
-    batch = spark.createDataFrame(pdf)
-    batch.write.parquet(docs_dir, mode="overwrite")
-    raw = spark.read.parquet(docs_dir)
-
-    stream = spark.readStream.schema(raw.schema).parquet(docs_dir)
-    out = streaming_dedup_exact(stream, watermark="10 minutes")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("dedup_stream").trigger(availableNow=True).start())
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("select * from dedup_stream").toPandas()
-
-    # 4 distinct normalized contents → 4 survivors, distinct fingerprints
-    assert len(got) == 4
-    assert got["fingerprint"].nunique() == 4
-    # 'hello world' variants share a fingerprint; so do 'spark engine' ones
-    norm = (pdf.text.str.strip().str.lower()
-            .str.replace(r"\s+", " ", regex=True))
-    assert norm.nunique() == 4
-    # every surviving doc's normalized text is one of the 4
-    surv = norm[got["doc_id"]].nunique()
-    assert surv == 4
 
 
 def test_streaming_training_set_matches_batch(spark, tmp_path):

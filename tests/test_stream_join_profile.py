@@ -1,57 +1,8 @@
 """Stream-stream interval join batch parity; column_profile exactness."""
 
-import os
-import shutil
-
 import pytest
-from pyspark.sql import functions as F
 
 from msi_preprocessing_pipeline_spark.operators.profile import column_profile
-from msi_preprocessing_pipeline_spark.streaming.joins import (
-    stream_interval_join)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    raw = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    for name, et in (("purch", "purchase"), ("click", "click")):
-        d = str(tmp_path / name)
-        os.makedirs(d)
-        (raw.where(F.col("event_type") == et)
-         .select("event_id", "user_id", "ts", "value")
-         .write.parquet(d, mode="overwrite"))
-    schema = spark.read.parquet(str(tmp_path / "purch")).schema
-
-    lstream = spark.readStream.schema(schema).parquet(str(tmp_path / "purch"))
-    rstream = spark.readStream.schema(schema).parquet(str(tmp_path / "click"))
-    out = stream_interval_join(
-        lstream, rstream, on="user_id", lookback="1 hour",
-        watermark="3650 days")  # bounded replay: drop nothing
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("sij").trigger(availableNow=True).start())
-    q.processAllAvailable()
-    q.stop()
-    got = {(r["event_id"], r["r_event_id"])
-           for r in spark.sql("select * from sij").collect()}
-
-    lb = spark.read.parquet(str(tmp_path / "purch"))
-    rb = (spark.read.parquet(str(tmp_path / "click"))
-          .select(F.col("event_id").alias("r_event_id"),
-                  F.col("user_id").alias("r_uid"),
-                  F.col("ts").alias("r_ts")))
-    t, rt = F.col("ts").cast("timestamp"), F.col("r_ts").cast("timestamp")
-    exp = {(r["event_id"], r["r_event_id"]) for r in
-           lb.join(rb, (F.col("user_id") == F.col("r_uid"))
-                   & (rt >= t - F.expr("interval 1 hour"))
-                   & (rt <= t)).collect()}
-    assert got == exp and len(exp) > 0
-
-
-def test_stream_interval_join_validates_how(spark):
-    df = spark.readStream.format("rate").load()
-    with pytest.raises(ValueError):
-        stream_interval_join(df, df, on="value", how="full")
 
 
 def test_column_profile_exact(spark):

@@ -1,4 +1,4 @@
-"""Streaming sessionize/serve, the ASCII source, multimodal plumbing, and the
+"""Streaming serve, the ASCII source, multimodal plumbing, and the
 array expression helpers."""
 
 import numpy as np
@@ -9,39 +9,11 @@ from pyspark.sql import functions as F
 from msi_preprocessing_pipeline_spark.functions import cosine_expr, tic
 from msi_preprocessing_pipeline_spark.operators import multimodal
 from msi_preprocessing_pipeline_spark.operators import spectrum as sp
-from msi_preprocessing_pipeline_spark.operators.windows import sessionize
 from msi_preprocessing_pipeline_spark.oracle import PipelineConfig
 from msi_preprocessing_pipeline_spark.plans.pipeline import FeaturePipeline
 from msi_preprocessing_pipeline_spark.sources import ascii as ascii_src
 from msi_preprocessing_pipeline_spark.sources import synthetic
 from msi_preprocessing_pipeline_spark.streaming import serve as stream_serve
-from msi_preprocessing_pipeline_spark.streaming.sessionize import (
-    run_to_memory, streaming_session_stats)
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    import shutil
-    ev_dir = str(tmp_path / "events")
-    import os
-    os.makedirs(ev_dir)
-    shutil.copy(f"{SF_DIR}/events.parquet", f"{ev_dir}/part-0.parquet")
-    ev = spark.read.parquet(ev_dir) \
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    stream = spark.readStream.schema(ev.schema).parquet(ev_dir)
-    agg = streaming_session_stats(stream, gap="30 minutes")
-    run_to_memory(agg, "stream_sessions")
-    got = spark.sql(
-        "select user_id, count(*) n from stream_sessions group by 1").toPandas()
-
-    batch = sessionize(
-        ev.select("user_id", F.unix_millis("ts").alias("ms")),
-        "user_id", ts_col="ms", gap_seconds=1_800_000.0)
-    exp = (batch.groupBy("user_id")
-           .agg(F.max("session_id").alias("n")).toPandas())
-    merged = got.merge(exp, on="user_id", suffixes=("_s", "_b"))
-    assert (merged["n_s"] == merged["n_b"]).all()
 
 
 def test_streaming_features_match_batch(spark, tmp_path):
