@@ -17,7 +17,7 @@
   interpolation; never ``percentile_approx`` on the compat path).
 * :mod:`spectrum`   — the staged spectrum feature operators (vectorized
   Arrow UDFs over broadcast artifacts).
-* :mod:`dedup`      — exact/MinHash-LSH/SimHash/n-gram-Jaccard dedup,
+* :mod:`dedup`      — MinHash-LSH/SimHash/n-gram-Jaccard dedup,
   winnowing fingerprints, benchmark decontamination, hot-key guards,
   substring-level duplicate spans (words or token arrays) + passage
   cutting.

@@ -1,9 +1,7 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
+"""Deduplication operators: MinHash+LSH, SimHash, n-gram Jaccard,
 embedding-cosine near-dup.
 
 Design for scale:
-* exact dedup — hash-groupBy (one shuffle on the fingerprint), keep the
-  smallest tiebreaker per group;
 * MinHash — shingles exploded once, signatures fully JVM-side (seeded
   ``xxhash64`` min-aggregates, map-side combine), then BAND bucketing:
   explode (band, band_hash), bucket join, estimate Jaccard by signature
@@ -27,17 +25,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def dedup_exact(df: DataFrame, key: Column | str, tiebreak: str,
-                keep_col: str = "is_kept") -> DataFrame:
-    """Mark one row per duplicate group (smallest ``tiebreak`` wins).
-
-    One shuffle on the duplicate key; downstream keep = filter(is_kept).
-    """
-    key_col = F.col(key) if isinstance(key, str) else key
-    w = Window.partitionBy(key_col).orderBy(F.col(tiebreak).asc())
-    return df.withColumn(keep_col, F.row_number().over(w) == 1)
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text",

@@ -97,9 +97,10 @@ def rebalance_for_cpu(df: DataFrame) -> DataFrame:
     than cores. The CPU-heavy explode/aggregate stages downstream (gram
     generation, hash votes, fingerprinting) run their map-side partial
     aggregation inside the scan stage — a small single-file input would
-    serialize them onto one task (same pattern and rationale as
-    ``FeaturePipeline._maybe_rebalance``). On a well-partitioned table
-    this is a no-op, so the serve-scale plans stay shuffle-free.
+    serialize them onto one task. On a well-partitioned table this is a
+    no-op, so the serve-scale plans stay shuffle-free. (The spectrum
+    stages use ``FeaturePipeline._maybe_rebalance`` instead, which also
+    coalesces down to one task per core.)
 
     Applied by default only where per-row CPU is heavy enough to dominate
     the repartition cost (the Python winnowing kernel, whose per-doc cost

@@ -60,18 +60,25 @@ class FeaturePipeline:
         self.last_fit_diagnostics: list[dict] = []
 
     def _maybe_rebalance(self, df: DataFrame) -> DataFrame:
-        """Round-robin repartition ONLY when the input is under-partitioned
-        for the CPU-bound UDF stages; a well-split scan stays shuffle-free.
+        """One task per core for the CPU-bound UDF stages: fewer partitions
+        than cores get a round-robin ``repartition(cores)``, more get
+        ``coalesce(cores)`` (no Exchange), exactly ``cores`` are returned
+        unchanged.
 
-        The UDF stages cost ~3 ms/row (baseline + PaFFT), so partitioning
-        tracks cores, not bytes: 4× cores measured best (wave balancing)
-        while keeping tasks >100 ms. A stream is returned unchanged (its
+        Every Python task pays a fixed set-up before the UDF starts —
+        about 0.2 s on a 4-vCPU host, mostly pyspark's per-task
+        ``setup_spark_files`` → ``importlib.invalidate_caches()`` re-reading
+        the zip and jar entries on ``sys.path`` — so more tasks than cores
+        only multiply that cost. A stream is returned unchanged (its
         partitioning is per micro-batch and ``df.rdd`` cannot run on it)."""
         if df.isStreaming:
             return df
         cores = self.spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < 2 * cores:
-            return df.repartition(4 * cores)
+        n = df.rdd.getNumPartitions()
+        if n < cores:
+            return df.repartition(cores)
+        if n > cores:
+            return df.coalesce(cores)
         return df
 
     # ---------------------------------------------------------------- fit
@@ -208,11 +215,11 @@ class FeaturePipeline:
 
         The artifact timeline travels with the UDF as one broadcast, so the
         row side has no join and no shuffle and is inherently skew-immune.
-        The serve UDF is CPU-bound per row, so the input goes through
-        :meth:`_maybe_rebalance`: a scan that already yields enough splits
-        (small ``maxPartitionBytes`` — see ``session.py``) stays
-        SHUFFLE-FREE, an under-partitioned one (e.g. one fat file) gets a
-        round-robin repartition.
+        The input goes through :meth:`_maybe_rebalance`, one task per core:
+        a scan with at least as many splits as cores is coalesced and stays
+        SHUFFLE-FREE (scan → Coalesce → one MapInArrow); an
+        under-partitioned one (e.g. one fat file) gets a round-robin
+        repartition.
         """
         return sp.serve_features(self._maybe_rebalance(df), artifacts,
                                  self.source_axes, self.config)

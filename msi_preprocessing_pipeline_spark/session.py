@@ -37,13 +37,11 @@ def build_session(app_name: str = "msi-spark", parallelism: int | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # CPU-bound Arrow-UDF stages want file splits sized to CORES, not
-        # bytes: at ~2 ms/row a default 128 MB split is a 20-minute task.
-        # 4 MB splits ≈ 500–2000 rows/task here; on a production cluster with
-        # the same per-row cost, 8–16 MB is the same rows-per-task ballpark.
-        # Split-by-bytes also lets the serve path stay SHUFFLE-FREE (scan →
-        # one mapInArrow) instead of round-robin repartitioning the full
-        # token payload.
+        # Small file splits so a scan of a few MB still parallelizes (a
+        # 2,400-row spectra table of 16 files reads as 16 splits of 150
+        # rows). The spectrum fit and serve paths size their own tasks, one
+        # per core (FeaturePipeline._maybe_rebalance): more splits than
+        # cores are coalesced without a shuffle, fewer are round-robined.
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "2m")
     )

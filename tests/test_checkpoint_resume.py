@@ -90,3 +90,21 @@ def test_lineage_records(spark, table, tmp_path_factory):
     n_before = len(records)
     pipe.fit_checkpointed(table, StageRunner(spark, work))
     assert len(runner.lineage()) == n_before
+
+
+def test_fit_stage_runs_one_task_per_core(spark, table, tmp_path_factory):
+    """A many-file input is coalesced to one task per core before the first
+    fit stage; the stage's parquet output records that many partitions."""
+    path = str(tmp_path_factory.mktemp("many_files") / "seq")
+    table.repartition(16).write.parquet(path)
+    seq = spark.read.parquet(path)
+    cores = spark.sparkContext.defaultParallelism
+    assert seq.rdd.getNumPartitions() > cores
+    pipe = FeaturePipeline(spark, synthetic.source_axes_for(SOURCES, 512),
+                           CFG)
+    runner = StageRunner(spark, str(tmp_path_factory.mktemp("per_core")))
+    pipe.fit_checkpointed(seq, runner)
+    stage = next(r for r in runner.lineage()
+                 if r["stage"] == "resample_baseline")
+    assert stage["partitions"] == cores
+    assert stage["rows"] == 20

@@ -79,18 +79,6 @@ def test_ngram_jaccard_exact_pairs(corpus):
     assert len(found) >= 25
 
 
-def test_dedup_exact_keeps_one_per_group(spark):
-    pdf = pd.DataFrame({
-        "doc_id": ["a", "b", "c", "d"],
-        "text": ["same text", "same text", "other", "same text"],
-    })
-    df = spark.createDataFrame(pdf)
-    out = dedup.dedup_exact(df, F.md5(F.col("text").cast("binary")),
-                            tiebreak="doc_id").toPandas()
-    kept = set(out[out.is_kept]["doc_id"])
-    assert kept == {"a", "c"}
-
-
 def test_lsh_topk_recall_vs_exact(spark):
     # random 64-dim embeddings are near-worst-case for sign-LSH (neighbors
     # are barely above ambient similarity); with 4-bit buckets + 1-bit

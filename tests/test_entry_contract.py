@@ -47,16 +47,18 @@ def test_entry_smoke(spark):
     assert set(df.columns) >= {"doc_id", "source", "ts", "features"}
 
 
-def test_all_queries_run(spark):
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, SF_DIR)
-        assert df.count() >= 0, name
-
-
 try:
     from _golden_oracles import SF001_PINNED as _SF001_PINNED
 except ImportError:
     _SF001_PINNED = set()
+
+
+def test_all_queries_run(spark):
+    """Every query runs at sf0.001: the oracle test below runs all but the
+    sf0.01-pinned ones there, so only those run here."""
+    for name in sorted(_SF001_PINNED):
+        df = entrymod.queries()[name](spark, SF_DIR)
+        assert df.count() >= 0, name
 
 
 @pytest.mark.parametrize("name", sorted(entrymod.oracle_sql()))

@@ -78,19 +78,27 @@ def test_features_allclose_to_oracle(table, axes, oracle_rows):
 
 
 def test_transform_partitioning_invariant(table, axes):
-    """One input partition (the round-robin rebalance branch) and eight
-    (the shuffle-free branch) serve identical features."""
+    """All three branches of the one-task-per-core rule serve identical
+    features: one input partition (round-robin repartition), exactly
+    ``cores`` (unchanged) and eight (coalesce)."""
     pipe = FeaturePipeline(table.sparkSession, axes, CFG)
     art = pipe.fit(table)
-    split = pipe.transform(table, [art]).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    single = pipe.transform(table.coalesce(1), [art]).toPandas() \
-        .sort_values("doc_id").reset_index(drop=True)
-    assert table.rdd.getNumPartitions() == 8
-    assert split["doc_id"].equals(single["doc_id"])
-    assert split["artifact_version"].equals(single["artifact_version"])
-    for a, b in zip(split["features"], single["features"]):
-        np.testing.assert_array_equal(np.asarray(a), np.asarray(b))
+    cores = table.sparkSession.sparkContext.defaultParallelism
+    assert table.rdd.getNumPartitions() == 8 > cores
+    exact = table.coalesce(cores)
+    assert pipe._maybe_rebalance(exact) is exact
+
+    def served(df):
+        out = pipe.transform(df, [art])
+        assert out.rdd.getNumPartitions() == cores
+        return out.toPandas().sort_values("doc_id").reset_index(drop=True)
+
+    split = served(table)
+    for other in (served(table.coalesce(1)), served(exact)):
+        assert split["doc_id"].equals(other["doc_id"])
+        assert split["artifact_version"].equals(other["artifact_version"])
+        for a, b in zip(split["features"], other["features"]):
+            np.testing.assert_array_equal(np.asarray(a), np.asarray(b))
 
 
 def test_zero_temporal_leakage(table, axes):

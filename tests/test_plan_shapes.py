@@ -125,9 +125,9 @@ def test_text_ops_are_jvm_side(spark):
 
 
 def test_serve_plan_is_shuffle_free_on_partitioned_input(spark, tmp_path):
-    """On a well-partitioned input the serving path is scan → ONE
-    MapInArrow: no exchange, no join (the artifact timeline and the per-row
-    version pick live inside the UDF)."""
+    """On a well-partitioned input the serving path is scan → Coalesce →
+    ONE MapInArrow: one task per core, no exchange, no join (the artifact
+    timeline and the per-row version pick live inside the UDF)."""
     import numpy as np
 
     from msi_preprocessing_pipeline_spark.operators import spectrum as sp
@@ -153,10 +153,14 @@ def test_serve_plan_is_shuffle_free_on_partitioned_input(spark, tmp_path):
         gmm_w=np.array([1.0]),
         merge_starts=np.array([0]), merge_lengths=np.array([1]))
 
+    cores = spark.sparkContext.defaultParallelism
+    assert seq.rdd.getNumPartitions() > cores
     served = pipe.transform(seq, [art])
     plan = plan_of(served, "simple")
     physical = plan.split("== Physical Plan ==")[1]
     assert physical.count("MapInArrow") == 1
+    assert "Coalesce" in physical
+    assert served.rdd.getNumPartitions() == cores
     assert "roundrobin" not in plan.lower()
     assert "Exchange" not in physical
     assert "BroadcastHashJoin" not in physical
