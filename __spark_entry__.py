@@ -200,7 +200,7 @@ def _q_training_set(spark, sf_dir):
     union + one window — 1 shuffle total; pinned result-identical to the
     sequential per-feature as-of composition)."""
     from msi_preprocessing_pipeline_spark.operators.training import (
-        FeatureSpec, build_training_set_fused as build_training_set)
+        FeatureSpec, build_training_set_fused)
 
     ev = _t(spark, sf_dir, "events")
     spine = (ev.where(F.col("event_type") == "purchase")
@@ -210,7 +210,7 @@ def _q_training_set(spark, sf_dir):
               .select("user_id", _ms("ts").alias("ms"), "value"))
     views = (ev.where(F.col("event_type") == "view")
              .select("user_id", _ms("ts").alias("ms"), "value"))
-    return build_training_set(
+    return build_training_set_fused(
         spine, on="user_id", spine_ts="purchase_ms",
         features=[
             FeatureSpec(clicks, ts_col="ms", value_cols=["value"],

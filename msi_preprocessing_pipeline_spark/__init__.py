@@ -7,7 +7,7 @@ spectra matrices) as an idiomatic Spark library:
 * ``kernels``   — pure-numpy numerical kernels (shared by the Spark UDFs and
   the single-process test oracle so both paths run identical arithmetic).
 * ``operators`` — DataFrame-level operators: as-of/backfill joins, window ops
-  (lag/lead, sessions, rolling), dedup, similarity search, and the spectrum
+  (sessions, rolling event-time frames), dedup, similarity search, and the spectrum
   feature stages.
 * ``sources``   — table loaders + the deterministic synthetic sequence
   generator.

@@ -1,14 +1,14 @@
 """DataFrame-level operator library.
 
-* :mod:`asof`       — as-of joins (union+window with skew salting, and
-  broadcast timeline), backfill.
-* :mod:`windows`    — lag/lead/sessionize/rolling (row + event-time
-  RANGE frames) over (entity, ts).
+* :mod:`asof`       — the one as-of plan (union + window, backward or
+  forward, with tolerance), backfill, interpolation and grid resampling.
+* :mod:`windows`    — sessionize and rolling row/event-time RANGE frames
+  over (entity, ts).
 * :mod:`training`   — PIT training-set assembly: multi-feature as-of
-  composition (every shuffle feature in one fused union + window, broadcast
-  features map-only) and trailing/leading interval aggregates at
-  observation time (multi-horizon, multi-source, time-bucketed skew
-  handling) from one shared plan.
+  composition (every feature in one fused union + window) and
+  trailing/leading interval aggregates at observation time
+  (multi-horizon, multi-source, time-bucketed skew handling) from one
+  shared plan.
 * :mod:`sketches`   — mergeable sketches: HLL distinct counting, Count-
   Min frequencies (bit-exact numpy decoder), KLL approximate quantiles,
   Theta distinct sets with union/intersection/difference algebra

@@ -1,18 +1,13 @@
 """As-of joins and backfill — the point-in-time core of the engine.
 
-Vanilla Spark has no as-of join (SURVEY.md §4); two strategies are provided:
-
-* :func:`asof_join` — **union + window** (default): tag both sides, union,
-  and carry the most recent right-side values forward with
-  ``last(..., ignorenulls=True)`` over ``(keys) ORDER BY (ts, side)``.
-  ONE shuffle, fully distributed, no driver involvement; AQE handles mild
-  skew, and ``salt_buckets`` splits pathological hot entities (the right side
-  is replicated per salt so every bucket still sees the full artifact
-  timeline — correctness is preserved by construction).
-* :func:`asof_join_broadcast` — **broadcast timeline**: for a small right
-  side (artifact/dimension timelines), one sorted timeline array per key is
-  broadcast onto the left and the as-of element picked with JVM array
-  functions; ZERO shuffle on the left.
+Vanilla Spark has no as-of join (SURVEY.md §4). Every as-of pick here is one
+plan, :func:`_asof` — **union + window**: tag the left rows (side 0) and
+each right input (side ``i``), union them, and carry each side's most recent
+values forward with ``last(when(side == i, col), ignorenulls=True)`` over
+``(keys) ORDER BY (ts, side)``. ONE shuffle on the keys however many right
+inputs there are, fully distributed, no driver involvement; AQE handles mild
+skew. :func:`asof_join` is its one-side form and
+:func:`~.training.build_training_set_fused` its many-side form.
 
 Zero temporal leakage contract: ``direction='backward'`` matches the latest
 right row with ``right_ts <= left_ts`` — a row can never observe an artifact
@@ -21,18 +16,88 @@ versioned after its own timestamp.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.util import as_list as _as_list
+
 _TS = "__asof_ts"
 _SIDE = "__asof_side"
-_MATCHED = "__asof_matched_ts"
-_SALT = "__asof_salt"
 
 
-from ..functions.util import as_list as _as_list  # noqa: E402
+class _Side(NamedTuple):
+    """One right input of :func:`_asof`. ``cols`` maps each output column
+    to its source column in ``df``; ``tolerance`` (ts units) nulls a match
+    further away than the bound; ``matched`` names the output column for
+    the matched ``ts`` (``None``: not exposed)."""
+
+    df: DataFrame
+    ts: str
+    cols: dict[str, str]
+    tolerance: Column | int | float | None = None
+    matched: str | None = None
+
+
+def _asof(left: DataFrame, keys: list[str], left_ts: str,
+          sides: Sequence[_Side], direction: str) -> DataFrame:
+    """The one as-of plan: ``left`` plus, per side in order, its ``cols``
+    picked as of each left row's ``left_ts`` (then its ``matched`` column).
+
+    ``backward`` picks the latest side row with ``ts <= left_ts``,
+    ``forward`` the earliest with ``ts >= left_ts``; a side row at the left
+    row's instant always matches. One exchange, one sort and one Window
+    node for any number of sides. Output names are not checked for
+    collisions here — the callers do that with their own advice."""
+    left_types = {f.name: f.dataType for f in left.schema.fields}
+    # (output column, its type, its side) for every picked column
+    vals = []
+    for i, s in enumerate(sides, start=1):
+        fields = s.df.select(*s.cols.values()).schema.fields
+        vals += [(n, f.dataType, i) for n, f in zip(s.cols, fields)]
+
+    unioned = left.select(
+        "*", F.col(left_ts).alias(_TS), F.lit(0).alias(_SIDE),
+        *[F.lit(None).cast(t).alias(n) for n, t, _ in vals])
+    for i, s in enumerate(sides, start=1):
+        unioned = unioned.unionByName(s.df.select(
+            *[F.col(c) if c in keys else F.lit(None).cast(t).alias(c)
+              for c, t in left_types.items()],
+            F.col(s.ts).alias(_TS), F.lit(i).alias(_SIDE),
+            *[F.col(s.cols[n]).alias(n) if j == i
+              else F.lit(None).cast(t).alias(n) for n, t, j in vals]))
+
+    # a side row at the left row's instant must precede it
+    ts_order = F.col(_TS).asc() if direction == "backward" \
+        else F.col(_TS).desc()
+    w = (Window.partitionBy(*keys).orderBy(ts_order, F.col(_SIDE).desc())
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+    def pick(i: int, c: str) -> Column:
+        return F.last(F.when(F.col(_SIDE) == i, F.col(c)),
+                      ignorenulls=True).over(w)
+
+    filled = unioned.select(
+        "*", *[pick(i, n).alias(f"__asof_v_{n}") for n, _t, i in vals],
+        *[pick(i, _TS).alias(f"__asof_m_{i}")
+          for i in range(1, len(sides) + 1)],
+    ).where(F.col(_SIDE) == 0)
+
+    out = [F.col(c) for c in left_types]
+    for i, s in enumerate(sides, start=1):
+        matched = F.col(f"__asof_m_{i}")
+        values = [F.col(f"__asof_v_{n}") for n in s.cols]
+        if s.tolerance is not None:
+            ts, m = F.col(_TS).cast("double"), matched.cast("double")
+            gap = ts - m if direction == "backward" else m - ts
+            ok = matched.isNotNull() & (gap <= F.lit(s.tolerance))
+            values = [F.when(ok, v) for v in values]
+            matched = F.when(ok, matched)
+        out += [v.alias(n) for v, n in zip(values, s.cols)]
+        if s.matched:
+            out.append(matched.alias(s.matched))
+    return filled.select(*out)
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str] | str,
@@ -40,17 +105,15 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str] | str,
               value_cols: Sequence[str] | None = None,
               direction: str = "backward",
               tolerance: Column | int | float | None = None,
-              salt_buckets: int | None = None,
               matched_ts_col: str | None = None) -> DataFrame:
     """Attach, to every left row, the right row's ``value_cols`` as of the
-    left row's timestamp.
+    left row's timestamp — :func:`_asof` with one side.
 
     Parameters mirror ``pd.merge_asof``: ``direction`` is ``backward``
     (latest right ≤ left) or ``forward`` (earliest right ≥ left);
     ``tolerance`` (same units as the ts columns' numeric form) nulls out
-    matches further away than the bound. ``salt_buckets=S`` splits each key
-    into S sub-partitions for skew (left rows are hashed to one bucket,
-    right rows replicated to all S).
+    matches further away than the bound. ``matched_ts_col`` additionally
+    exposes the matched right ts.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction}")
@@ -59,133 +122,13 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str] | str,
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in on and c != right_ts]
     value_cols = _as_list(value_cols)
-
-    left_cols = left.columns
     for c in value_cols:
-        if c in left_cols:
+        if c in left.columns:
             raise ValueError(f"value column {c!r} collides with a left column;"
                              " rename it on the right side first")
-
-    r = right.select(
-        *[F.col(c) for c in on],
-        F.col(right_ts).alias(_TS),
-        F.lit(1).alias(_SIDE),
-        *[F.col(c) for c in value_cols],
-    )
-    l = left.select(  # noqa: E741
-        "*",
-        F.col(left_ts).alias(_TS),
-        F.lit(0).alias(_SIDE),
-        *[F.lit(None).cast(r.schema[c].dataType).alias(c) for c in value_cols],
-    )
-
-    # pad the right side with nulls for every left-only column so the two
-    # sides union by name
-    left_types = {f.name: f.dataType for f in left.schema.fields}
-    r = r.select(
-        *[F.lit(None).cast(left_types[c]).alias(c) if c not in on else F.col(c)
-          for c in left_cols],
-        F.col(_TS), F.col(_SIDE), *[F.col(c) for c in value_cols],
-    )
-
-    if salt_buckets and salt_buckets > 1:
-        # left rows land in one bucket each (hash of the full row ts keeps it
-        # deterministic); right rows are replicated into every bucket
-        l = l.withColumn(_SALT, F.pmod(F.xxhash64(F.col(_TS), *on),
-                                       F.lit(salt_buckets)).cast("int"))
-        r = r.withColumn(
-            _SALT, F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
-        part_keys = on + [_SALT]
-    else:
-        part_keys = on
-
-    unioned = l.unionByName(r)
-
-    if direction == "backward":
-        # right row at equal ts must precede the left row
-        order = [F.col(_TS).asc(), F.col(_SIDE).desc()]
-    else:
-        order = [F.col(_TS).desc(), F.col(_SIDE).desc()]
-    w = (Window.partitionBy(*part_keys).orderBy(*order)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-
-    filled = unioned.select(
-        "*",
-        *[F.last(F.when(F.col(_SIDE) == 1, F.col(c)), ignorenulls=True)
-          .over(w).alias(f"__filled_{c}") for c in value_cols],
-        F.last(F.when(F.col(_SIDE) == 1, F.col(_TS)), ignorenulls=True)
-        .over(w).alias(_MATCHED),
-    ).where(F.col(_SIDE) == 0)
-
-    if tolerance is not None:
-        gap = (F.col(_TS).cast("double") - F.col(_MATCHED).cast("double")) \
-            if direction == "backward" else \
-            (F.col(_MATCHED).cast("double") - F.col(_TS).cast("double"))
-        in_tol = F.col(_MATCHED).isNotNull() & (gap <= F.lit(tolerance))
-        value_exprs = [F.when(in_tol, F.col(f"__filled_{c}")).alias(c)
-                       for c in value_cols]
-        matched_expr = F.when(in_tol, F.col(_MATCHED))
-    else:
-        value_exprs = [F.col(f"__filled_{c}").alias(c) for c in value_cols]
-        matched_expr = F.col(_MATCHED)
-
-    out = filled.select(
-        *[F.col(c) for c in left_cols],
-        *value_exprs,
-        *([matched_expr.alias(matched_ts_col)] if matched_ts_col else []),
-    )
-    return out
-
-
-def asof_join_broadcast(left: DataFrame, right: DataFrame,
-                        on: Sequence[str] | str, left_ts: str = "ts",
-                        right_ts: str | None = None,
-                        value_cols: Sequence[str] | None = None,
-                        direction: str = "backward",
-                        tolerance: float | None = None) -> DataFrame:
-    """As-of join for a SMALL right side: collapse the right side into one
-    sorted timeline array per key, broadcast-hash-join it onto the left, and
-    binary-search-equivalent pick the as-of element with JVM array functions.
-
-    ZERO shuffle on the left side (the broadcast join is map-side) — the
-    correct plan when the right side is a small dimension timeline; skew on
-    the left is irrelevant because nothing repartitions. A large right side
-    needs :func:`asof_join` instead.
-    """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction}")
-    on = _as_list(on)
-    right_ts = right_ts or left_ts
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in on and c != right_ts]
-    value_cols = _as_list(value_cols)
-
-    timeline = (right
-                .groupBy(*on)
-                .agg(F.array_sort(F.collect_list(F.struct(
-                    F.col(right_ts).alias("__vf"),
-                    *[F.col(c).alias(c) for c in value_cols],
-                ))).alias("__timeline")))
-
-    joined = left.join(F.broadcast(timeline), on=on, how="left")
-    if direction == "backward":
-        matches = F.filter(F.col("__timeline"),
-                           lambda x: x["__vf"] <= F.col(left_ts))
-        pick = F.try_element_at(matches, F.lit(-1))
-    else:
-        matches = F.filter(F.col("__timeline"),
-                           lambda x: x["__vf"] >= F.col(left_ts))
-        pick = F.try_element_at(matches, F.lit(1))
-    if tolerance is not None:
-        gap = (F.col(left_ts).cast("double") - pick["__vf"].cast("double")) \
-            if direction == "backward" else \
-            (pick["__vf"].cast("double") - F.col(left_ts).cast("double"))
-        pick = F.when(gap <= F.lit(tolerance), pick)
-    out = joined.select(
-        *[F.col(c) for c in left.columns],
-        *[pick[c].alias(c) for c in value_cols],
-    )
-    return out
+    side = _Side(right, right_ts, {c: c for c in value_cols}, tolerance,
+                 matched_ts_col)
+    return _asof(left, on, left_ts, [side], direction)
 
 
 def backfill(df: DataFrame, cols: Sequence[str] | str,
@@ -221,8 +164,7 @@ def interpolate_linear(labels: DataFrame, events: DataFrame,
                        on: Sequence[str] | str,
                        label_ts: str = "ts_ms", event_ts: str | None = None,
                        value_col: str = "value",
-                       out_col: str | None = None,
-                       salt_buckets: int | None = None) -> DataFrame:
+                       out_col: str | None = None) -> DataFrame:
     """Time-weighted linear interpolation of ``value_col`` at every label
     timestamp: blend the nearest event before (t0, v0) and after (t1, v1)
     the label instant as
@@ -235,8 +177,7 @@ def interpolate_linear(labels: DataFrame, events: DataFrame,
 
     Built as the composition of the two tested as-of directions (backward
     + forward, :func:`asof_join`) — two entity-key union+window passes, no
-    new join machinery; ``salt_buckets`` passes through to both for
-    skewed entities.  The blend itself is a fixed-order double expression
+    new join machinery.  The blend itself is a fixed-order double expression
     (mirrorable bit-for-bit in a SQL oracle)."""
     event_ts = event_ts or label_ts
     # drop null-valued observations UP FRONT: asof_join fills values with
@@ -251,12 +192,12 @@ def interpolate_linear(labels: DataFrame, events: DataFrame,
                                     F.col("__ip_v").alias("__ip_v0")),
                   on, left_ts=label_ts, right_ts=event_ts,
                   value_cols=["__ip_v0"], direction="backward",
-                  salt_buckets=salt_buckets, matched_ts_col="__ip_t0")
+                  matched_ts_col="__ip_t0")
     f = asof_join(b, ev.select(*_as_list(on), F.col(event_ts),
                                F.col("__ip_v").alias("__ip_v1")),
                   on, left_ts=label_ts, right_ts=event_ts,
                   value_cols=["__ip_v1"], direction="forward",
-                  salt_buckets=salt_buckets, matched_ts_col="__ip_t1")
+                  matched_ts_col="__ip_t1")
     ts = F.col(label_ts).cast("double")
     t0 = F.col("__ip_t0").cast("double")
     t1 = F.col("__ip_t1").cast("double")
@@ -273,8 +214,7 @@ def interpolate_linear(labels: DataFrame, events: DataFrame,
 
 def resample_to_grid(df: DataFrame, on: Sequence[str] | str,
                      ts_col: str, value_col: str, step: int,
-                     fill: str = "locf",
-                     salt_buckets: int | None = None) -> DataFrame:
+                     fill: str = "locf") -> DataFrame:
     """Regularize each entity's irregular series onto a fixed time grid —
     the gap-filled ``SAMPLE BY`` / ``time_bucket_gapfill`` shape every
     time-series feature pipeline needs before windowed models.
@@ -291,9 +231,8 @@ def resample_to_grid(df: DataFrame, on: Sequence[str] | str,
     Scale shape: one entity-cardinality aggregation for the spans, a JVM
     ``sequence``+``explode`` for the grid (no Python, grid size bounded
     by span/step per entity), then the as-of machinery — the same
-    union+window single shuffle as every other PIT operator here, with
-    ``salt_buckets`` passed through for hot entities. ``ts_col`` must be
-    numeric (epoch ms/seconds)."""
+    union+window single shuffle as every other PIT operator here.
+    ``ts_col`` must be numeric (epoch ms/seconds)."""
     keys = _as_list(on)
     # null observations carry nothing — filter them BEFORE the span
     # aggregation too, so an entity's grid is shaped only by rows that can
@@ -316,11 +255,10 @@ def resample_to_grid(df: DataFrame, on: Sequence[str] | str,
                                                    f"{value_col}_grid"),
                         keys, left_ts=ts_col, right_ts=ts_col,
                         value_cols=[f"{value_col}_grid"],
-                        direction="backward", salt_buckets=salt_buckets)
+                        direction="backward")
         return out
     if fill != "linear":
         raise ValueError(f"fill must be locf|linear, got {fill!r}")
     return interpolate_linear(grid, ev, keys, label_ts=ts_col,
                               value_col=value_col,
-                              out_col=f"{value_col}_grid",
-                              salt_buckets=salt_buckets)
+                              out_col=f"{value_col}_grid")

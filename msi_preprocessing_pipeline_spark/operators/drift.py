@@ -299,7 +299,7 @@ def cusum_changepoint(df: DataFrame, group_cols, order_col: str,
     (prefix sum + row_number) → group aggregate + rank-1 filter.  The
     window partitions by entity, so no global sort; skewed entities are
     the caller's salting problem only if a single entity's history
-    outgrows one task (the ``windows.rolling`` caveat).
+    outgrows one task (the ``windows.rolling_range`` caveat).
     """
     from ..functions.util import as_list, trunc_div
 

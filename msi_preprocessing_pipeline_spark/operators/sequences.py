@@ -16,7 +16,7 @@ tables.
 Scale notes: each operator is ONE window specification (one shuffle on
 the entity key) or one map-side-combined aggregation; transition
 matrices are bounded by |types|², never by rows.  Skewed entities hit
-the same single-entity window limit as ``windows.rolling`` — salt or
+the same single-entity window limit as ``windows.rolling_range`` — salt or
 bucket upstream if one entity holds a meaningful fraction of the corpus.
 """
 

@@ -114,6 +114,14 @@ def _uniform_list_array(mat: np.ndarray) -> "pa.ListArray":
 # The per-row spectrum chain. The fit stages and the serve UDF call these and
 # nothing else per row, so serving applies exactly the fit's arithmetic.
 
+def _row_error(batch: "pa.RecordBatch", i: int, reason: str) -> ValueError:
+    """The error for row ``i`` of ``batch``, naming its doc_id and source."""
+    names = batch.schema.names
+    doc_id, src = (batch.column(names.index(c))[i].as_py()
+                   for c in ("doc_id", "source"))
+    return ValueError(f"row doc_id={doc_id!r} source={src!r}: {reason}")
+
+
 def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
              new_axis: np.ndarray, cfg: PipelineConfig,
              rows: Sequence[int]) -> np.ndarray:
@@ -134,11 +142,9 @@ def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
         ax = axes.get(srcs[i])
         n_tok = 0 if nulls[i] else int(offs[i + 1] - offs[i])
         if ax is None or n_tok != ax.size:
-            doc_id = batch.column(names.index("doc_id"))[i].as_py()
-            reason = ("no m/z axis artifact for the source" if ax is None
-                      else f"{n_tok} tokens != source axis length {ax.size}")
-            raise ValueError(
-                f"row doc_id={doc_id!r} source={srcs[i]!r}: {reason}")
+            raise _row_error(
+                batch, i, "no m/z axis artifact for the source" if ax is None
+                else f"{n_tok} tokens != source axis length {ax.size}")
         x = axis_k.resample_row(new_axis, ax,
                                 flat[offs[i]:offs[i + 1]].astype(float))
         out[j] = baseline_k.remove_baseline(
@@ -474,7 +480,8 @@ def serve_features(df: DataFrame, artifacts: Sequence[ArtifactSet],
     its rows run :func:`_spectra` → :func:`_aligned` → :func:`_tic_scaled` →
     convolve → merge against that version. A row with null ``ts`` or a
     ``ts`` before the first version gets null ``artifact_version`` and null
-    features — never a leaked artifact.
+    features — never a leaked artifact. A row whose spectrum sums to zero
+    raises ``ValueError`` naming its ``doc_id``, as :func:`_spectra` does.
     """
     spark = df.sparkSession
     timeline = sorted(artifacts, key=lambda a: (a.valid_from_ts, a.version))
@@ -498,10 +505,16 @@ def serve_features(df: DataFrame, artifacts: Sequence[ArtifactSet],
             features: list = [None] * b.num_rows
             for pos, idxs in by_pos.items():
                 art, bands = pairs[pos]
-                rows = _tic_scaled(
-                    _aligned(_spectra(b, axes, art.mz_axis, config, idxs),
-                             art.pafft_reference, art.mz_axis, config),
-                    art.tic_reference_tic)
+                aligned = _aligned(
+                    _spectra(b, axes, art.mz_axis, config, idxs),
+                    art.pafft_reference, art.mz_axis, config)
+                try:
+                    rows = _tic_scaled(aligned, art.tic_reference_tic)
+                except FloatingPointError as e:
+                    zero = np.flatnonzero(aligned.sum(axis=1) == 0)[0]
+                    raise _row_error(
+                        b, idxs[zero], "spectrum sums to zero; it cannot "
+                        "be rescaled to the reference TIC") from e
                 merged = merge_k.apply_merging(
                     convolve_k.featurize_batch(rows, bands),
                     art.merge_starts, art.merge_lengths)

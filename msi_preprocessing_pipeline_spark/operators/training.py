@@ -7,12 +7,10 @@ as "label spine joined, as of each observation timestamp, against every
 feature source" (reference workflow: pipeline/_preprocessing.py:24-77, where
 every stage consumes the artifacts fitted strictly before it).
 
-Scale shapes, pick per workload:
-* :func:`build_training_set` — every ``shuffle`` feature through
-  :func:`build_training_set_fused`, every ``broadcast`` feature as a
-  map-only broadcast timeline join (result-identical strategies);
-* :func:`build_training_set_fused` — every backward feature in ONE
-  union + one fused window (1 shuffle total vs F);
+Scale shapes:
+* :func:`build_training_set_fused` — every feature table matched backward
+  in ONE union + one fused window (1 shuffle total vs F), the many-side
+  form of the one as-of plan, :func:`~.asof._asof`;
 * :func:`pit_window_agg` / :func:`pit_window_agg_multi` — trailing
   (feature) or leading (label) interval aggregates at each observation,
   any number of horizons/sources/aggregates in one Window node, hot
@@ -31,7 +29,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .asof import asof_join_broadcast
+from .asof import _asof, _Side
 from ..functions.util import as_list as _as_list
 
 
@@ -44,16 +42,9 @@ class FeatureSpec:
     output columns (``<prefix><value_col>``); ``matched_ts`` additionally
     exposes the matched feature timestamp as ``<prefix>ts`` so staleness is
     auditable (and temporal leakage testable: matched ts <= spine ts).
-    ``tolerance`` (ts units) nulls a match older than the bound.
-
-    ``strategy`` picks the physical as-of plan per feature table:
-    ``'shuffle'`` (union + window — all shuffle specs share ONE exchange
-    of spine+features on the entity key, :func:`build_training_set_fused`),
-    ``'broadcast'`` (per-key timeline arrays broadcast onto the spine — ZERO
-    shuffle on the spine; the right plan when the feature table is
-    dimension-sized, e.g. model/artifact timelines, what keeps a
-    10^12-row spine map-only, and the plan that runs on a streaming spine).
-    Both are result-identical (tested).
+    ``tolerance`` (ts units) nulls a match older than the bound. Every spec
+    of one :func:`build_training_set_fused` call shares its one exchange of
+    spine + features on the entity key.
     """
 
     df: DataFrame
@@ -62,54 +53,6 @@ class FeatureSpec:
     prefix: str
     tolerance: float | int | None = None
     matched_ts: bool = True
-    strategy: str = "shuffle"
-
-
-def _feature_columns(spec: FeatureSpec) -> list[str]:
-    """The output columns ``spec`` adds to the spine, in order."""
-    return [f"{spec.prefix}{c}" for c in spec.value_cols] + \
-        ([f"{spec.prefix}ts"] if spec.matched_ts else [])
-
-
-def build_training_set(spine: DataFrame, on: Sequence[str] | str,
-                       spine_ts: str,
-                       features: Sequence[FeatureSpec]) -> DataFrame:
-    """Attach every :class:`FeatureSpec` to ``spine`` as of ``spine_ts``.
-
-    Each feature's columns come out as ``<prefix><col>`` (plus
-    ``<prefix>ts`` when ``matched_ts``) after the spine's columns, in
-    ``features`` order, so independently-built feature tables cannot
-    collide. All ``strategy='shuffle'`` specs go to
-    :func:`build_training_set_fused` in one call (one exchange however many
-    there are); each ``'broadcast'`` spec is one
-    :func:`asof_join_broadcast` on top. Point-in-time correctness per
-    feature is the backward as-of contract: only feature rows with
-    ``feature.ts <= spine.ts`` are visible — zero temporal leakage.
-    """
-    for spec in features:
-        if spec.strategy not in ("shuffle", "broadcast"):
-            raise ValueError(
-                f"strategy must be shuffle|broadcast, "
-                f"got {spec.strategy!r}")
-    shuffled = [s for s in features if s.strategy == "shuffle"]
-    out = (build_training_set_fused(spine, on, spine_ts, shuffled)
-           if shuffled else spine)
-    for spec in features:
-        if spec.strategy != "broadcast":
-            continue
-        renamed = spec.df
-        for c in spec.value_cols:
-            renamed = renamed.withColumnRenamed(c, f"{spec.prefix}{c}")
-        # the broadcast plan carries the matched timestamp as a regular
-        # value column duplicated from the feature's ts
-        if spec.matched_ts:
-            renamed = renamed.withColumn(f"{spec.prefix}ts",
-                                         F.col(spec.ts_col))
-        out = asof_join_broadcast(
-            out, renamed, on=on, left_ts=spine_ts, right_ts=spec.ts_col,
-            value_cols=_feature_columns(spec), tolerance=spec.tolerance)
-    return out.select(*spine.columns,
-                      *[c for s in features for c in _feature_columns(s)])
 
 
 def pit_window_agg(spine: DataFrame, events: DataFrame,
@@ -170,87 +113,37 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
 def build_training_set_fused(spine: DataFrame, on: Sequence[str] | str,
                              spine_ts: str,
                              features: Sequence[FeatureSpec]) -> DataFrame:
-    """All-backward multi-feature PIT assembly in ONE shuffle — the plan
-    behind :func:`build_training_set`'s ``shuffle`` strategy.
+    """Attach every :class:`FeatureSpec` to ``spine`` as of ``spine_ts``,
+    all in ONE shuffle.
 
     One as-of join per feature table would exchange the (growing) spine
     once PER feature — F features cost F shuffles of the biggest relation.
     This plan unions the spine with EVERY feature source at once (each row
     tagged with its source index) and computes all as-of picks in a single
-    entity-partitioned window:
+    entity-partitioned window (:func:`~.asof._asof`):
     ``last(when(side == i, col), ignore nulls)`` per feature column. One
     exchange + one sort + one fused Window node total; at 10^12 spine rows
     the saving is (F-1) full shuffles.
 
-    Every spec is matched backward on the spine keys ``on``. Result-identical
-    to per-feature :func:`~.asof.asof_join` calls (tested), including
-    per-spec ``tolerance`` and ``<prefix>ts`` audit columns.
+    Each feature's columns come out as ``<prefix><col>`` (plus
+    ``<prefix>ts`` when ``matched_ts``) after the spine's columns, in
+    ``features`` order, so independently-built feature tables cannot
+    collide. Every spec is matched backward on the spine keys ``on``: only
+    feature rows with ``feature.ts <= spine.ts`` are visible — zero
+    temporal leakage. Per-spec ``tolerance`` nulls stale matches.
     """
-    keys = _as_list(on)
-    spine_cols = spine.columns
-    spine_types = {f.name: f.dataType for f in spine.schema.fields}
-    # (out_name, dtype, side_idx) for every exposed feature column
-    plan = []
-    for i, spec in enumerate(features, start=1):
-        for c in spec.value_cols:
-            plan.append((f"{spec.prefix}{c}",
-                         spec.df.select(F.col(c)).schema[0].dataType, i))
-    names = [n for s in features for n in _feature_columns(s)]
+    names = [f"{s.prefix}{c}" for s in features
+             for c in [*s.value_cols, *(["ts"] if s.matched_ts else [])]]
     dupes = {n for n in names if names.count(n) > 1} | \
-        (set(names) & set(spine_cols))
+        (set(names) & set(spine.columns))
     if dupes:
         raise ValueError(
             f"feature output columns collide: {sorted(dupes)} — give each "
             "FeatureSpec a distinct prefix")
-
-    val_null = [(n, t) for (n, t, _i) in plan]
-    sp2 = spine.select(
-        "*", F.col(spine_ts).alias("__ts"), F.lit(0).alias("__side"),
-        *[F.lit(None).cast(t).alias(n) for n, t in val_null])
-    unioned = sp2
-    for i, spec in enumerate(features, start=1):
-        mine = {f"{spec.prefix}{c}": c for c in spec.value_cols}
-        branch = spec.df.select(
-            *[F.col(k) if k in keys else F.lit(None)
-              .cast(spine_types[k]).alias(k) for k in spine_cols],
-            F.col(spec.ts_col).alias("__ts"), F.lit(i).alias("__side"),
-            *[F.col(mine[n]).alias(n) if n in mine
-              else F.lit(None).cast(t).alias(n) for n, t in val_null])
-        unioned = unioned.unionByName(branch)
-
-    w = (Window.partitionBy(*keys)
-         .orderBy(F.col("__ts").asc(), F.col("__side").desc())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    picks, audit = {}, {}
-    for n, _t, i in plan:
-        picks[n] = F.last(F.when(F.col("__side") == i, F.col(n)),
-                          ignorenulls=True).over(w)
-    for i, spec in enumerate(features, start=1):
-        audit[i] = F.last(F.when(F.col("__side") == i, F.col("__ts")),
-                          ignorenulls=True).over(w)
-
-    filled = unioned.select(
-        "*",
-        *[picks[n].alias(f"__p_{n}") for n, _t, _i in plan],
-        *[audit[i].alias(f"__m_{i}") for i in audit],
-    ).where(F.col("__side") == 0)
-
-    out_exprs = [F.col(c) for c in spine_cols]
-    for i, spec in enumerate(features, start=1):
-        matched = F.col(f"__m_{i}")
-        if spec.tolerance is not None:
-            gap = (F.col("__ts").cast("double") - matched.cast("double"))
-            ok = matched.isNotNull() & (gap <= F.lit(spec.tolerance))
-            val = lambda n, ok=ok: F.when(ok, F.col(f"__p_{n}"))  # noqa: E731
-            matched = F.when(ok, matched)
-        else:
-            val = lambda n: F.col(f"__p_{n}")  # noqa: E731
-        for c in spec.value_cols:
-            n = f"{spec.prefix}{c}"
-            out_exprs.append(val(n).alias(n))
-        if spec.matched_ts:
-            out_exprs.append(matched.alias(f"{spec.prefix}ts"))
-    return filled.select(*out_exprs)
+    return _asof(spine, _as_list(on), spine_ts, [
+        _Side(s.df, s.ts_col, {f"{s.prefix}{c}": c for c in s.value_cols},
+              s.tolerance, f"{s.prefix}ts" if s.matched_ts else None)
+        for s in features], "backward")
 
 
 @dataclass

@@ -1,4 +1,4 @@
-"""Window operators over (entity, ts): lag/lead, sessionize, rolling stats.
+"""Window operators over (entity, ts): sessionize, rolling stats.
 
 All are thin declarative shapes over ``Window.partitionBy(entity)
 .orderBy(ts)`` — one shuffle on the entity key, whole-stage-codegen'd, no
@@ -14,20 +14,6 @@ from pyspark.sql import functions as F
 
 
 from ..functions.util import as_list as _as_list  # noqa: E402
-
-
-def with_lag(df: DataFrame, col: str, partition_by, order_by: str = "ts",
-             offset: int = 1, out_col: str | None = None) -> DataFrame:
-    w = Window.partitionBy(*_as_list(partition_by)).orderBy(order_by)
-    return df.withColumn(out_col or f"{col}_lag{offset}",
-                         F.lag(col, offset).over(w))
-
-
-def with_lead(df: DataFrame, col: str, partition_by, order_by: str = "ts",
-              offset: int = 1, out_col: str | None = None) -> DataFrame:
-    w = Window.partitionBy(*_as_list(partition_by)).orderBy(order_by)
-    return df.withColumn(out_col or f"{col}_lead{offset}",
-                         F.lead(col, offset).over(w))
 
 
 def sessionize(df: DataFrame, partition_by, ts_col: str = "ts",
@@ -71,18 +57,6 @@ def session_stats(df: DataFrame, partition_by, ts_col: str = "ts",
     return sess.groupBy(*keys, "session_id").agg(*aggs)
 
 
-def rolling(df: DataFrame, col: str, partition_by, order_by: str = "ts",
-            window_rows: int = 10, fns=("avg",)) -> DataFrame:
-    """Rolling row-frame statistics (trailing ``window_rows`` rows)."""
-    w = (Window.partitionBy(*_as_list(partition_by)).orderBy(order_by)
-         .rowsBetween(-(window_rows - 1), Window.currentRow))
-    out = df
-    for fn in fns:
-        out = out.withColumn(f"{col}_{fn}_{window_rows}",
-                             getattr(F, fn)(F.col(col)).over(w))
-    return out
-
-
 def rolling_range(df: DataFrame, col: str, partition_by,
                   order_col: str = "ts_ms", preceding: int = 3_600_000,
                   fns=("count", "sum", "avg"),
@@ -91,7 +65,7 @@ def rolling_range(df: DataFrame, col: str, partition_by,
     of ``order_col`` (inclusive of the current row's instant), e.g. "events
     and value sum/avg in the last hour per user".
 
-    Unlike :func:`rolling` (row frame), a RANGE frame is tie-insensitive:
+    Unlike a row frame, a RANGE frame is tie-insensitive:
     all rows sharing the current timestamp are peers and always included,
     so the result is deterministic without a tiebreak column. ``order_col``
     must be numeric (epoch ms/seconds); one shuffle on the entity key, the

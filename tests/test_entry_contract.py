@@ -3,6 +3,8 @@
 shape, order-insensitive values) — the same comparison the round driver does,
 at sf0.001 for speed (the driver uses sf0.01)."""
 
+from pathlib import Path
+
 import duckdb
 import numpy as np
 import pandas as pd
@@ -92,7 +94,7 @@ def test_query_counts_match_docs():
     doc = entrymod.__doc__
     assert f"{n_q} queries" in doc, (n_q, "not in entry docstring")
     assert f"{n_o} with exact DuckDB oracles" in doc, (n_o, doc)
-    readme = open("/root/repo/README.md").read()
+    readme = (Path(__file__).resolve().parents[1] / "README.md").read_text()
     assert f"{n_q} queries" in readme
     # every query has an oracle entry (rows-only queries would show up here)
     assert sorted(entrymod.oracle_sql()) == sorted(entrymod.queries())

@@ -203,6 +203,23 @@ def test_unknown_source_row_error_names_the_row(table, axes):
         pipe.transform(unknown, [art]).collect()
 
 
+def test_zero_sum_row_error_names_the_row(table, axes):
+    """An all-zero row fails the serve with a ValueError naming its doc_id
+    — not a bare FloatingPointError, and never NaN features."""
+    pipe = FeaturePipeline(table.sparkSession, axes, CFG)
+    bad_id, bad_src = table.orderBy(F.desc("doc_id")).select(
+        "doc_id", "source").first()
+    zeroed = table.withColumn(
+        "tokens", F.when(F.col("doc_id") == bad_id,
+                         F.transform("tokens", lambda _: F.lit(0)))
+        .otherwise(F.col("tokens")))
+    art = pipe.fit(table)
+    with pytest.raises(Exception, match=(
+            rf"ValueError: row doc_id={re.escape(repr(bad_id))} "
+            rf"source={re.escape(repr(bad_src))}: spectrum sums to zero")):
+        pipe.transform(zeroed, [art]).collect()
+
+
 def test_serve_version_pick(spark):
     """Each row is served under the greatest (valid_from_ts, version) with
     valid_from_ts <= ts, whatever order the versions are passed in; a null

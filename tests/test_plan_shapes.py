@@ -1,12 +1,13 @@
 """Physical plan shape assertions — the scale contract, checked in CI.
 
 These guard the properties that matter at 100 TB: filters/projections reach
-the parquet scan, small sides broadcast, the serving as-of path is
-shuffle-free, and aggregations are partial+final.
+the parquet scan, small sides broadcast, the as-of plan shuffles once, the
+serving path is shuffle-free, and aggregations are partial+final.
 """
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,33 +35,21 @@ def test_filter_and_projection_pushdown(spark):
     assert "l_extendedprice" not in read_schema
 
 
-def test_broadcast_asof_join_is_shuffle_free(spark):
-    from msi_preprocessing_pipeline_spark.operators.asof import (
-        asof_join_broadcast)
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet") \
-        .select("event_id", "user_id", F.unix_millis(
-            F.col("ts").cast("timestamp")).alias("ms"))
-    right = ev.groupBy("user_id").agg(F.min("ms").alias("vf")) \
-        .withColumn("payload", F.lit(1.0))
-    joined = asof_join_broadcast(ev, right, on="user_id", left_ts="ms",
-                                 right_ts="vf", value_cols=["payload"])
-    plan = plan_of(joined, "simple")
-    assert "BroadcastHashJoin" in plan
-    # the LEFT (row) side must not shuffle: the only exchanges allowed are
-    # the broadcast itself and the tiny right-side aggregation
-    left_shuffles = [
-        ln for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "user_id" in ln
-        and "vf" not in ln
-    ]
-    # right-side agg shuffles on user_id (tiny); verify the join input scan
-    # path has no exchange between the parquet scan and the join
-    join_idx = plan.index("BroadcastHashJoin")
-    scan_section = plan[join_idx:]
-    assert "Exchange hashpartitioning" not in scan_section.split(
-        "BroadcastExchange")[0]
-    _ = left_shuffles
+@pytest.mark.parametrize("query", ["asof_click_purchase",
+                                   "asof_forward_next_purchase",
+                                   "training_set_pit"])
+def test_asof_plan_is_one_union_and_one_window(spark, query):
+    """The as-of plan — backward and forward ``asof_join``, and
+    ``build_training_set_fused`` with two feature specs — is one Union
+    sorted and windowed once behind ONE entity-hash exchange."""
+    import __spark_entry__ as em
+    out = em.queries()[query](spark, SF_DIR)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    counts = {node: len(re.findall(pattern, plan)) for node, pattern in
+              [("Exchange", r"Exchange hashpartitioning"),
+               ("Sort", r"\bSort \["), ("Window", r"\bWindow \["),
+               ("Union", r"\bUnion\b")]}
+    assert counts == {"Exchange": 1, "Sort": 1, "Window": 1, "Union": 1}
 
 
 def test_small_dim_join_broadcasts(spark):
@@ -243,24 +232,6 @@ def test_rolling_range_single_window_single_exchange(spark):
                    "simple")
     assert plan.count("+- Window") == 1
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_training_set_broadcast_spine_no_exchange(spark):
-    """Broadcast-strategy training set: the spine side must see no hash
-    exchange, no sort-merge join and no window — map-only at any scale."""
-    from msi_preprocessing_pipeline_spark.operators.training import (
-        FeatureSpec, build_training_set)
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    spine = ev.select("event_id", "user_id", "ts", "value")
-    feat = ev.select("user_id", F.col("ts").alias("fts"),
-                     F.col("value").alias("fv"))
-    out = build_training_set(
-        spine, on="user_id", spine_ts="ts",
-        features=[FeatureSpec(feat, ts_col="fts", value_cols=["fv"],
-                              prefix="f_", strategy="broadcast")])
-    plan = plan_of(out, "simple")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan and "Window" not in plan
 
 
 def test_mixture_sample_is_map_only(spark):

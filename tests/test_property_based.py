@@ -3,7 +3,8 @@ and the as-of join."""
 
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, Phase, given, settings
 from hypothesis import strategies as st
 
 from msi_preprocessing_pipeline_spark.kernels import merge, stats
@@ -105,6 +106,84 @@ def test_asof_property_random_tables(spark):
         ).sort_values("rid").reset_index(drop=True)
         pd.testing.assert_series_equal(got["val"], exp["val"],
                                        check_names=False)
+
+
+# entities x a narrow ts range: duplicate timestamps within the left side
+# and ties between left and right rows are common. Right rows are unique per
+# (entity, ts) — with two right rows at one instant the as-of pick is
+# ambiguous in any engine.
+_entity = st.sampled_from(["a", "b", "c"])
+_instant = st.integers(min_value=0, max_value=40)
+_left_rows = st.lists(st.tuples(_entity, _instant), min_size=1, max_size=40)
+_right_rows = st.lists(st.tuples(_entity, _instant,
+                                 st.integers(min_value=-999, max_value=999)),
+                       max_size=30, unique_by=lambda r: r[:2])
+_tolerance = st.none() | st.integers(min_value=0, max_value=10)
+# each example is a Spark job: a failure reports the example as found,
+# since shrinking it would run hundreds more jobs
+_NO_SHRINK = (Phase.explicit, Phase.reuse, Phase.generate)
+
+
+def _merge_asof_reference(left, right, direction, tolerance):
+    """``pd.merge_asof`` of ``right`` (k, vf, val) onto ``left`` (k, ts):
+    the matched ``(val, vf)`` per left row, in left order."""
+    lp = pd.DataFrame(left, columns=["k", "ts"]).astype({"ts": "int64"})
+    lp["rid"] = np.arange(len(lp))
+    rp = pd.DataFrame(right, columns=["k", "vf", "val"]).astype(
+        {"k": "object", "vf": "int64", "val": "int64"})
+    out = pd.merge_asof(lp.sort_values("ts", kind="mergesort"),
+                        rp.sort_values("vf", kind="mergesort"),
+                        left_on="ts", right_on="vf", by="k",
+                        direction=direction, tolerance=tolerance)
+    out = out.sort_values("rid")
+    as_int = lambda x: None if pd.isna(x) else int(x)  # noqa: E731
+    return [(as_int(v), as_int(t)) for v, t in zip(out["val"], out["vf"])]
+
+
+def _spark_frames(spark, left, *rights):
+    lf = spark.createDataFrame([(i, k, t) for i, (k, t) in enumerate(left)],
+                               "rid long, k string, ts long")
+    return [lf] + [spark.createDataFrame(r, "k string, vf long, val long")
+                   for r in rights]
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward"])
+@given(left=_left_rows, right=_right_rows, tolerance=_tolerance)
+@settings(max_examples=15, deadline=None, phases=_NO_SHRINK)
+def test_asof_join_matches_merge_asof(spark, direction, left, right,
+                                      tolerance):
+    from msi_preprocessing_pipeline_spark.operators.asof import asof_join
+
+    lf, rf = _spark_frames(spark, left, right)
+    got = asof_join(lf, rf, on="k", left_ts="ts", right_ts="vf",
+                    value_cols=["val"], direction=direction,
+                    tolerance=tolerance, matched_ts_col="matched")
+    assert got.columns == ["rid", "k", "ts", "val", "matched"]
+    rows = sorted(got.collect(), key=lambda r: r["rid"])
+    assert [(r["val"], r["matched"]) for r in rows] == \
+        _merge_asof_reference(left, right, direction, tolerance)
+
+
+@given(spine=_left_rows, fa=_right_rows, fb=_right_rows,
+       tolerance=_tolerance)
+@settings(max_examples=15, deadline=None, phases=_NO_SHRINK)
+def test_fused_training_set_matches_merge_asof(spark, spine, fa, fb,
+                                               tolerance):
+    from msi_preprocessing_pipeline_spark.operators.training import (
+        FeatureSpec, build_training_set_fused)
+
+    sf, af, bf = _spark_frames(spark, spine, fa, fb)
+    got = build_training_set_fused(sf, on="k", spine_ts="ts", features=[
+        FeatureSpec(af, "vf", ["val"], "fa_"),
+        FeatureSpec(bf.withColumnRenamed("val", "b"), "vf", ["b"], "fb_",
+                    tolerance=tolerance)])
+    assert got.columns == ["rid", "k", "ts", "fa_val", "fa_ts", "fb_b",
+                           "fb_ts"]
+    rows = sorted(got.collect(), key=lambda r: r["rid"])
+    assert [(r["fa_val"], r["fa_ts"]) for r in rows] == \
+        _merge_asof_reference(spine, fa, "backward", None)
+    assert [(r["fb_b"], r["fb_ts"]) for r in rows] == \
+        _merge_asof_reference(spine, fb, "backward", tolerance)
 
 
 @given(st.text(min_size=0, max_size=400),

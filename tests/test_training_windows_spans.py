@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from msi_preprocessing_pipeline_spark.operators.dedup import (
     duplicate_spans, positional_word_grams)
 from msi_preprocessing_pipeline_spark.operators.training import (
-    FeatureSpec, build_training_set)
+    FeatureSpec, build_training_set_fused)
 from msi_preprocessing_pipeline_spark.operators.windows import rolling_range
 
 
@@ -33,7 +33,7 @@ def pit_frames(spark):
 
 def test_training_set_pit_values(pit_frames):
     spine, clicks, views = pit_frames
-    out = build_training_set(
+    out = build_training_set_fused(
         spine, on="user_id", spine_ts="ts",
         features=[
             FeatureSpec(clicks, ts_col="ms", value_cols=["value"],
@@ -57,7 +57,7 @@ def test_training_set_pit_values(pit_frames):
 
 def test_training_set_zero_temporal_leakage(pit_frames):
     spine, clicks, views = pit_frames
-    out = build_training_set(
+    out = build_training_set_fused(
         spine, on="user_id", spine_ts="ts",
         features=[FeatureSpec(clicks, ts_col="ms", value_cols=["value"],
                               prefix="click_"),
@@ -161,35 +161,6 @@ def test_positional_grams_short_doc_whole_span(spark):
     assert len(rows) == 1
     assert (rows[0]["pos"], rows[0]["end_pos"]) == (0, 2)
     assert rows[0]["gram"] == "only three words"
-
-
-def test_training_set_all_strategies_identical(pit_frames):
-    spine, clicks, views = pit_frames
-    specs = lambda strat: [  # noqa: E731
-        FeatureSpec(clicks, ts_col="ms", value_cols=["value"],
-                    prefix="click_", strategy=strat),
-        FeatureSpec(views, ts_col="ms", value_cols=["value"],
-                    prefix="view_", strategy=strat)]
-
-    def rows(strat):
-        df = build_training_set(spine, on="user_id", spine_ts="ts",
-                                features=specs(strat))
-        return sorted(df.select(sorted(df.columns)).collect(),
-                      key=lambda r: r["obs_id"])
-
-    assert rows("shuffle") == rows("broadcast")
-
-
-def test_training_set_broadcast_plan_is_map_only_on_spine(pit_frames):
-    spine, clicks, views = pit_frames
-    out = build_training_set(
-        spine, on="user_id", spine_ts="ts",
-        features=[FeatureSpec(clicks, ts_col="ms", value_cols=["value"],
-                              prefix="click_", strategy="broadcast")])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # no sort-merge join and no window sort over the spine side
-    assert "SortMergeJoin" not in plan and "Window" not in plan
 
 
 def test_cut_spans_removes_planted_passage(spark):
@@ -375,7 +346,7 @@ def test_pit_window_agg_bucket_width_too_small_raises(spark):
 
 def test_training_set_tolerance_caps_staleness(pit_frames):
     spine, clicks, _ = pit_frames
-    out = build_training_set(
+    out = build_training_set_fused(
         spine, on="user_id", spine_ts="ts",
         features=[FeatureSpec(clicks, ts_col="ms", value_cols=["value"],
                               prefix="click_", tolerance=150.0)])
