@@ -9,8 +9,8 @@ driver. Subcommands:
                    its ts (one map pass); writes the feature table.
 * ``pit``        — point-in-time end-to-end: fit one artifact version per
                    checkpoint, serve all rows, write features.
-* ``bench-serve``— time the serving hot path (for spark-submit-level
-                   benchmarking at a chosen ``--master``).
+* ``recompute``  — invalidate one checkpoint stage (and, by default, the
+                   stages after it) and refit from the kept checkpoints.
 
 Examples::
 
@@ -26,7 +26,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 
 
 def _existing_or_new_session(args):
@@ -49,7 +48,7 @@ def _axes_for(args) -> dict:
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="msi_preprocessing_pipeline_spark")
     p.add_argument("command", choices=["fit", "transform", "pit",
-                                       "bench-serve", "recompute"])
+                                       "recompute"])
     p.add_argument("--stage", default=None,
                    help="recompute: checkpoint stage to invalidate and rerun "
                         f"(one of FeaturePipeline.CHECKPOINT_ORDER)")
@@ -144,16 +143,6 @@ def main(argv=None) -> int:
                           "invalidated": invalidated,
                           "recomputed": recomputed,
                           "artifacts": out}))
-    elif args.command == "bench-serve":
-        with open(args.artifacts) as f:
-            art = sp.ArtifactSet.from_row(json.load(f))
-        n = pipe.transform(df, [art]).count()  # warm
-        t0 = time.time()
-        n = pipe.transform(df, [art]).count()
-        dt = time.time() - t0
-        print(json.dumps({"command": "bench-serve", "rows": n,
-                          "seconds": round(dt, 3),
-                          "rows_per_sec": round(n / dt, 1)}))
     return 0
 
 

@@ -88,26 +88,6 @@ def _correlation_slices(segment: np.ndarray, reference: np.ndarray,
         # applies to the SCALED values — reproduce that scale exactly
         scale = 1.0 / padded
         wrap_from = padded - n
-        if n <= 128:
-            # small-segment fast path (the common case: segments are
-            # ~0.7%-of-m/z wide): ONE np.correlate supplies every linear
-            # lag — c[n-1+k] = Σ reference[i+k]·segment[i] — including the
-            # wrap contributions, replacing ~2·limit np.dot calls
-            cl = _corr_full(reference, segment).tolist()
-            mid = n - 1
-            forward = []
-            for k in range(limit):
-                v = cl[mid + k] if k < n else 0.0
-                if k > wrap_from:
-                    v += cl[mid - padded + k]
-                forward.append(v * scale)
-            backward = []
-            for j in range(limit, 0, -1):
-                v = cl[mid - j] if j < n else 0.0
-                if j > wrap_from:
-                    v += cl[mid + padded - j]
-                backward.append(v * scale)
-            return forward, backward
         dot = np.dot
         forward = []
         for k in range(limit):
@@ -168,16 +148,6 @@ def _best_shift_small(segment: np.ndarray, reference: np.ndarray,
     if max(peak_fwd, peak_bwd) * scale < _PEAK_FLOOR:
         return 0
     return fwd_at if peak_fwd * scale > peak_bwd * scale else bwd_at
-
-
-def _apply_shift(segment: np.ndarray, shift: int) -> np.ndarray:
-    if shift == 0 or abs(shift) >= segment.size:
-        return segment
-    if shift > 0:
-        pad = np.full(shift, segment[0], dtype=float)
-        return np.hstack((pad, segment[: segment.size - shift]))
-    pad = np.full(-shift, segment[-1], dtype=float)
-    return np.hstack((segment[-shift:], pad))
 
 
 def pafft(counts: np.ndarray, reference_counts: np.ndarray, mzs: np.ndarray,

@@ -8,17 +8,18 @@ pushed through the g-and-h transform, and the ``P = 1 - 1/(2n)`` quantiles of
 that sample are mapped back to TIC-scale thresholds ``(B1, B2)``. A row is an
 outlier iff ``tic <= B1 or tic >= B2``.
 
-The decomposition is two-phase by design (SURVEY.md §2 A9):
+The computation has two phases (SURVEY.md §2 A9):
 
-* phase 1 (distributable): exact quantiles / min / max of the TIC column and
-  of the per-row derived column ``w`` — the Spark operator computes these with
-  the distributed exact-quantile primitive;
-* phase 2 (driver): the fixed-seed Monte Carlo (reference
+* phase 1: exact quantiles / min / max of the TIC column and of the per-row
+  derived column ``w`` (:func:`tic_stats_numpy`);
+* phase 2: the fixed-seed Monte Carlo (reference
   ``components/seeding.py:7-26``, seed 0) and the closed-form mapping back to
-  TIC scale.
+  TIC scale (:func:`thresholds_from_stats`).
 
-``detect_thresholds``/``detect_outliers`` run both phases in numpy and serve
-as the oracle.
+``detect_thresholds``/``detect_outliers`` run both phases in numpy. They are
+the oracle, and the Spark operator
+(``operators/spectrum.py::tic_outlier_thresholds``) runs
+``detect_thresholds`` on the driver over the collected TIC column.
 """
 
 from __future__ import annotations
@@ -43,8 +44,8 @@ MIN_POPULATION = 8
 class TicStats(NamedTuple):
     """Sufficient statistics of the TIC column for thresholding.
 
-    All are exact order statistics, producible either by numpy (oracle) or by
-    the distributed exact-quantile operator (Spark path).
+    All are exact order statistics of the TIC column, computed in numpy by
+    :func:`tic_stats_numpy`.
     """
 
     tic_median: float
@@ -68,7 +69,7 @@ class TicThresholds(NamedTuple):
 def w_transform(tics: np.ndarray, tic_median: float, tic_iqr: float,
                 min_normalized: float, min_r: float, max_r: float) -> np.ndarray:
     """Per-row monotone transform TIC → w (inverse-normal of rescaled rank
-    proxy). Vectorized; used by the Spark pandas UDF and the oracle alike."""
+    proxy). Vectorized over the whole TIC column."""
     normalized = (np.asarray(tics, dtype=float) - tic_median) / tic_iqr
     r = (normalized - min_normalized) + 0.1
     return norm_ppf(r / (min_r + max_r))

@@ -50,9 +50,3 @@ def interp_quantile_from_sorted(n: int, q: float) -> tuple[int, int, float]:
     hi = min(lo + 1, n - 1)
     frac = pos - lo
     return lo, hi, frac
-
-
-def matlab_positions(n: int, q) -> np.ndarray:
-    """The clipped remapped quantile positions used by :func:`mquantile`."""
-    n = float(n)
-    return np.clip(np.asarray(q, dtype=float) * n / (n - 1.0) - 0.5 / (n - 1.0), 0.0, 1.0)

@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..kernels.stats import interp_quantile_from_sorted, matlab_positions
+from ..kernels.stats import interp_quantile_from_sorted
 from .layout import global_rank
 
 
@@ -58,14 +58,6 @@ def exact_quantiles(df: DataFrame, col: str, qs,
         fetched[lo] + frac * (fetched[hi] - fetched[lo])
         for lo, hi, frac in plans
     ])
-
-
-def matlab_quantiles(df: DataFrame, col: str, qs) -> np.ndarray:
-    """Distributed MATLAB-alike quantiles (kernel ``stats.mquantile``
-    semantics): remap q onto the clipped plotting positions first."""
-    n = df.where(f"{col} is not null").count()
-    remapped = matlab_positions(n, np.atleast_1d(np.asarray(qs, dtype=float)))
-    return exact_quantiles(df, col, remapped)
 
 
 def grouped_exact_quantiles(df: DataFrame, col: str, group_cols,

@@ -103,13 +103,6 @@ def stratified_sample(df: DataFrame, key, group_col: str,
     return df.where(bucket < thr)
 
 
-def sampling_oracle_sql(key_sql: str, fraction: float, seed: int = 0) -> str:
-    """The DuckDB predicate equivalent of :func:`hash_sample`'s filter."""
-    thr = _hex_threshold(fraction)
-    return (f"substr(md5(concat(cast({key_sql} as varchar), ':', "
-            f"'{seed}')), 1, 8) < '{thr}'")
-
-
 def mixture_sample(df: DataFrame, key, group_col: str,
                    target_weights: dict[str, float],
                    seed: int = 0) -> DataFrame:

@@ -34,8 +34,8 @@ from ..functions.arrowutil import list_col_matrix
 from ..kernels import alignment, axis as axis_k, baseline as baseline_k
 from ..kernels import convolve as convolve_k, merge as merge_k
 from ..kernels import outlier as outlier_k
+from ..kernels.stats import median_and_iqr
 from ..oracle import PipelineConfig
-from .quantiles import COLLECT_THRESHOLD, matlab_quantiles
 
 
 @dataclass
@@ -214,56 +214,19 @@ def resample_baseline_stage(df: DataFrame, source_axes: dict[str, np.ndarray],
                     "spectrum array<float>, tic double")
 
 
-def tic_outlier_thresholds(df: DataFrame, tic_col: str = "tic",
+def tic_outlier_thresholds(df: DataFrame,
                            seed: int = 0) -> outlier_k.TicThresholds:
-    """Distributed two-phase outlier thresholding (SURVEY.md §2 A9).
-
-    Phase 1 is three distributed exact-quantile/extrema passes over scalar
-    columns (never the spectra); phase 2 is the seeded driver Monte Carlo.
+    """TIC outlier thresholds (SURVEY.md §2 A9) from one collect of the
+    ``tic`` column: 8 bytes per spectrum, against the few KB per spectrum
+    of the stage it is read from. The driver then runs the oracle's own
+    kernel, :func:`~..kernels.outlier.detect_thresholds`. Fewer than
+    ``MIN_POPULATION`` rows, or a zero IQR, keeps every row.
     """
-    n = df.count()
-    if n < outlier_k.MIN_POPULATION:
+    tics = df.select("tic").toPandas()["tic"].to_numpy(dtype=float)
+    if tics.size < outlier_k.MIN_POPULATION or \
+            median_and_iqr(tics)[1] == 0.0:
         return outlier_k.TicThresholds(b1=float("-inf"), b2=float("inf"))
-    if n <= COLLECT_THRESHOLD:
-        # the TIC column is one scalar per row — below the driver-safe bound,
-        # one collect replaces ~6 quantile/extrema jobs and runs the exact
-        # numpy phase-1 directly (identical arithmetic to the distributed
-        # path by construction)
-        tics = (df.select(tic_col).toPandas()[tic_col]
-                .to_numpy(dtype=float))
-        from ..kernels.stats import median_and_iqr
-        if median_and_iqr(tics)[1] == 0.0:
-            return outlier_k.TicThresholds(b1=float("-inf"), b2=float("inf"))
-        return outlier_k.thresholds_from_stats(
-            outlier_k.tic_stats_numpy(tics), seed=seed)
-    q25, q50, q75 = matlab_quantiles(df, tic_col, [0.25, 0.5, 0.75])
-    tic_iqr = q75 - q25
-    if tic_iqr == 0.0:
-        return outlier_k.TicThresholds(b1=float("-inf"), b2=float("inf"))
-    mn, mx = df.agg(F.min(tic_col), F.max(tic_col)).first()
-    min_norm = (float(mn) - q50) / tic_iqr
-    max_norm = (float(mx) - q50) / tic_iqr
-    min_r = 0.1
-    max_r = (max_norm - min_norm) + 0.1
-
-    med_b, iqr_b, minn_b = float(q50), float(tic_iqr), float(min_norm)
-
-    max_r_b = float(max_r)
-
-    @F.pandas_udf("double")
-    def w_col(t: pd.Series) -> pd.Series:
-        w = outlier_k.w_transform(t.to_numpy(dtype=float), med_b, iqr_b,
-                                  minn_b, 0.1, max_r_b)
-        return pd.Series(np.asarray(w, dtype=float))
-
-    with_w = df.select(F.col(tic_col)).withColumn("w", w_col(F.col(tic_col)))
-    wq = matlab_quantiles(with_w, "w", [0.1, 0.25, 0.5, 0.75, 0.9])
-    stats = outlier_k.TicStats(
-        tic_median=float(q50), tic_iqr=float(tic_iqr),
-        min_normalized=float(min_norm), min_r=min_r, max_r=float(max_r),
-        w_q10=float(wq[0]), w_q25=float(wq[1]), w_median=float(wq[2]),
-        w_q75=float(wq[3]), w_q90=float(wq[4]), n=int(n))
-    return outlier_k.thresholds_from_stats(stats, seed=seed)
+    return outlier_k.detect_thresholds(tics, seed=seed)
 
 
 def with_inlier_mask(df: DataFrame, thr: outlier_k.TicThresholds,

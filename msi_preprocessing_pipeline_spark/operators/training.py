@@ -13,9 +13,8 @@ Scale shapes:
   form of the one as-of plan, :func:`~.asof._asof`;
 * :func:`pit_window_agg` / :func:`pit_window_agg_multi` — trailing
   (feature) or leading (label) interval aggregates at each observation,
-  any number of horizons/sources/aggregates in one Window node, hot
-  entities split by time bucket with boundary carry (one shared plan,
-  :func:`_interval_agg`).
+  any number of horizons/sources/aggregates in one entity-partitioned
+  Window node (one shared plan, :func:`_interval_agg`).
 No Python on any hot path; composition is purely lazy, so Catalyst sees
 the whole multi-join program and can reorder scans/prune columns across
 stages.
@@ -62,7 +61,6 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
                    fns: Sequence[str] = ("count", "sum"),
                    prefix: str = "f_",
                    include_current_instant: bool = False,
-                   bucket_width: int | None = None,
                    frame: str = "trailing") -> DataFrame:
     """Trailing-window aggregate features evaluated AT each spine row's
     timestamp: "count/sum/avg of the entity's events in the ``window``
@@ -88,26 +86,15 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
     Window node per horizon, zero extra shuffles, since all frames share
     the partitioning and ordering.
 
-    Skew: a window partitioned only by entity serializes a hot entity's
-    whole history onto one task. ``bucket_width`` (in ``ts`` units, must be
-    >= max(window)) splits each entity's timeline into buckets and
-    partitions by ``(entity, bucket)``; event rows within max(window) of a
-    bucket's end are DUPLICATED into the next bucket so every trailing
-    frame still sees its full horizon — result-identical (tested), with
-    per-task work bounded by the bucket span instead of the entity's
-    lifetime.
-
     ``frame='leading'`` flips to the LABEL side: events in the window
     strictly AFTER the observation (``(ts, ts + window]``; with
     ``include_current_instant`` the instant itself joins the frame) —
     "did/how-much the entity convert within the horizon" targets, with the
-    same zero-peeking-backward symmetry and the bucket carry mirrored into
-    the PREVIOUS bucket.
+    same zero-peeking-backward symmetry.
     """
     source = EventSource(events, event_ts, value_col, prefix)
     return _interval_agg(spine, on, spine_ts, [source], window, fns,
-                         include_current_instant, bucket_width, frame,
-                         value_type=None)
+                         include_current_instant, frame, value_type=None)
 
 
 def build_training_set_fused(spine: DataFrame, on: Sequence[str] | str,
@@ -162,16 +149,14 @@ def pit_window_agg_multi(spine: DataFrame, on: Sequence[str] | str,
                          window: int | Sequence[int],
                          fns: Sequence[str] = ("count", "sum"),
                          include_current_instant: bool = False,
-                         bucket_width: int | None = None,
                          frame: str = "trailing") -> DataFrame:
     """:func:`pit_window_agg` over SEVERAL event streams at once: every
     (source, horizon, fn) feature — e.g. click/view/error counts and sums
     for 1h and 24h — out of ONE union, one shuffle, one fused Window node.
     Aggregates select their stream via ``fn(when(src == i, val))`` inside
     the shared RANGE frame (``frame='trailing'`` for features,
-    ``'leading'`` for labels). Same leakage contract and ``bucket_width``
-    skew handling as the single-source operator; values are aggregated as
-    double.
+    ``'leading'`` for labels). Same leakage contract and plan as the
+    single-source operator; values are aggregated as double.
     """
     prefixes = [src.prefix for src in sources]
     dupes = {p for p in prefixes if prefixes.count(p) > 1}
@@ -180,15 +165,14 @@ def pit_window_agg_multi(spine: DataFrame, on: Sequence[str] | str,
             f"duplicate EventSource prefixes: {sorted(dupes)} — feature "
             "columns would collide")
     return _interval_agg(spine, on, spine_ts, sources, window, fns,
-                         include_current_instant, bucket_width, frame,
-                         value_type="double")
+                         include_current_instant, frame, value_type="double")
 
 
 def _interval_agg(spine: DataFrame, on: Sequence[str] | str, spine_ts: str,
                   sources: Sequence[EventSource],
                   window: int | Sequence[int], fns: Sequence[str],
-                  include_current_instant: bool, bucket_width: int | None,
-                  frame: str, value_type: str | None) -> DataFrame:
+                  include_current_instant: bool, frame: str,
+                  value_type: str | None) -> DataFrame:
     """The one plan behind :func:`pit_window_agg` and
     :func:`pit_window_agg_multi`: the spine (tag 0, value null) and source
     ``i`` (tag ``i``) in one union; every (horizon, source, fn) feature
@@ -219,30 +203,6 @@ def _interval_agg(spine: DataFrame, on: Sequence[str] | str, spine_ts: str,
             value(src).alias("__val"), F.lit(i).alias("__src")))
 
     windows = [window] if isinstance(window, int) else list(window)
-    part_keys = list(keys)
-    drop_cols = ["__ts", "__val", "__src"]
-    if bucket_width is not None:
-        max_win = max(int(w) for w in windows)
-        bw = int(bucket_width)
-        if bw < max_win:
-            raise ValueError(
-                f"bucket_width {bw} < max window {max_win}: a "
-                "frame would span more than two buckets")
-        bucket = F.floor(F.col("__ts") / F.lit(bw))
-        # event rows near a bucket boundary also serve the adjacent
-        # bucket's frames (the next one for a trailing frame, the previous
-        # one for a leading frame); spine rows live only in their own bucket
-        if frame == "trailing":
-            near = F.col("__ts") >= (bucket + 1) * F.lit(bw) - F.lit(max_win)
-            adjacent = bucket + F.lit(1)
-        else:
-            near = F.col("__ts") < bucket * F.lit(bw) + F.lit(max_win)
-            adjacent = bucket - F.lit(1)
-        carry = (unioned.where((F.col("__src") > 0) & near)
-                 .withColumn("__bucket", adjacent))
-        unioned = unioned.withColumn("__bucket", bucket).unionByName(carry)
-        part_keys.append("__bucket")
-        drop_cols.append("__bucket")
     # all window columns in ONE select so Catalyst emits one fused Window
     # node (chained withColumn blocks CollapseWindow across frames)
     exprs = []
@@ -251,7 +211,7 @@ def _interval_agg(spine: DataFrame, on: Sequence[str] | str, spine_ts: str,
             lo, hi = -int(win), (0 if include_current_instant else -1)
         else:
             lo, hi = (0 if include_current_instant else 1), int(win)
-        w = (Window.partitionBy(*part_keys).orderBy("__ts")
+        w = (Window.partitionBy(*keys).orderBy("__ts")
              .rangeBetween(lo, hi))
         for i, src in enumerate(sources, start=1):
             mine = F.when(F.col("__src") == i, F.col("__val"))
@@ -260,7 +220,7 @@ def _interval_agg(spine: DataFrame, on: Sequence[str] | str, spine_ts: str,
                 exprs.append(agg.over(w).alias(f"{src.prefix}{fn}_{win}"))
     return (unioned.select("*", *exprs)
             .where(F.col("__src") == 0)
-            .drop(*drop_cols))
+            .drop("__ts", "__val", "__src"))
 
 
 def _expanding_prior_sums(df: DataFrame, category_col: str, ts_col: str,

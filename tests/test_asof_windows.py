@@ -9,7 +9,6 @@ import pandas as pd
 import pytest
 
 from msi_preprocessing_pipeline_spark.operators import asof, quantiles, windows
-from msi_preprocessing_pipeline_spark.kernels.stats import mquantile
 
 
 @pytest.fixture(scope="module")
@@ -147,15 +146,6 @@ def test_exact_quantiles_match_numpy(spark):
     # distributed sort+rank path (force it)
     got_dist = quantiles.exact_quantiles(df, "v", qs, collect_threshold=0)
     np.testing.assert_allclose(got_dist, expected, rtol=1e-12)
-
-
-def test_matlab_quantiles_match_kernel(spark):
-    rng = np.random.RandomState(22)
-    vals = rng.rand(1234)
-    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    got = quantiles.matlab_quantiles(df, "v", [0.25, 0.5, 0.75])
-    np.testing.assert_allclose(got, mquantile(vals, [0.25, 0.5, 0.75]),
-                               rtol=1e-12)
 
 
 # ---------------------------------------------------------------------------

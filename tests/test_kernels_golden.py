@@ -100,16 +100,6 @@ def test_alignment_padding():
     assert alignment._padded_size(2 ** 21) == 1_000_000 + 2 ** 21
 
 
-def test_alignment_shift_fill():
-    seg = np.array([1., 2., 3., 4.])
-    npt.assert_array_equal(alignment._apply_shift(seg, 2),
-                           np.array([1., 1., 1., 2.]))
-    npt.assert_array_equal(alignment._apply_shift(seg, -2),
-                           np.array([3., 4., 4., 4.]))
-    npt.assert_array_equal(alignment._apply_shift(seg, 0), seg)
-    npt.assert_array_equal(alignment._apply_shift(seg, 5), seg)
-
-
 def test_pafft_identity_when_already_aligned():
     # reference test_alignment.py:206-238 — aligning a spectrum to itself
     # leaves it unchanged

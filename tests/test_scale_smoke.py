@@ -9,36 +9,6 @@ from pyspark.sql import functions as F
 
 
 @pytest.mark.slow
-def test_pit_window_agg_hot_entity_bucketed(spark):
-    """One entity holding 400k of 500k events: the bucketed path must
-    complete and agree with the plain window on aggregate totals."""
-    from msi_preprocessing_pipeline_spark.operators.training import (
-        pit_window_agg)
-
-    ev = spark.range(0, 500_000).select(
-        F.when(F.col("id") < 400_000, 0).otherwise(F.col("id") % 50)
-        .alias("k"),
-        (F.col("id") * 7 % 1_000_000).alias("ets"),
-        F.lit(1.0).alias("v"))
-    spine = spark.range(0, 2_000).select(
-        (F.col("id") % 50).alias("k"),
-        (F.col("id") * 499 % 1_000_000).alias("ts"))
-    kw = dict(on="k", spine_ts="ts", event_ts="ets", value_col="v",
-              window=10_000, fns=("count",))
-    t0 = time.time()
-    plain = (pit_window_agg(spine, ev, **kw)
-             .agg(F.sum("f_count_10000")).first()[0])
-    t_plain = time.time() - t0
-    t0 = time.time()
-    bucketed = (pit_window_agg(spine, ev, bucket_width=10_000, **kw)
-                .agg(F.sum("f_count_10000")).first()[0])
-    t_bucket = time.time() - t0
-    assert plain == bucketed
-    # not a benchmark — just prove the bucketed path is not pathological
-    assert t_bucket < max(4 * t_plain, 60)
-
-
-@pytest.mark.slow
 def test_duplicate_spans_long_docs_linear(spark):
     """200 docs x ~5k words (1M grams) with planted shared passages:
     completes, finds every planted span."""

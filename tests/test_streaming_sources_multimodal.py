@@ -65,6 +65,9 @@ def test_ascii_source_roundtrip(spark, tmp_path):
     np.testing.assert_allclose(np.asarray(got.loc[1, "counts"]), c1 + 1,
                                rtol=1e-6)
     assert got.loc[0, "source"] == "my-ds1"
+    meta = ascii_src.metadata_table(ascii_src.read_spectra_dir(spark, str(d)))
+    assert [(r.R, r.X, r.Y) for r in meta.collect()] == [(1, 2, 3), (1, 5, 7)]
+    assert meta.columns == ["source", "path", "R", "X", "Y"]
 
 
 def test_multimodal_plumbing(spark):

@@ -303,47 +303,6 @@ def test_pit_window_agg_multi_horizon_one_shuffle(spark):
     assert plan.count("Window") == 1
 
 
-def test_pit_window_agg_bucketed_matches_unbucketed(spark):
-    """Skew buster: time-bucketed partitioning with boundary carry must be
-    result-identical to the plain entity-partitioned window."""
-    import numpy as np
-
-    from msi_preprocessing_pipeline_spark.operators.training import (
-        pit_window_agg)
-
-    rng = np.random.RandomState(11)
-    n_ev, n_sp = 400, 120
-    ev = pd.DataFrame({
-        "user_id": rng.randint(0, 3, n_ev),
-        "ets": rng.randint(0, 10_000, n_ev),
-        "v": rng.rand(n_ev).round(3)})
-    spine = pd.DataFrame({
-        "obs_id": np.arange(n_sp),
-        "user_id": rng.randint(0, 3, n_sp),
-        "ts": rng.randint(0, 10_000, n_sp)})
-    sdf, edf = spark.createDataFrame(spine), spark.createDataFrame(ev)
-    kw = dict(on="user_id", spine_ts="ts", event_ts="ets", value_col="v",
-              window=[150, 700], fns=("count", "sum"))
-    plain = pit_window_agg(sdf, edf, **kw).toPandas()
-    bucketed = pit_window_agg(sdf, edf, bucket_width=700, **kw).toPandas()
-    cols = sorted(plain.columns)
-    canon = lambda p: (p[cols].sort_values(cols)  # noqa: E731
-                       .reset_index(drop=True).round(9))
-    pd.testing.assert_frame_equal(canon(plain), canon(bucketed))
-
-
-def test_pit_window_agg_bucket_width_too_small_raises(spark):
-    from msi_preprocessing_pipeline_spark.operators.training import (
-        pit_window_agg)
-
-    spine = spark.createDataFrame([(1, 100)], "user_id long, ts long")
-    ev = spark.createDataFrame([(1, 99, 1.0)],
-                               "user_id long, ets long, v double")
-    with pytest.raises(ValueError, match="bucket_width"):
-        pit_window_agg(spine, ev, "user_id", "ts", "ets", "v",
-                       window=100, bucket_width=50)
-
-
 def test_training_set_tolerance_caps_staleness(pit_frames):
     spine, clicks, _ = pit_frames
     out = build_training_set_fused(
@@ -368,12 +327,11 @@ def test_duplicate_token_spans_null_arrays_ignored(spark):
 
 
 def test_fused_training_set_matches_sequential(spark):
-    """build_training_set_fused (one shuffle for all features) must be
-    result-identical to the sequential per-feature composition, including
+    """build_training_set_fused (one shuffle for all features) must match
+    a per-spec ``pd.merge_asof`` with the spec's tolerance, including
     tolerance nulling and matched-ts audit columns."""
     import numpy as np
 
-    from msi_preprocessing_pipeline_spark.operators.asof import asof_join
     from msi_preprocessing_pipeline_spark.operators.training import (
         FeatureSpec, build_training_set_fused)
 
@@ -398,23 +356,31 @@ def test_fused_training_set_matches_sequential(spark):
         FeatureSpec(spark.createDataFrame(fb), ts_col="bts",
                     value_cols=["b", "b2"], prefix="fb_", tolerance=50),
     ]
-    # the reference: one backward as-of join per spec, applied in turn
-    seq = sdf
-    for spec in specs:
-        renamed = spec.df
-        for c in spec.value_cols:
-            renamed = renamed.withColumnRenamed(c, f"{spec.prefix}{c}")
-        seq = asof_join(
-            seq, renamed, on="user_id", left_ts="ts", right_ts=spec.ts_col,
-            value_cols=[f"{spec.prefix}{c}" for c in spec.value_cols],
-            tolerance=spec.tolerance, matched_ts_col=f"{spec.prefix}ts")
     fused = build_training_set_fused(sdf, on="user_id", spine_ts="ts",
                                      features=specs)
-    assert sorted(seq.columns) == sorted(fused.columns)
-    cols = sorted(seq.columns)
-    canon = lambda df: (df.toPandas()[cols]  # noqa: E731
-                        .sort_values("obs_id").reset_index(drop=True))
-    pd.testing.assert_frame_equal(canon(seq), canon(fused))
+    assert fused.columns == ["obs_id", "user_id", "ts", "fa_a", "fa_ts",
+                             "fb_b", "fb_b2", "fb_ts"]
+    got = fused.toPandas().sort_values("obs_id").reset_index(drop=True)
+    for spec, pdf in zip(specs, (fa, fb)):
+        ts = spec.ts_col
+        exp = (pd.merge_asof(spine.sort_values("ts", kind="mergesort"),
+                             pdf.sort_values(ts, kind="mergesort"),
+                             left_on="ts", right_on=ts, by="user_id",
+                             direction="backward", tolerance=spec.tolerance)
+               .sort_values("obs_id").reset_index(drop=True))
+        np.testing.assert_array_equal(got[f"{spec.prefix}ts"], exp[ts])
+        # the values come from the matched feature row; two rows tied on
+        # (user, ts) may be picked in either order
+        at = pdf.groupby(["user_id", ts])[list(spec.value_cols)].apply(
+            lambda g: set(g.itertuples(index=False, name=None)))
+        picked = got[["user_id", f"{spec.prefix}ts",
+                      *[f"{spec.prefix}{c}" for c in spec.value_cols]]]
+        for user, matched, *vals in picked.itertuples(index=False,
+                                                      name=None):
+            if pd.isna(matched):
+                assert all(pd.isna(v) for v in vals)
+            else:
+                assert tuple(vals) in at[(user, int(matched))]
 
 
 def test_fused_training_set_single_exchange(spark):
@@ -529,7 +495,7 @@ def test_pit_window_agg_leading_frame_labels(spark):
     assert out[2]["f_count_100"] == 0
 
 
-def test_pit_window_agg_leading_bucketed_matches_plain(spark):
+def test_pit_window_agg_leading_matches_brute_force(spark):
     import numpy as np
 
     from msi_preprocessing_pipeline_spark.operators.training import (
@@ -546,12 +512,6 @@ def test_pit_window_agg_leading_bucketed_matches_plain(spark):
     kw = dict(on="k", spine_ts="ts", event_ts="ets", value_col="v",
               window=250, frame="leading", fns=("count", "sum"))
     plain = pit_window_agg(sdf, edf, **kw).toPandas()
-    bucketed = pit_window_agg(sdf, edf, bucket_width=400, **kw).toPandas()
-    cols = sorted(plain.columns)
-    canon = lambda p: (p[cols].sort_values("obs_id")  # noqa: E731
-                       .reset_index(drop=True).round(9))
-    pd.testing.assert_frame_equal(canon(plain), canon(bucketed))
-    # and vs brute force
     for _, s in spine.iterrows():
         m = ev[(ev.k == s.k) & (ev.ets > s.ts) & (ev.ets <= s.ts + 250)]
         r = plain[plain.obs_id == s.obs_id].iloc[0]
@@ -574,7 +534,7 @@ def test_pit_window_agg_multi_leading_matches_single(spark):
     multi = pit_window_agg_multi(
         sdf, on="k", spine_ts="ts",
         sources=[EventSource(edf, "ets", "v", "x_")],
-        window=100, frame="leading", bucket_width=150).toPandas()
+        window=100, frame="leading").toPandas()
     single = pit_window_agg(sdf, edf, on="k", spine_ts="ts",
                             event_ts="ets", value_col="v", window=100,
                             frame="leading", prefix="x_").toPandas()
