@@ -13,9 +13,13 @@ The per-row chain — resample → baseline (:func:`_spectra`), PaFFT
 the fit stages and the serve UDF are thin ``mapInArrow`` bodies over it, so
 serving applies exactly the stage arithmetic the fit used.
 
-No per-row Python at the DataFrame level: the per-row loops live inside the
-UDF over numpy arrays (the reference's ``Pool.map(chunksize=800)`` analog is
-``spark.sql.execution.arrow.maxRecordsPerBatch=800``).
+No per-row Python at the DataFrame level: the work runs inside the UDF over
+numpy arrays, one Arrow record batch at a time (the reference's
+``Pool.map(chunksize=800)`` analog is
+``spark.sql.execution.arrow.maxRecordsPerBatch=800``). Resample and
+baseline loop over the rows of a batch; PaFFT
+(:func:`~..kernels.alignment.pafft_rows`) and the TIC rescale each run once
+over the batch's whole ``[rows, channels]`` matrix.
 """
 
 from __future__ import annotations
@@ -155,12 +159,11 @@ def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
 
 def _aligned(mat: np.ndarray, ref: np.ndarray, axis: np.ndarray,
              cfg: PipelineConfig) -> np.ndarray:
-    """Stage 5: each float32 row of ``mat`` PaFFT-aligned to ``ref``."""
-    out = np.empty_like(mat)
-    for i, row in enumerate(mat):
-        out[i] = alignment.pafft(row, ref, axis, cfg.pafft_minimum_segment,
-                                 cfg.pafft_shift_limit)
-    return out
+    """Stage 5: every float32 row of ``mat`` PaFFT-aligned to ``ref`` in one
+    call over the whole batch, bit-identical to the per-row
+    :func:`~..kernels.alignment.pafft` the oracle runs."""
+    return alignment.pafft_rows(mat, ref, axis, cfg.pafft_minimum_segment,
+                                cfg.pafft_shift_limit)
 
 
 def _tic_scaled(mat: np.ndarray, tic: float) -> np.ndarray:
@@ -229,13 +232,12 @@ def tic_outlier_thresholds(df: DataFrame,
     return outlier_k.detect_thresholds(tics, seed=seed)
 
 
-def with_inlier_mask(df: DataFrame, thr: outlier_k.TicThresholds,
-                     tic_col: str = "tic") -> DataFrame:
+def with_inlier_mask(df: DataFrame, thr: outlier_k.TicThresholds) -> DataFrame:
     """Inlier predicate as a JVM column (reference keeps rows with
     ``not (tic <= B1 or tic >= B2)``)."""
     return df.withColumn(
         "is_inlier",
-        ~((F.col(tic_col) <= F.lit(thr.b1)) | (F.col(tic_col) >= F.lit(thr.b2))))
+        ~((F.col("tic") <= F.lit(thr.b1)) | (F.col("tic") >= F.lit(thr.b2))))
 
 
 def masked_mean_reference(df: DataFrame, vec_col: str,

@@ -131,6 +131,15 @@ def test_find_shift_golden():
     assert _find_shift(first, second, 38) == -4
 
 
+def _assert_batch_equals_rows(counts, reference, mzs, *params):
+    """The golden row, its negation and a zero row through the batch
+    kernel equal the per-row kernel's outputs."""
+    mat = np.stack([counts, -counts, np.zeros_like(counts)])
+    npt.assert_array_equal(
+        al.pafft_rows(mat, reference, mzs, *params),
+        np.stack([al.pafft(row, reference, mzs, *params) for row in mat]))
+
+
 def test_pafft_identity_golden():
     counts = np.array([32, 36, 6, 21, 31, 13, 7, 24, 15, 18, 15, 11, 38, 29,
                        1, 31, 24, 24, 3, 18, 3, 12, 38, 35, 22, 5, 23, 32,
@@ -152,6 +161,7 @@ def test_pafft_identity_golden():
                          dtype=float)
     aligned = al.pafft(counts, reference, MZS)
     npt.assert_almost_equal(aligned, counts)
+    _assert_batch_equals_rows(counts, reference, MZS)
 
 
 def test_pafft_with_shifts_golden():
@@ -180,6 +190,7 @@ def test_pafft_with_shifts_golden():
         -78.7872186451279, 99.9647965615285])
     aligned = al.pafft(counts, reference, mzs, 40.0, 40.0)
     npt.assert_almost_equal(aligned, expected, 4)
+    _assert_batch_equals_rows(counts, reference, mzs, 40.0, 40.0)
 
 
 def test_direct_correlation_equals_fft_randomized():
