@@ -78,8 +78,8 @@ def zorder_key(x, y, bits: int = 16):
     min/max row-group stats prune two-predicate scans (time × entity,
     lat × lon) that a single-column sort can only prune on one of —
     the standard multi-dimensional layout trick (cf. Delta/Iceberg
-    Z-ORDER). Feed it to ``sources.layout.write_clustered(range_by=,
-    sort_by=)`` via a materialized column.
+    Z-ORDER). Feed it to ``repartitionByRange`` and
+    ``sortWithinPartitions`` via a materialized column.
 
     Pure JVM bit arithmetic (shift/mask spreading — Warren, Hacker's
     Delight §7-2), engine-portable: the identical expression in DuckDB

@@ -24,13 +24,6 @@ def mquantile(values: np.ndarray, q) -> np.ndarray:
     return np.percentile(values, 100.0 * remapped)
 
 
-def miqr(values: np.ndarray, rng=(25, 75)) -> float:
-    """Inter-quantile range using MATLAB-alike quantiles (reference
-    ``components/stats.py:52-54``)."""
-    lo, hi = mquantile(values, 0.01 * np.asarray(rng, dtype=float))
-    return hi - lo
-
-
 def median_and_iqr(values: np.ndarray) -> tuple[float, float]:
     """(median, IQR) in one pass — reference ``components/spectrum/outlier.py:12-15``."""
     q25, med, q75 = mquantile(values, [0.25, 0.5, 0.75])

@@ -7,12 +7,11 @@
 * :mod:`training`   — PIT training-set assembly: multi-feature as-of
   composition (every feature in one fused union + window) and
   trailing/leading interval aggregates at observation time
-  (multi-horizon, multi-source, time-bucketed skew handling) from one
-  shared plan.
+  (multi-horizon, multi-source) from one shared plan.
 * :mod:`sketches`   — mergeable sketches: HLL distinct counting, Count-
-  Min frequencies (bit-exact numpy decoder), KLL approximate quantiles,
-  Theta distinct sets with union/intersection/difference algebra
-  (per-slice sketch tables + union rollups).
+  Min frequencies (bit-exact numpy decoder), Theta distinct sets with
+  union/intersection/difference algebra (per-slice sketch tables +
+  union rollups).
 * :mod:`quantiles`  — distributed EXACT quantiles (sort + rank + linear
   interpolation; never ``percentile_approx`` on the compat path).
 * :mod:`spectrum`   — the staged spectrum feature operators (vectorized
@@ -33,7 +32,8 @@
   snapshot with one union + one window (no join).
 * :mod:`validate`   — declarative data-quality expectations fused into
   one aggregation scan (null / unique / range / regex / set rules).
-* :mod:`multimodal` — binary-payload plumbing (decode steps stubbed).
+* :mod:`multimodal` — binary-payload plumbing: BMP/PNM decode (fake
+  decoder for other payloads) and pHash near-dup.
 * :mod:`encoding`   — hashing-trick buckets, robust (median/IQR)
   standardization, equal-frequency quantile binning.
 * :mod:`drift`      — PSI feature-drift monitoring between snapshots

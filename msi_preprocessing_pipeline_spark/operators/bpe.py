@@ -227,9 +227,8 @@ def encode_bpe(df: DataFrame, merges: list[tuple[str, str]],
                out_col: str = "bpe_tokens") -> DataFrame:
     """Tokenize every document with the learned merges: Arrow-batched, one
     map-only pass, per-batch distinct-word cache. Output column is
-    ``array<string>`` of BPE symbols (use ``tokenized_table`` when integer
-    ids are needed — it maps symbol->id inside the same Arrow pass). The
-    id column keeps its input type."""
+    ``array<string>`` of BPE symbols. The id column keeps its input
+    type."""
     import pandas as pd
 
     ranks = {pair: i for i, pair in enumerate(merges)}
@@ -258,115 +257,3 @@ def encode_bpe(df: DataFrame, merges: list[tuple[str, str]],
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, {out_col} array<string>"
     return df.select(id_col, text_col).mapInPandas(enc, schema=schema)
-
-
-def bpe_vocab(encoded: DataFrame,
-              tokens_col: str = "bpe_tokens") -> DataFrame:
-    """Deterministic symbol->id table from an encoded corpus: ids are
-    assigned by (frequency desc, symbol asc) — reproducible under any
-    partitioning. Vocabulary-sized output (one aggregation)."""
-    from pyspark.sql import Window as W
-    counts = (encoded.select(F.explode(tokens_col).alias("symbol"))
-              .groupBy("symbol").agg(F.count("*").alias("freq")))
-    w = W.orderBy(F.col("freq").desc(), F.col("symbol").asc())
-    # the vocab is bounded (symbols <= base chars + n_merges), so the
-    # single-partition ranking window is fine here — never on corpus data
-    return counts.withColumn(
-        "token_id", (F.row_number().over(w) - 1).cast("int"))
-
-
-def bpe_vocab_from_histogram(word_freqs: DataFrame,
-                             merges: list[tuple[str, str]],
-                             collect_threshold: int = 2_000_000
-                             ) -> list[tuple[str, int, int]]:
-    """Driver-side ``(symbol, freq, token_id)`` vocab derived from the
-    word HISTOGRAM instead of a second corpus scan: every corpus token is
-    some segmented word's symbol, so symbol frequency equals
-    sum(word_freq × occurrences in the word's segmentation). Identical
-    output to ``bpe_vocab(encode_bpe(corpus, merges))`` — same ids, since
-    the id order (freq desc, symbol asc) sees the same totals — at
-    vocabulary cost rather than corpus cost."""
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    sym_freq: dict[str, int] = {}
-    for sym, freq in _collect_histogram(word_freqs, collect_threshold).items():
-        word = "".join(sym[:-1])  # strip the _EOW sentinel appended above
-        for s in bpe_segment_word(word, ranks):
-            sym_freq[s] = sym_freq.get(s, 0) + freq
-    ordered = sorted(sym_freq.items(), key=lambda kv: (-kv[1], kv[0]))
-    return [(s, f, i) for i, (s, f) in enumerate(ordered)]
-
-
-def tokenized_table(docs: DataFrame, merges: list[tuple[str, str]],
-                    vocab: DataFrame | None = None,
-                    text_col: str = "text", id_col: str = "doc_id",
-                    source_col: str = "source",
-                    collect_threshold: int = 2_000_000) -> DataFrame:
-    """Produce the engine's canonical input shape from raw text:
-    ``(doc_id, tokens array<int>, n_tok int, source)`` — the table every
-    PIT/feature operator downstream consumes.
-
-    ONE map-only Arrow pass over the corpus: the symbol->id vocabulary is
-    broadcast into the encode UDF as a plain dict (it is bounded by base
-    chars + n_merges), so there is no token-granularity explode/shuffle
-    and no doc-id reassembly join — the plan has zero exchanges on corpus
-    rows.  With ``vocab=None`` the vocabulary is derived driver-side from
-    the word histogram (one vocabulary-sized aggregation, see
-    ``bpe_vocab_from_histogram``) rather than by encoding the corpus
-    twice.  Unknown symbols (possible when ``vocab`` was fitted on another
-    corpus) fail fast rather than silently dropping tokens.  Docs with
-    null/empty/whitespace-only text are KEPT, with ``tokens = []`` and
-    ``n_tok = 0`` (the r3 shuffle-based version silently dropped them).
-    """
-    import pandas as pd
-
-    if vocab is None:
-        sym_to_id = {s: i for s, _f, i in bpe_vocab_from_histogram(
-            word_frequencies(docs, text_col), merges, collect_threshold)}
-    else:
-        sym_to_id = {r["symbol"]: int(r["token_id"])
-                     for r in vocab.select("symbol", "token_id").collect()}
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-    has_source = source_col in docs.columns
-    cols = [id_col, text_col] + ([source_col] if has_source else [])
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, list[int]] = {}
-
-        def seg_ids(word: str) -> list[int]:
-            got = cache.get(word)
-            if got is None:
-                ids = []
-                for s in bpe_segment_word(word, ranks):
-                    tid = sym_to_id.get(s)
-                    if tid is None:
-                        raise ValueError(
-                            f"tokenized_table: symbol missing from vocab: "
-                            f"{s!r}")
-                    ids.append(tid)
-                got = cache[word] = ids
-            return got
-
-        for pdf in batches:
-            toks: list[list[int]] = []
-            for text in pdf[text_col]:
-                if text is None:
-                    toks.append([])
-                    continue
-                out: list[int] = []
-                for w in _split_words(text):
-                    out.extend(seg_ids(w))
-                toks.append(out)
-            src = (pdf[source_col] if has_source
-                   else pd.Series(["default"] * len(pdf)))
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "tokens": toks,
-                "n_tok": pd.Series([len(t) for t in toks], dtype="int32"),
-                source_col: src,
-            })
-
-    id_type = docs.schema[id_col].dataType.simpleString()
-    schema = (f"{id_col} {id_type}, tokens array<int>, n_tok int, "
-              f"{source_col} string")
-    return docs.select(*cols).mapInPandas(enc, schema=schema)

@@ -46,7 +46,7 @@ from ..functions.util import quantize
 
 
 # ---------------------------------------------------------------------------
-# norms / normalization (pure JVM)
+# norms (pure JVM)
 
 
 def _sq_norm(vec_col: str):
@@ -80,17 +80,6 @@ def embedding_norms(df: DataFrame, vec_col: str = "embedding",
         F.lit(0.0), lambda acc, q: acc + q * q)
     return df.withColumn(
         out_col, F.sqrt(sq) / F.lit(float(10 ** scale)))
-
-
-def normalize_embeddings(df: DataFrame, vec_col: str = "embedding",
-                         out_col: str | None = None) -> DataFrame:
-    """Unit-normalize each embedding (map-only JVM).  Zero vectors map
-    to null (0/0 is not a direction); null vectors stay null."""
-    norm = F.sqrt(_sq_norm(vec_col))
-    normed = F.when(
-        norm > 0,
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / norm))
-    return df.withColumn(out_col or f"{vec_col}_unit", normed)
 
 
 # ---------------------------------------------------------------------------
@@ -466,7 +455,7 @@ def centroid_distance_features(df: DataFrame, centroids,
             near_lab = [None] * n_rows
             near_out = [None] * n_rows
             # null embeddings keep their row with null distances (same
-            # contract as pca_project/normalize_embeddings)
+            # contract as pca_project)
             mask = pdf[vec_col].notna().to_numpy()
             if mask.any():
                 idxs = np.nonzero(mask)[0]

@@ -1,5 +1,5 @@
-"""Feature selection: exact pairwise Pearson correlation matrix and the
-correlation-redundancy filter.
+"""Feature selection: exact pairwise Pearson correlation matrix and
+filter scores.
 
 The classic pre-training screen — drop features that are near-copies of
 another feature — needs all d(d-1)/2 pairwise correlations.  ``df.stat
@@ -28,14 +28,6 @@ At 10^12 rows the plan is scan → partial aggregate → single final row
 (3·d² integer cells cross the wire) → d²-bounded pair explode: no
 shuffle of corpus rows, no driver matrix.  The d(d-1)/2 aggregate
 expressions bound d to O(10²) features per call — chunk wider frames.
-
-``redundant_features`` applies the deterministic drop rule: for any
-pair with |corr| ≥ threshold, the SECOND feature in the ``cols``-list
-order (``feat_b`` — :func:`corr_matrix` always emits pairs with the
-earlier-listed column as ``feat_a``) is dropped.  Non-recursive — b is
-dropped if ANY earlier-listed partner correlates, whether or not that
-partner itself was dropped; well-defined without iteration and exactly
-expressible in SQL as one EXISTS.
 """
 
 from __future__ import annotations
@@ -129,23 +121,6 @@ def corr_matrix(df: DataFrame, cols, scales=None, out_scale: int = 6,
 
     return (one.select(F.explode(F.array(*structs)).alias("p"))
             .select("p.feat_a", "p.feat_b", "p.n", "p.corr_u"))
-
-
-def redundant_features(corr: DataFrame, threshold: float = 0.95,
-                       out_scale: int = 6) -> DataFrame:
-    """Correlation-filter drop list over a :func:`corr_matrix` result:
-    ``feat_b`` — always the LATER column in corr_matrix's ``cols``-list
-    order — is dropped when any of its pairs reaches ``|corr| ≥
-    threshold`` (non-recursive rule — deterministic, engine-order free,
-    one aggregation on the d²-bounded pair relation).  Returns
-    ``(feature, because_of)`` where ``because_of`` is the
-    alphabetically-first witnessing partner (the pair relation carries
-    names, not list positions)."""
-    thr = int(round(abs(threshold) * 10 ** out_scale))
-    hits = corr.where(F.col("corr_u").isNotNull()
-                      & (F.abs(F.col("corr_u")) >= F.lit(thr)))
-    return (hits.groupBy(F.col("feat_b").alias("feature"))
-            .agg(F.min("feat_a").alias("because_of")))
 
 
 def chi2_scores(df: DataFrame, feature_cols, label_col: str) -> DataFrame:

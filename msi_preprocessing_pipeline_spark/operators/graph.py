@@ -114,25 +114,6 @@ def pagerank(edges: DataFrame, src_col: str, dst_col: str,
     return ranks
 
 
-def degree_stats(edges: DataFrame, src_col: str,
-                 dst_col: str) -> DataFrame:
-    """Per-node exact (out_degree, in_degree) over the distinct edge
-    list — ``(node, out_deg, in_deg)``, absent direction as 0."""
-    e = (edges.where(F.col(src_col).isNotNull()
-                     & F.col(dst_col).isNotNull())
-         .select(F.col(src_col).alias("__s"),
-                 F.col(dst_col).alias("__d"))
-         .distinct())
-    out = e.groupBy(F.col("__s").alias("node")) \
-        .agg(F.count("*").alias("out_deg"))
-    inn = e.groupBy(F.col("__d").alias("node")) \
-        .agg(F.count("*").alias("in_deg"))
-    return (out.join(inn, ["node"], "full")
-            .select("node",
-                    F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-                    F.coalesce("in_deg", F.lit(0)).alias("in_deg")))
-
-
 def triangles(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """Exact triangle census of the UNDIRECTED graph given as an edge
     list (direction, duplicates and self-loops ignored): one row

@@ -175,15 +175,3 @@ def dsir_weights(raw: DataFrame, lamq: np.ndarray, buckets: int = 4096,
     return (scored.select(id_col, F.col("__w").alias("weight_q"),
                           "n_grams")
             .unionByName(missing))
-
-
-def dsir_topk(weights: DataFrame, n: int,
-              id_col: str = "doc_id") -> DataFrame:
-    """Deterministic selection: the ``n`` most target-like documents by
-    ``(weight_q desc, id asc)`` — the pinnable variant of the paper's
-    Gumbel-top-k resampling (which adds per-doc noise to the weights;
-    swap the order key for ``weight_q + gumbel(md5(id))`` to recover
-    it).  One ``TakeOrderedAndProject`` — no full sort at scale."""
-    return (weights.where(F.col("weight_q").isNotNull())
-            .orderBy(F.col("weight_q").desc(), F.col(id_col).asc())
-            .limit(n))

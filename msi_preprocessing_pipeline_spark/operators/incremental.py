@@ -62,10 +62,10 @@ def refresh_group_agg(history: DataFrame, prev: DataFrame,
 
     Scale notes: touched = delta's distinct keys (|delta|-bounded);
     history is scanned under a semi-join filter on touched (predicate
-    reaches the scan for partition-pruned layouts — cluster history by
-    entity via ``sources.layout.write_clustered`` to skip whole
-    files); prev contributes an anti-join on the same key — three
-    key-partitioned exchanges, no full-history aggregation.
+    reaches the scan for partition-pruned layouts — range-partition and
+    sort history by entity to skip whole files); prev contributes an
+    anti-join on the same key — three key-partitioned exchanges, no
+    full-history aggregation.
     """
     keys = as_list(key_cols)
     touched = (delta.select(*[F.col(k).alias(f"__t_{k}") for k in keys])

@@ -2,7 +2,7 @@
 
 The canonical input is the pre-tokenized training-sequence table
 ``(doc_id, tokens: array<int>, n_tok, source)`` — the same shape
-:func:`..bpe.tokenized_table` emits.  On top of it this module builds the
+:func:`..unigram.unigram_tokenize` emits.  On top of it this module builds the
 corpus-statistics passes a training-data pipeline runs at scale:
 
 * :func:`hash_tokenize` — a deterministic hashing word tokenizer that

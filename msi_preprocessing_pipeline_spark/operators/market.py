@@ -56,28 +56,6 @@ def _pair_structs(items):
             lambda y: F.struct(x.alias("item_a"), y.alias("item_b")))))
 
 
-def cooccurrence_pairs(df: DataFrame, basket_col: str, item_col: str,
-                       min_count: int = 1,
-                       max_basket: int = 10_000) -> DataFrame:
-    """Unordered item-pair co-occurrence counts: ``(item_a, item_b,
-    n_pair)`` over distinct per-basket item sets, ``item_a < item_b``,
-    keeping pairs seen in at least ``min_count`` baskets.
-
-    Plan: basket assembly (ONE shuffle, basket-size-bounded state) →
-    JVM pair expansion (``transform``/``flatten``/``explode``) →
-    map-side-combined pair count.
-    """
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1, got {min_count}")
-    pairs = (_baskets(df, basket_col, item_col, max_basket)
-             .select(F.explode(_pair_structs(F.col("__items")))
-                     .alias("__p"))
-             .groupBy(F.col("__p.item_a").alias("item_a"),
-                      F.col("__p.item_b").alias("item_b"))
-             .agg(F.count("*").alias("n_pair")))
-    return pairs.where(F.col("n_pair") >= min_count)
-
-
 def association_rules(df: DataFrame, basket_col: str, item_col: str,
                       min_count: int = 1,
                       max_basket: int = 10_000) -> DataFrame:

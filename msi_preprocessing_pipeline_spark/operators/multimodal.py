@@ -1,8 +1,8 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque ``binary`` columns with typed metadata structs;
-decode / feature-extract / resize / frame-sample run as Arrow-batched UDFs
-over ``mapInPandas``. ``decoder='fake'`` produces a deterministic
+decode / resize / perceptual hash (:func:`phash64`) run as one Arrow-batched
+UDF over ``mapInPandas``. ``decoder='fake'`` produces a deterministic
 hash-seeded pixel array with the declared shape; ``decoder='real'``
 decodes UNCOMPRESSED formats in pure numpy (BMP 8/24-bit BI_RGB, PNM
 P5/P6 — zero new dependencies, round-trip tested) and raises
@@ -20,7 +20,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = ("media_id long, payload binary, mime string, "
                 "width int, height int, n_frames int")
@@ -104,39 +103,6 @@ def _real_decode(payload: bytes) -> np.ndarray:
         "real decode handles uncompressed BMP/PNM in pure numpy; "
         "compressed formats (JPEG/PNG/video) need Pillow/ffmpeg — not in "
         "this container")
-
-
-def decode_and_featurize(df: DataFrame, decoder: str = "fake",
-                         patch: int = 8) -> DataFrame:
-    """binary payload → decode → downsample to ``patch×patch`` mean-pooled
-    float features (the plumbing for any real per-media feature extractor).
-
-    Output: ``media_id, features array<float>`` with ``patch²`` entries.
-    """
-    if decoder not in ("fake", "real"):
-        raise ValueError("decoder must be 'fake' or 'real'")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload, w, h in zip(pdf["payload"], pdf["width"],
-                                     pdf["height"]):
-                if decoder == "real":
-                    img = _real_decode(bytes(payload))
-                else:
-                    img = _fake_decode(bytes(payload), int(w), int(h))
-                # mean-pool to patch×patch
-                ph = max(img.shape[0] // patch, 1)
-                pw = max(img.shape[1] // patch, 1)
-                pooled = img[:ph * patch, :pw * patch] \
-                    .reshape(patch, ph, patch, pw).mean(axis=(1, 3)) \
-                    if img.shape[0] >= patch and img.shape[1] >= patch \
-                    else np.resize(img.astype(float), (patch, patch))
-                feats.append(pooled.astype(np.float32).ravel())
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "features": feats})
-
-    return df.mapInPandas(run, schema="media_id long, features array<float>")
 
 
 def _resize_area(img: np.ndarray, size: int) -> np.ndarray:
@@ -288,18 +254,6 @@ def synth_media_from_ids(ids: DataFrame, id_col: str = "doc_id",
     return ids.select(id_col).mapInPandas(
         gen, schema=f"{id_col} {id_type}, payload binary, "
                     "width int, height int")
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame index
-    (JVM-side explode over the frame-count metadata; the decode of each
-    sampled frame would plug into :func:`decode_and_featurize`)."""
-    return df.select(
-        "media_id", "mime",
-        F.explode(F.sequence(
-            F.lit(0),
-            F.greatest(F.col("n_frames") - 1, F.lit(0)),
-            F.lit(every_n))).alias("frame_idx"))
 
 
 def make_fake_media(spark, n: int = 64) -> DataFrame:

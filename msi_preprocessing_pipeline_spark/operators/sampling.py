@@ -378,11 +378,10 @@ def temperature_mixture_plan(df: DataFrame, budget_docs: int,
     Scale shape: ONE corpus scan (map-side-combined source aggregation)
     to a |sources|-bounded relation; ALL quota math — the mass total,
     the floor quotas, the remainder rank, the leftover count — runs in
-    unpartitioned windows over that bounded relation (the bpe_vocab
-    precedent: a SinglePartition exchange of |sources| rows, never of
-    corpus rows).  The 1-row-aggregate crossJoin formulation would
-    re-derive the group relation per aggregate and re-scan the corpus
-    4× (caught by the plan pin).
+    unpartitioned windows over that bounded relation (a SinglePartition
+    exchange of |sources| rows, never of corpus rows).  The 1-row-aggregate
+    crossJoin formulation would re-derive the group relation per aggregate
+    and re-scan the corpus 4× (caught by the plan pin).
     """
     from pyspark.sql import Window
 

@@ -811,7 +811,6 @@ def hard_negatives(corpus: DataFrame, k: int = 1, id_col: str = "vec_id",
                    label_col: str = "label", vec_col: str = "embedding",
                    scale: int = 6,
                    candidates: DataFrame | None = None,
-                   strategy: str = "auto",
                    broadcast_limit: int = 4_000_000) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training: for
     every vector, the ``k`` most-cosine-similar vectors carrying a
@@ -826,21 +825,20 @@ def hard_negatives(corpus: DataFrame, k: int = 1, id_col: str = "vec_id",
     numpy; ties break by neighbor id.  Zero-norm vectors are excluded
     from BOTH sides (cosine undefined).
 
-    Plan shape: brute-force (``strategy='arrow'``, the ``'auto'``
-    default when the quantized matrix fits ``broadcast_limit`` cells —
-    same bound class as the nested-loop broadcast it replaces) is ONE
-    Arrow pass: the n×d int64 matrix + labels broadcast by closure,
-    per-batch exact matmul (float64 BLAS — products and partial sums
-    of micro-quantized ints stay under 2^53, so every dot is the exact
-    integer; int64 matmul fallback up to 2^63), same-label masking,
-    and a per-row (cos_q desc, id asc) top-k — NO pair relation ever
-    materializes.  ``strategy='join'`` keeps the pure-JVM
-    broadcast-nested-loop + window formulation (the cross-engine
+    Plan shape: brute force, when the quantized matrix fits
+    ``broadcast_limit`` cells (same bound class as the nested-loop
+    broadcast it replaces), is ONE Arrow pass: the n×d int64 matrix +
+    labels broadcast by closure, per-batch exact matmul (float64 BLAS —
+    products and partial sums of micro-quantized ints stay under 2^53, so
+    every dot is the exact integer; int64 matmul fallback up to 2^63),
+    same-label masking, and a per-row (cos_q desc, id asc) top-k — NO
+    pair relation ever materializes.  A larger matrix falls back to the
+    pure-JVM broadcast-nested-loop + window formulation (the cross-engine
     reference path, ~10× slower per pair through interpreted HOFs).
     At 10^9+ vectors pass ``candidates`` — an (id, neighbor) pair
     relation from ``lsh_topk``'s bucketer or ``ivf`` probes — and only
     those pairs are scored (two hash joins to fetch vectors, same
-    contract).  All strategies emit bit-identical rows (pytest-pinned).
+    contract).  All three plans emit bit-identical rows (pytest-pinned).
     """
     qv = _quantize_vecs(corpus, vec_col, scale)
     n2 = F.aggregate(F.transform(F.col("__q"), lambda x: x * x),
@@ -853,13 +851,12 @@ def hard_negatives(corpus: DataFrame, k: int = 1, id_col: str = "vec_id",
                      F.col(label_col).alias("neighbor_label"),
                      F.col("__q").alias("__qb"),
                      F.col("__n2").alias("__n2b"))
-    if candidates is None and strategy in ("auto", "arrow"):
+    if candidates is None:
         out = _hard_negatives_arrow(base, k, id_col, label_col,
-                                    broadcast_limit,
-                                    fail_hard=(strategy == "arrow"))
+                                    broadcast_limit)
         if out is not None:
             return out
-        # auto over the broadcast budget: fall through to the JVM
+        # over the broadcast budget: fall through to the JVM
         # nested-loop (its Spark-side broadcast enforces its own caps)
     if candidates is None:
         pairs = (base.crossJoin(F.broadcast(nb))
@@ -887,14 +884,13 @@ def hard_negatives(corpus: DataFrame, k: int = 1, id_col: str = "vec_id",
 
 
 def _hard_negatives_arrow(base: DataFrame, k: int, id_col: str,
-                          label_col: str, broadcast_limit: int,
-                          fail_hard: bool):
+                          label_col: str, broadcast_limit: int):
     """Brute-force hard negatives as ONE Arrow pass (see
     :func:`hard_negatives`): the quantized matrix broadcasts by
     closure; each batch of anchors scores against it with an EXACT
     matmul and ranks (cos_q desc, id asc) locally.  Returns None when
-    the matrix exceeds ``broadcast_limit`` cells and ``fail_hard`` is
-    False (the caller falls back to the JVM nested-loop)."""
+    the matrix exceeds ``broadcast_limit`` cells (the caller falls back
+    to the JVM nested-loop)."""
     import numpy as np
     import pandas as pd
 
@@ -902,11 +898,6 @@ def _hard_negatives_arrow(base: DataFrame, k: int, id_col: str,
     n = len(rows)
     d = len(rows[0]["__q"]) if n else 0
     if n * d > broadcast_limit:
-        if fail_hard:
-            raise ValueError(
-                f"hard_negatives(strategy='arrow'): {n}x{d} quantized "
-                f"matrix exceeds broadcast_limit={broadcast_limit}; "
-                "pass candidates= (ANN buckets) or raise the limit")
         return None
     ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     labels = np.array([r[label_col] for r in rows])

@@ -1,5 +1,6 @@
-"""Sketch-based distinct counting: Apache DataSketches HLL via Spark's
-built-in ``hll_sketch_agg`` / ``hll_union_agg`` / ``hll_sketch_estimate``.
+"""Mergeable sketches over Spark's built-in aggregates: HLL distinct
+counts (``hll_sketch_agg`` / ``hll_sketch_estimate``), Count-Min
+frequencies and Theta distinct sets.
 
 At 10^12 rows an exact ``countDistinct`` over a high-cardinality key is a
 full shuffle of every distinct value; the HLL sketch is a few KB per group,
@@ -7,44 +8,19 @@ map-side combined, and — because register-max merging is commutative and
 associative — the estimate is DETERMINISTIC regardless of partitioning or
 merge order, so it is golden-pinnable like the other seeded operators.
 
-The two-level API models the incremental-pipeline shape: persist per-slice
-sketches (e.g. one row per day x group), then union any subset of slices to
-answer "distinct users over an arbitrary date range" without rescanning raw
-data — the classic pre-aggregated-sketch rollup.
+Theta sketches carry the slice-table shape: persist per-slice sketches (e.g.
+one row per day x group), then union any subset of slices to answer
+"distinct users over an arbitrary date range" without rescanning raw data —
+the classic pre-aggregated-sketch rollup.
 """
 
 from __future__ import annotations
-
-from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 from ..functions.util import as_list as _as_list  # noqa: E402
-
-
-def distinct_sketches(df: DataFrame, key: str, group_by,
-                      lg_k: int = 12,
-                      sketch_col: str = "hll_sketch") -> DataFrame:
-    """One HLL sketch (binary) per group over ``key`` — the persistable
-    intermediate. ``lg_k=12`` -> 4096 registers, ~1.6% relative error."""
-    return (df.groupBy(*_as_list(group_by))
-            .agg(F.hll_sketch_agg(F.col(key), F.lit(lg_k))
-                 .alias(sketch_col)))
-
-
-def merge_sketches(sketches: DataFrame, group_by,
-                   sketch_col: str = "hll_sketch",
-                   out_col: str = "n_distinct") -> DataFrame:
-    """Union per-slice sketches down to ``group_by`` and estimate: the
-    date-range rollup over a pre-aggregated sketch table."""
-    keys = _as_list(group_by)
-    agg = F.hll_union_agg(F.col(sketch_col)).alias(sketch_col)
-    merged = (sketches.groupBy(*keys).agg(agg) if keys
-              else sketches.groupBy().agg(agg))
-    return merged.select(
-        *keys, F.hll_sketch_estimate(F.col(sketch_col)).alias(out_col))
 
 
 def approx_distinct(df: DataFrame, key: str, group_by,
@@ -125,43 +101,6 @@ def count_min(df: DataFrame, key: str, group_by=None,
                              F.lit(int(seed))).alias(sketch_col)
     keys = [] if group_by is None else _as_list(group_by)
     return df.groupBy(*keys).agg(agg)
-
-
-# ---------------------------------------------------------------------------
-# KLL quantile sketch: mergeable approximate quantiles
-
-def quantile_sketches(df: DataFrame, col: str, group_by=None, k: int = 200,
-                      sketch_col: str = "kll") -> DataFrame:
-    """DataSketches KLL quantile sketch per group over a double column —
-    the mergeable complement to :mod:`operators.quantiles` (exact): O(k)
-    state per group, rank error ~1.65/k at 99% confidence, union-mergeable
-    with ``kll_merge_agg_double`` for slice-table rollups.
-
-    Unlike the HLL/CMS sketches, KLL compaction is RANDOMIZED (coin-flip
-    compactors), so sketch bytes and estimates are NOT partition-invariant
-    — accuracy is asserted by rank-error tests against the exact-quantile
-    operator instead of a pinned golden; use exact quantiles when
-    reproducibility matters more than state size.
-    """
-    agg = F.kll_sketch_agg_double(F.col(col).cast("double"),
-                                  F.lit(int(k))).alias(sketch_col)
-    keys = [] if group_by is None else _as_list(group_by)
-    return df.groupBy(*keys).agg(agg)
-
-
-def sketch_quantiles(sketches: DataFrame, qs: Sequence[float],
-                     sketch_col: str = "kll") -> DataFrame:
-    """Evaluate quantiles from a KLL sketch table — one output column per
-    requested quantile, computed JVM-side from the binary sketch."""
-    # dot-free names (q0_5, not q0.5): a dot in a column name forces every
-    # downstream reference through backticks
-    exprs = [
-        F.kll_sketch_get_quantile_double(F.col(sketch_col), F.lit(float(q)))
-        .alias("q" + str(q).replace(".", "_"))
-        for q in qs
-    ]
-    others = [c for c in sketches.columns if c != sketch_col]
-    return sketches.select(*others, *exprs)
 
 
 # ---------------------------------------------------------------------------

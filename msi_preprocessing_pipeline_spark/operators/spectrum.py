@@ -38,7 +38,6 @@ from ..functions.arrowutil import list_col_matrix
 from ..kernels import alignment, axis as axis_k, baseline as baseline_k
 from ..kernels import convolve as convolve_k, merge as merge_k
 from ..kernels import outlier as outlier_k
-from ..kernels.stats import median_and_iqr
 from ..oracle import PipelineConfig
 
 
@@ -222,13 +221,12 @@ def tic_outlier_thresholds(df: DataFrame,
     """TIC outlier thresholds (SURVEY.md §2 A9) from one collect of the
     ``tic`` column: 8 bytes per spectrum, against the few KB per spectrum
     of the stage it is read from. The driver then runs the oracle's own
-    kernel, :func:`~..kernels.outlier.detect_thresholds`. Fewer than
-    ``MIN_POPULATION`` rows, or a zero IQR, keeps every row.
+    kernel, :func:`~..kernels.outlier.detect_thresholds`. An empty ``df``
+    raises a ``ValueError``: there is nothing to fit.
     """
     tics = df.select("tic").toPandas()["tic"].to_numpy(dtype=float)
-    if tics.size < outlier_k.MIN_POPULATION or \
-            median_and_iqr(tics)[1] == 0.0:
-        return outlier_k.TicThresholds(b1=float("-inf"), b2=float("inf"))
+    if tics.size == 0:
+        raise ValueError("no spectra to fit: the TIC column is empty")
     return outlier_k.detect_thresholds(tics, seed=seed)
 
 
@@ -241,10 +239,10 @@ def with_inlier_mask(df: DataFrame, thr: outlier_k.TicThresholds) -> DataFrame:
 
 
 def masked_mean_reference(df: DataFrame, vec_col: str,
-                          mask_col: str = "is_inlier",
                           scale_to_tic: float | None = None) -> np.ndarray:
     """Reference-spectrum aggregation (``pipeline/_base.py:77-90``):
-    per-source inlier mean, count-weighted average across sources.
+    per-source mean over the ``is_inlier`` rows, count-weighted average
+    across sources.
 
     Scalable shape: per-partition float64 partial sums (tiny: one vector per
     (partition × source)) → driver combine. No applyInPandas group
@@ -264,7 +262,7 @@ def masked_mean_reference(df: DataFrame, vec_col: str,
         for b in batches:
             names = b.schema.names
             mat = list_col_matrix(b, vec_col, np.float32)
-            mask = b.column(names.index(mask_col)) \
+            mask = b.column(names.index("is_inlier")) \
                 .to_numpy(zero_copy_only=False).astype(bool)
             srcs = np.asarray(
                 b.column(names.index("source")).to_pylist(), dtype=object)
@@ -285,7 +283,7 @@ def masked_mean_reference(df: DataFrame, vec_col: str,
                                    dtype=np.int64))],
                 names=["source", "vec_sum", "n"])
 
-    rows = (df.select("source", vec_col, mask_col)
+    rows = (df.select("source", vec_col, "is_inlier")
             .mapInArrow(partials,
                         schema="source string, vec_sum array<double>, n long")
             .collect())
@@ -304,14 +302,14 @@ def masked_mean_reference(df: DataFrame, vec_col: str,
     return np.average(np.asarray(refs), axis=0, weights=np.asarray(counts))
 
 
-def masked_weighted_mean_scalar(df: DataFrame, col: str,
-                                mask_col: str = "is_inlier") -> float:
-    """Count-weighted mean across sources of the per-source inlier mean of a
-    SCALAR column — the scalar analog of :func:`masked_mean_reference`
-    (used for the TIC reference: ``Σ_channels mean_vector`` ==
-    ``mean of row sums``). Pure JVM aggregation: per-(partition, source)
-    partial sums, content-sorted driver combine for bit-determinism."""
-    parts = (df.where(F.col(mask_col))
+def masked_weighted_mean_scalar(df: DataFrame, col: str) -> float:
+    """Count-weighted mean across sources of the per-source ``is_inlier``
+    mean of a SCALAR column — the scalar analog of
+    :func:`masked_mean_reference` (used for the TIC reference:
+    ``Σ_channels mean_vector`` == ``mean of row sums``). Pure JVM
+    aggregation: per-(partition, source) partial sums, content-sorted
+    driver combine for bit-determinism."""
+    parts = (df.where(F.col("is_inlier"))
              .groupBy(F.spark_partition_id().alias("pid"), F.col("source"))
              .agg(F.sum(col).alias("s"), F.count("*").alias("n"))
              .collect())

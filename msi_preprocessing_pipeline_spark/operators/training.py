@@ -446,7 +446,7 @@ def oof_target_stats(df: DataFrame, category_col: str, target_col: str,
 
     Plan shape at 10^12 rows: ONE map-side-combined aggregation on
     (category, fold) → k·|categories| rows → window + arithmetic.  Join
-    the result back broadcast (:func:`target_encode_oof`).
+    the result back broadcast.
     """
     from ..functions.util import quantize, trunc_div
 
@@ -485,22 +485,3 @@ def oof_target_stats(df: DataFrame, category_col: str, target_col: str,
     return oof.select(category_col, fold_col,
                       F.col("__n_oof").cast("bigint").alias("n_oof"),
                       te.alias("te_oof_u"))
-
-
-def target_encode_oof(df: DataFrame, category_col: str, target_col: str,
-                      fold_col: str = "fold", scale: int = 6,
-                      out_scale: int = 6,
-                      out_col: str | None = None) -> DataFrame:
-    """Row-level out-of-fold target encoding: broadcast-join the
-    :func:`oof_target_stats` table (densified to categories × observed
-    folds, so a cell with zero valid-target rows still receives the
-    other folds' mean) back onto the corpus.  Rows whose (category,
-    fold) truly has no out-of-fold signal — and rows with null
-    category/fold — keep a null encoding.  One broadcast hash join, no
-    corpus shuffle."""
-    out = out_col or f"te_oof_{target_col}"
-    table = oof_target_stats(df, category_col, target_col, fold_col,
-                             scale, out_scale, densify=True)
-    enc = F.broadcast(table.select(
-        category_col, fold_col, F.col("te_oof_u").alias(out)))
-    return df.join(enc, [category_col, fold_col], "left")

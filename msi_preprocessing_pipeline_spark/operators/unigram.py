@@ -233,10 +233,10 @@ def unigram_tokenize(docs: DataFrame, pieces: list[Piece],
                      source_col: str = "source", unk_id: int = 0,
                      max_piece_len: int | None = None) -> DataFrame:
     """Tokenize documents with a fitted unigram vocabulary: ONE map-only
-    Arrow pass (the ``tokenized_table`` shape — zero exchanges on corpus
-    rows), per-batch distinct-word cache, Viterbi per word under the
-    broadcast piece scores.  Unseen characters emit ``unk_id``.  Docs
-    with null/empty text are KEPT with ``tokens = []``."""
+    Arrow pass (zero exchanges on corpus rows), per-batch distinct-word
+    cache, Viterbi per word under the broadcast piece scores.  Unseen
+    characters emit ``unk_id``.  Docs with null/empty text are KEPT with
+    ``tokens = []``."""
     import pandas as pd
 
     if max_piece_len is None:

@@ -21,7 +21,7 @@ engine's canonical ``(doc_id, tokens array<int>, ...)`` input shape:
     into ONE ``mapInPandas`` pass as a numpy lookup table; the batch's
     token arrays are flattened, remapped in one vectorized ``take``,
     and re-split by length.  Zero exchanges on corpus rows — the same
-    shape as ``bpe.tokenized_table`` and the right plan at 100 TB.
+    shape as ``unigram.unigram_tokenize`` and the right plan at 100 TB.
   - ``strategy="relational"``: ``posexplode_outer`` -> broadcast join
     against the vocab -> per-doc ordered reassembly.  One corpus-sized
     shuffle; exists for vocabularies too large to collect and as the

@@ -133,10 +133,19 @@ class FeaturePipeline:
             lambda: sp.resample_baseline_stage(
                 self._maybe_rebalance(df), self.source_axes,
                 mz_axis, cfg))
+
+        def thresholds() -> list:
+            # the TIC collect is where the driver first sees the fit's
+            # rows: an empty fit (no row at or before max_ts) is named here
+            try:
+                return list(sp.tic_outlier_thresholds(
+                    stage_a, seed=cfg.outlier_seed))
+            except ValueError as e:
+                raise ValueError(f"fit of version {version} "
+                                 f"(max_ts={max_ts}): {e}") from e
+
         thr = outlier_k.TicThresholds(*runner.run_artifact(
-            "tic_thresholds",
-            lambda: list(sp.tic_outlier_thresholds(stage_a,
-                                                   seed=cfg.outlier_seed))))
+            "tic_thresholds", thresholds))
         masked = sp.with_inlier_mask(stage_a, thr)
         pafft_ref = np.asarray(runner.run_artifact(
             "pafft_reference",

@@ -1,4 +1,3 @@
 """Sources and sinks: testdata table loaders, the deterministic synthetic
-sequence generator, the reference-format ASCII spectrum reader, bucketed
-tables, and the clustered parquet layout writer (hive partitioning +
-range-partitioned, timestamp-sorted files)."""
+sequence generator, the reference-format ASCII spectrum reader and bucketed
+tables."""

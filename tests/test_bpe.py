@@ -1,7 +1,6 @@
 """BPE tokenizer fit/encode (operators/bpe.py)."""
 
 import pytest
-from pyspark.sql import functions as F  # noqa: F401
 
 from msi_preprocessing_pipeline_spark.operators.bpe import (
     bpe_segment_word, encode_bpe, fit_bpe, word_frequencies)
@@ -61,39 +60,6 @@ def test_fit_bpe_vocab_cap(tiny_corpus):
                 collect_threshold=3)
 
 
-def test_tokenized_table_matches_baseline_shape(tiny_corpus, spark):
-    from msi_preprocessing_pipeline_spark.operators.bpe import (
-        bpe_vocab, tokenized_table)
-
-    docs = tiny_corpus.withColumn("source", F.lit("srcA"))
-    merges = fit_bpe(word_frequencies(docs), n_merges=10)
-    out = tokenized_table(docs, merges)
-    assert out.schema.simpleString() == \
-        "struct<doc_id:bigint,tokens:array<int>,n_tok:int,source:string>"
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert all(r["n_tok"] == len(r["tokens"]) > 0 for r in rows.values())
-
-    # ids decode back to the exact symbol sequence
-    enc = {r["doc_id"]: r["bpe_tokens"]
-           for r in encode_bpe(docs, merges).collect()}
-    vocab = {r["token_id"]: r["symbol"]
-             for r in bpe_vocab(encode_bpe(docs, merges)).collect()}
-    for d, r in rows.items():
-        assert [vocab[t] for t in r["tokens"]] == enc[d]
-
-
-def test_tokenized_table_unknown_symbol_raises(tiny_corpus, spark):
-    from msi_preprocessing_pipeline_spark.operators.bpe import (
-        bpe_vocab, tokenized_table)
-
-    merges = fit_bpe(word_frequencies(tiny_corpus), n_merges=5)
-    foreign = bpe_vocab(encode_bpe(
-        spark.createDataFrame([(9, "zzz qqq")], "doc_id long, text string"),
-        merges))
-    with pytest.raises(Exception, match="missing from vocab"):
-        tokenized_table(tiny_corpus, merges, vocab=foreign).collect()
-
-
 def test_fit_bpe_incremental_matches_rescan_reference(spark):
     """The incremental (subword-nmt style) fit must produce the EXACT merge
     sequence of the naive full-rescan reference, including tie-breaks."""
@@ -118,34 +84,6 @@ def test_fit_bpe_incremental_matches_rescan_reference(spark):
         wf.unpersist()
 
 
-def test_tokenized_table_keeps_null_and_empty_docs(tiny_corpus, spark):
-    from msi_preprocessing_pipeline_spark.operators.bpe import tokenized_table
-
-    extra = spark.createDataFrame(
-        [(90, None), (91, ""), (92, "   ")], "doc_id long, text string")
-    docs = tiny_corpus.unionByName(extra)
-    merges = fit_bpe(word_frequencies(docs), n_merges=10)
-    rows = {r["doc_id"]: r for r in tokenized_table(docs, merges).collect()}
-    assert set(rows) == {1, 2, 90, 91, 92}
-    for d in (90, 91, 92):
-        assert rows[d]["tokens"] == [] and rows[d]["n_tok"] == 0
-
-
-def test_vocab_from_histogram_matches_corpus_vocab(tiny_corpus):
-    """Histogram-derived (symbol, freq, id) must be identical to the
-    corpus-scan bpe_vocab: every corpus token is a segmented-word symbol."""
-    from msi_preprocessing_pipeline_spark.operators.bpe import (
-        bpe_vocab, bpe_vocab_from_histogram)
-
-    merges = fit_bpe(word_frequencies(tiny_corpus), n_merges=10)
-    from_corpus = sorted(
-        (r["symbol"], r["freq"], r["token_id"])
-        for r in bpe_vocab(encode_bpe(tiny_corpus, merges)).collect())
-    from_hist = sorted(
-        bpe_vocab_from_histogram(word_frequencies(tiny_corpus), merges))
-    assert from_corpus == from_hist
-
-
 def test_encode_bpe_string_id_column(spark):
     """The id column keeps its input type (r3 hardcoded 'long')."""
     docs = spark.createDataFrame(
@@ -154,15 +92,3 @@ def test_encode_bpe_string_id_column(spark):
     out = encode_bpe(docs, merges)
     assert dict(out.dtypes)["doc_id"] == "string"
     assert {r["doc_id"] for r in out.collect()} == {"a1", "b2"}
-
-
-def test_tokenized_table_plan_has_no_exchange(tiny_corpus):
-    """The canonical-table build is ONE map-only Arrow pass: no
-    token-granularity shuffle, no doc-id reassembly join."""
-    from msi_preprocessing_pipeline_spark.operators.bpe import tokenized_table
-
-    docs = tiny_corpus.withColumn("source", F.lit("srcA"))
-    merges = fit_bpe(word_frequencies(docs), n_merges=10)
-    plan = tokenized_table(docs, merges)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan and "Join" not in plan

@@ -8,8 +8,7 @@ from pyspark.sql import Row
 
 from msi_preprocessing_pipeline_spark.operators.embeddings import (
     centroid_distance_features, covariance_matrix, embedding_moments,
-    embedding_norms, label_centroids, normalize_embeddings, pca_fit,
-    pca_project)
+    embedding_norms, label_centroids, pca_fit, pca_project)
 
 
 def _vec_df(spark, rows, with_label=False):
@@ -24,13 +23,10 @@ def _vec_df(spark, rows, with_label=False):
 
 def test_norms_and_normalize(spark):
     df = _vec_df(spark, [(1, [3.0, 4.0]), (2, [0.0, 0.0]), (3, None)])
-    out = {r.vec_id: r for r in
-           normalize_embeddings(embedding_norms(df)).collect()}
+    out = {r.vec_id: r for r in embedding_norms(df).collect()}
     assert out[1].l2_norm == pytest.approx(5.0)
-    assert out[1].embedding_unit == pytest.approx([0.6, 0.8])
     assert out[2].l2_norm == 0.0
-    assert out[2].embedding_unit is None  # zero vector has no direction
-    assert out[3].l2_norm is None and out[3].embedding_unit is None
+    assert out[3].l2_norm is None
 
 
 def test_moments_match_numpy(spark):

@@ -1,13 +1,12 @@
-"""corr_matrix / redundant_features: pandas parity on quantized inputs,
-pairwise-complete nulls, partition invariance, zero-variance nulls, the
-2^53 exactness guard, and the drop rule."""
+"""corr_matrix: pandas parity on quantized inputs, pairwise-complete
+nulls, partition invariance, zero-variance nulls and the 2^53 exactness
+guard."""
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import Row
 
-from msi_preprocessing_pipeline_spark.operators.featsel import (
-    corr_matrix, redundant_features)
+from msi_preprocessing_pipeline_spark.operators.featsel import corr_matrix
 
 
 def _pdf(n=400, seed=7):
@@ -89,26 +88,6 @@ def test_exactness_guard_fires(spark):
     rows = corr_matrix(df, ["a", "b"], scales=6,
                        assert_exact=False).collect()
     assert rows[0].corr_u is not None
-
-
-def test_redundant_features_rule(spark):
-    rng = np.random.RandomState(3)
-    x = rng.uniform(-3, 3, 300)
-    pdf = pd.DataFrame({
-        "x": x,
-        "x_copy": x * 3.0,                       # perfect linear copy
-        "y": 2.0 * x + rng.normal(0, 1.3, 300),  # corr(x,y) ≈ 0.94
-        "z": rng.uniform(0, 10, 300),            # independent
-    })
-    corr = corr_matrix(spark.createDataFrame(pdf),
-                       ["x", "x_copy", "y", "z"], scales=4)
-    drops = {r.feature: r.because_of
-             for r in redundant_features(corr, threshold=0.98).collect()}
-    assert drops == {"x_copy": "x"}
-    # lower threshold also sweeps in y
-    drops2 = {r.feature: r.because_of
-              for r in redundant_features(corr, threshold=0.9).collect()}
-    assert set(drops2) == {"x_copy", "y"} and drops2["y"] == "x"
 
 
 def test_validation_errors(spark):

@@ -11,8 +11,11 @@ fresh kernels reproduce the reference numerics:
 * merge       — ``test/components/spectrum/test_model.py:9-72``
 """
 
+import warnings
+
 import numpy as np
 import numpy.testing as npt
+import pytest
 
 from msi_preprocessing_pipeline_spark.kernels import alignment, axis, merge, stats
 from msi_preprocessing_pipeline_spark.kernels import baseline as bl
@@ -27,9 +30,10 @@ def test_matlab_alike_quantile_golden():
 
 
 def test_miqr():
-    # n=11 → remap a=1.1, b=-.05: q25→22.5th pct = 2.25, q75→77.5th = 7.75
+    # reference ``miqr`` golden through the engine's IQR: n=11 → remap
+    # a=1.1, b=-.05: q25→22.5th pct = 2.25, q75→77.5th = 7.75
     values = np.arange(11)
-    npt.assert_almost_equal(stats.miqr(values), 7.75 - 2.25)
+    npt.assert_almost_equal(stats.median_and_iqr(values)[1], 7.75 - 2.25)
 
 
 def test_estimate_axis_modelled_golden():
@@ -158,10 +162,12 @@ def test_apply_merging_single_row():
 
 
 def test_outlier_detects_huge_tic():
-    # FIXTURES.md F4: one huge outlier in an otherwise tame TIC population
+    # FIXTURES.md F4: one huge outlier in an otherwise tame TIC population;
+    # a row is an outlier iff tic <= b1 or tic >= b2
     rng = np.random.RandomState(3)
     tics = np.concatenate([rng.normal(1000.0, 20.0, 199), [50000.0]])
-    mask = outlier.detect_outliers(tics)
+    thr = outlier.detect_thresholds(tics)
+    mask = (tics <= thr.b1) | (tics >= thr.b2)
     assert mask[-1]
     assert mask.sum() <= 5  # nearly everything else kept
 
@@ -172,10 +178,18 @@ def test_outlier_deterministic():
     t1 = outlier.detect_thresholds(tics)
     t2 = outlier.detect_thresholds(tics)
     assert t1 == t2
-    # two-phase split equals end-to-end numpy
-    stats_ = outlier.tic_stats_numpy(tics)
-    t3 = outlier.thresholds_from_stats(stats_)
-    npt.assert_allclose([t1.b1, t1.b2], [t3.b1, t3.b2])
+
+
+@pytest.mark.parametrize("tics", [
+    [], [1000.0], [900.0, 950.0, 1000.0, 1010.0, 1100.0, 1200.0, 5000.0],
+    [1000.0] * 50], ids=["empty", "one", "seven", "constant"])
+def test_outlier_degenerate_population_keeps_every_row(tics):
+    """Fewer than MIN_POPULATION values, or a zero IQR, keeps every row,
+    without a numpy warning or a division by zero on the way."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        thr = outlier.detect_thresholds(np.asarray(tics, dtype=float))
+    assert thr == (-np.inf, np.inf)
 
 
 def test_baseline_adaptive_remove_verbatim_golden():

@@ -169,6 +169,19 @@ def test_rows_before_first_checkpoint_get_null_features(table, axes):
     assert early["artifact_version"].isna().all()
 
 
+def test_fit_before_the_first_row_names_the_version(table, axes):
+    """A checkpoint before the first row leaves nothing to fit: the fit
+    raises a ValueError naming the version and max_ts, from its TIC
+    collect."""
+    pipe = FeaturePipeline(table.sparkSession, axes, CFG)
+    too_early = CFG.epoch_base - 60
+    assert table.where(F.col("ts") <= too_early).count() == 0
+    with pytest.raises(ValueError, match=(
+            rf"^fit of version 1 \(max_ts={too_early}\): no spectra to "
+            "fit")):
+        pipe.fit_pit(table, [too_early])
+
+
 def test_short_token_row_error_names_the_row(table, axes):
     """A row whose token count is not its source axis length fails the fit
     and the serve with an error naming its doc_id and both lengths."""

@@ -569,20 +569,15 @@ def test_pq_encode_map_only(spark):
 
 
 def test_weighted_sample_and_dsir_topk_take_ordered(spark):
-    """Both top-n selections compile to TakeOrderedAndProject (per-
-    partition heaps + one small merge), never a full global sort."""
-    import numpy as np
-    from msi_preprocessing_pipeline_spark.operators.importance import (
-        dsir_topk, dsir_weights)
+    """weighted_sample_k's top-n selection compiles to
+    TakeOrderedAndProject (per-partition heaps + one small merge), never a
+    full global sort."""
     from msi_preprocessing_pipeline_spark.operators.sampling import (
         weighted_sample_k)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     p1 = plan_of(weighted_sample_k(docs, "doc_id", "n_chars", n=10),
                  "simple")
     assert "TakeOrderedAndProject" in p1
-    w = dsir_weights(docs, np.ones(64, dtype=np.int64), buckets=64)
-    p2 = plan_of(dsir_topk(w, 10), "simple")
-    assert "TakeOrderedAndProject" in p2
 
 
 def test_c4_filter_is_map_only(spark):
@@ -932,17 +927,6 @@ def test_ps_match_axis_broadcast_back(spark):
     # the global sweep windows run on the distinct-score axis only: no
     # corpus-wide single-partition exchange of the raw event rows
     assert plan.count("Exchange SinglePartition") <= 2, plan
-
-
-def test_oof_target_encode_broadcast_join(spark):
-    from msi_preprocessing_pipeline_spark.operators.training import (
-        target_encode_oof)
-
-    ev = (spark.read.parquet(f"{SF_DIR}/events.parquet")
-          .withColumn("fold", (F.col("event_id") % 5).cast("int")))
-    out = target_encode_oof(ev, "event_type", "value", "fold")
-    plan = plan_of(out, "simple")
-    assert "BroadcastHashJoin" in plan  # encode table broadcasts back
 
 
 def test_cusum_changepoint_single_entity_partitioning(spark):

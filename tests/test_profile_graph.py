@@ -6,8 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from msi_preprocessing_pipeline_spark.operators.graph import (
-    degree_stats, pagerank)
+from msi_preprocessing_pipeline_spark.operators.graph import pagerank
 from msi_preprocessing_pipeline_spark.operators.profile import (
     disorder_stats, heavy_keys, key_counts, key_profile)
 
@@ -110,15 +109,6 @@ def test_pagerank_dangling_and_validation(spark):
                    {"scale": 10}):
         with pytest.raises(ValueError):
             pagerank(df, "s", "d", **kwargs)
-
-
-def test_degree_stats(spark):
-    df = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (1, 2), (None, 2), (3, None)],
-        "s long, d long")
-    got = {r["node"]: (r["out_deg"], r["in_deg"])
-           for r in degree_stats(df, "s", "d").collect()}
-    assert got == {1: (2, 0), 2: (1, 1), 3: (0, 2)}
 
 
 def _brute_triangles(pairs):

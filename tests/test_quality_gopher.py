@@ -360,23 +360,30 @@ def test_hard_negatives_arrow_join_strategies_identical(spark):
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet") \
         .where(F.col("vec_id") < 120)
-    a = sorted(map(tuple,
-                   hard_negatives(emb, k=3, strategy="arrow").collect()))
-    b = sorted(map(tuple,
-                   hard_negatives(emb, k=3, strategy="join").collect()))
+    arrow = hard_negatives(emb, k=3)
+    join = hard_negatives(emb, k=3, broadcast_limit=0)
+    assert "MapInPandas" in arrow._jdf.queryExecution().executedPlan() \
+        .toString()
+    assert "MapInPandas" not in join._jdf.queryExecution().executedPlan() \
+        .toString()
+    a = sorted(map(tuple, arrow.collect()))
+    b = sorted(map(tuple, join.collect()))
     assert a == b and len(a) > 0
 
 
 def test_hard_negatives_arrow_limit_falls_back_or_raises(spark):
-    import pytest
-
+    """Over ``broadcast_limit`` the Arrow plan falls back to the join plan,
+    with the same rows."""
     from msi_preprocessing_pipeline_spark.operators.similarity import (
         hard_negatives)
 
     emb = spark.read.parquet(f"{SF001}/embeddings.parquet") \
         .where(F.col("vec_id") < 30)
-    with pytest.raises(ValueError, match="broadcast_limit"):
-        hard_negatives(emb, k=1, strategy="arrow", broadcast_limit=10)
-    # auto falls back to the join plan silently and stays correct
-    out = hard_negatives(emb, k=1, strategy="auto", broadcast_limit=10)
+    # a 30x64 matrix over a 10-cell limit falls back to the join plan
+    # silently and stays correct
+    out = hard_negatives(emb, k=1, broadcast_limit=10)
+    assert "MapInPandas" not in out._jdf.queryExecution().executedPlan() \
+        .toString()
+    assert sorted(map(tuple, out.collect())) == \
+        sorted(map(tuple, hard_negatives(emb, k=1).collect()))
     assert out.count() > 0

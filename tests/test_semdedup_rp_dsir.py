@@ -218,25 +218,6 @@ def test_dsir_null_text_keeps_row(spark):
     assert pd.isna(out.loc[2, "weight_q"])
 
 
-def test_dsir_topk_deterministic(spark):
-    from msi_preprocessing_pipeline_spark.operators.importance import (
-        dsir_bucket_logratios, dsir_topk, dsir_weights)
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    lamq = dsir_bucket_logratios(
-        docs, docs.where(F.col("lang") == "en"), buckets=256)
-    w = dsir_weights(docs, lamq, buckets=256)
-    a = dsir_topk(w, 10).toPandas()
-    b = dsir_topk(w.repartition(5), 10).toPandas()
-    pd.testing.assert_frame_equal(
-        a.reset_index(drop=True), b.reset_index(drop=True),
-        check_exact=True)
-    # selected = the global top by (weight desc, id asc)
-    full = w.toPandas().sort_values(
-        ["weight_q", "doc_id"], ascending=[False, True])
-    assert list(a["doc_id"]) == list(full["doc_id"].head(10))
-
-
 def test_semdedup_decimal_overflow_guard(spark):
     """Magnitudes that pass the int64 dot guard but would overflow the
     decimal(38,0) cosine comparison must fail fast, not silently keep

@@ -5,8 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from msi_preprocessing_pipeline_spark.operators.sampling import mixture_sample
-from msi_preprocessing_pipeline_spark.operators.sketches import (
-    approx_distinct, distinct_sketches, merge_sketches)
+from msi_preprocessing_pipeline_spark.operators.sketches import approx_distinct
 
 
 @pytest.fixture(scope="module")
@@ -27,16 +26,6 @@ def test_approx_distinct_within_hll_error(users):
     for g in exact:
         # lg_k=12 -> ~1.6% relative standard error; allow 5%
         assert abs(est[g] - exact[g]) / exact[g] < 0.05
-
-
-def test_sketch_table_union_matches_direct(users):
-    # per-(grp, day) sketch table, then rolled up over days == direct
-    slices = distinct_sketches(users, "user_id", ["grp", "day"])
-    rolled = {r["grp"]: r["n_distinct"]
-              for r in merge_sketches(slices, "grp").collect()}
-    direct = {r["grp"]: r["n_distinct"]
-              for r in approx_distinct(users, "user_id", "grp").collect()}
-    assert rolled == direct  # register-max merge is exact under union
 
 
 def test_sketch_estimate_partition_invariant(users):
@@ -107,19 +96,6 @@ def test_mixture_sample_integer_group_keys(spark):
     assert counts[0] == 500 or counts[1] == 500  # binding group kept whole
 
 
-def test_sketch_table_parquet_roundtrip(spark, tmp_path, users):
-    """The per-slice sketch table is a persistable intermediate: write to
-    parquet, read back, union-rollup — estimates identical to direct."""
-    path = str(tmp_path / "sketches")
-    distinct_sketches(users, "user_id", ["grp", "day"]).write.parquet(path)
-    reloaded = spark.read.parquet(path)
-    rolled = {r["grp"]: r["n_distinct"]
-              for r in merge_sketches(reloaded, "grp").collect()}
-    direct = {r["grp"]: r["n_distinct"]
-              for r in approx_distinct(users, "user_id", "grp").collect()}
-    assert rolled == direct
-
-
 # ---------------------------------------------------------------------------
 # Count-Min sketch
 
@@ -165,45 +141,6 @@ def test_cms_grouped(spark):
         ests = cms.estimate(list(range(10)))
         for k, e in enumerate(ests):
             assert e == (100 if k % 2 == g else 0)
-
-
-# ---------------------------------------------------------------------------
-# KLL quantile sketch
-
-def test_kll_quantiles_within_rank_error(spark):
-    from msi_preprocessing_pipeline_spark.operators.quantiles import (
-        exact_quantiles)
-    from msi_preprocessing_pipeline_spark.operators.sketches import (
-        quantile_sketches, sketch_quantiles)
-
-    df = spark.range(0, 20_000).select(
-        ((F.col("id") * 37 % 20_000).cast("double")).alias("x"))
-    qs = [0.1, 0.5, 0.9]
-    sk = quantile_sketches(df, "x", k=200)
-    got = sketch_quantiles(sk, qs).first()
-    exact = exact_quantiles(df, "x", qs)
-    n = 20_000
-    for q, e in zip(qs, exact):
-        # rank error ~1.65/k -> value error ~ rank_err * n on this uniform
-        # grid; allow 3x slack for the randomized compaction
-        key = "q" + str(q).replace(".", "_")
-        assert abs(got[key] - e) <= 3 * (1.65 / 200) * n
-
-
-def test_kll_sketch_table_rollup(spark):
-    from msi_preprocessing_pipeline_spark.operators.sketches import (
-        quantile_sketches)
-
-    df = spark.range(0, 10_000).select(
-        (F.col("id") % 4).alias("g"), F.col("id").cast("double").alias("x"))
-    slices = quantile_sketches(df, "x", group_by="g")
-    merged = slices.agg(
-        F.kll_merge_agg_double(F.col("kll")).alias("kll"))
-    med = merged.select(
-        F.kll_sketch_get_quantile_double("kll", F.lit(0.5)).alias("m"),
-        F.kll_sketch_get_n_double("kll").alias("n")).first()
-    assert med["n"] == 10_000
-    assert abs(med["m"] - 5_000) < 500  # rough median of the union
 
 
 # ---------------------------------------------------------------------------

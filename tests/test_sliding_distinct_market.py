@@ -6,8 +6,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from msi_preprocessing_pipeline_spark.operators.market import (
-    association_rules, cooccurrence_pairs)
+from msi_preprocessing_pipeline_spark.operators.market import association_rules
 from msi_preprocessing_pipeline_spark.operators.windows import (
     sliding_distinct)
 
@@ -54,27 +53,30 @@ def test_sliding_distinct_intervals_bounded_for_range_join(spark):
         sliding_distinct(labels, evdf, "uid", 0)
 
 
+def _pair_counts(rules):
+    """Unordered pair counts from the directed rules: each pair appears
+    once as ``antecedent < consequent``."""
+    return {(r["antecedent"], r["consequent"]): r["n_pair"]
+            for r in rules.collect() if r["antecedent"] < r["consequent"]}
+
+
 def test_cooccurrence_presence_not_multiplicity(spark):
     rows = [(1, "a"), (1, "b"), (1, "b"), (1, "c"),
             (2, "a"), (2, "b"), (3, "a"), (3, None), (None, "x")]
     df = spark.createDataFrame(rows, "basket long, item string")
-    got = {(r["item_a"], r["item_b"]): r["n_pair"]
-           for r in cooccurrence_pairs(df, "basket", "item").collect()}
+    got = _pair_counts(association_rules(df, "basket", "item"))
     assert got == {("a", "b"): 2, ("a", "c"): 1, ("b", "c"): 1}
     # min_count filter
-    got2 = {(r["item_a"], r["item_b"]): r["n_pair"]
-            for r in cooccurrence_pairs(df, "basket", "item",
-                                        min_count=2).collect()}
+    got2 = _pair_counts(association_rules(df, "basket", "item",
+                                          min_count=2))
     assert got2 == {("a", "b"): 2}
-    with pytest.raises(ValueError):
-        cooccurrence_pairs(df, "basket", "item", min_count=0)
 
 
 def test_cooccurrence_max_basket_guard(spark):
     rows = [(1, f"i{k}") for k in range(10)] + [(2, "i0"), (2, "i1")]
     df = spark.createDataFrame(rows, "basket long, item string")
-    out = cooccurrence_pairs(df, "basket", "item", max_basket=5)
-    assert {(r["item_a"], r["item_b"]) for r in out.collect()} == {("i0", "i1")}
+    out = association_rules(df, "basket", "item", max_basket=5)
+    assert _pair_counts(out) == {("i0", "i1"): 1}
 
 
 def test_association_rules_scores_exact(spark):
@@ -90,9 +92,8 @@ def test_association_rules_scores_exact(spark):
     assert ab["lift"] == (2 * 3) / (3 * 2)
     ba = got[("b", "a")]
     assert ba["confidence"] == 1.0 and ba["lift"] == 1.0
-    # directed rules come in both orientations
-    assert len(got) == 2 * len(
-        cooccurrence_pairs(df, "basket", "item").collect())
+    # directed rules come in both orientations: 3 unordered pairs
+    assert len(got) == 6
 
 
 def test_association_rules_guard_consistent_supports(spark):

@@ -4,6 +4,7 @@ import numpy as np
 import numpy.testing as npt
 
 from msi_preprocessing_pipeline_spark.kernels import gmm, special
+from msi_preprocessing_pipeline_spark.kernels.baseline import _TrendScanner
 
 
 def test_norm_cdf_known_values():
@@ -37,6 +38,37 @@ def test_pearsonr_p():
     rng = np.random.RandomState(0)
     r, p = special.pearsonr_p(x, rng.rand(20))
     assert p > 0.05  # random noise: no significant trend
+
+
+def test_trend_scanner_matches_pearsonr_p():
+    """The baseline's O(1) trend probe is the p < 0.05 test of
+    ``pearsonr_p`` on every window: block prefix sums on block boundaries,
+    direct slice sums off them. Windows whose p sits within 1e-9 of 0.05
+    are skipped (the critical r² is a bisection, exact only to ~1e-12)."""
+    rng = np.random.RandomState(5)
+    checked, trends = 0, 0
+    for _ in range(60):
+        n = rng.randint(30, 240)
+        x = np.sort(rng.uniform(100.0, 1000.0, n))
+        slope = rng.choice([0.0, 0.05, 0.3, -0.2])
+        y = rng.poisson(60.0 + slope * np.arange(n)).astype(float)
+        for g in (1, 2, 4, 20):
+            scanner = _TrendScanner(x, y, block=g)
+            for k in range(25):
+                if k % 2 == 0 and n // g >= 2:   # on block boundaries
+                    bs = rng.randint(0, n // g - 1)
+                    be = rng.randint(bs + 1, n // g + 1)
+                    s, e = bs * g, be * g
+                else:                             # anywhere
+                    s = rng.randint(0, n - 1)
+                    e = rng.randint(s + 1, n + 1)
+                p = special.pearsonr_p(x[s:e], y[s:e])[1]
+                if abs(p - 0.05) < 1e-9:
+                    continue
+                assert scanner.has_trend(s, e) == (p < 0.05), (n, g, s, e, p)
+                checked += 1
+                trends += p < 0.05
+    assert checked > 5000 and 0 < trends < checked
 
 
 def test_cubic_spline_reproduces_cubic_polynomial():

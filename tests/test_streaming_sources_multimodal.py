@@ -72,24 +72,16 @@ def test_ascii_source_roundtrip(spark, tmp_path):
 
 def test_multimodal_plumbing(spark):
     media = multimodal.make_fake_media(spark, n=12)
-    feats = multimodal.decode_and_featurize(media, decoder="fake",
-                                            patch=4).toPandas()
-    assert len(feats) == 12
-    assert all(len(v) == 16 for v in feats["features"])
-    # deterministic: same payload → same features
-    feats2 = multimodal.decode_and_featurize(media, decoder="fake",
-                                             patch=4).toPandas()
-    a = feats.sort_values("media_id").reset_index(drop=True)
-    b = feats2.sort_values("media_id").reset_index(drop=True)
-    for x, y in zip(a["features"], b["features"]):
-        np.testing.assert_array_equal(np.asarray(x), np.asarray(y))
-
-    frames = multimodal.frame_sample(media, every_n=10).toPandas()
-    m0 = frames[frames.media_id == 0]
-    assert m0["frame_idx"].tolist() == [0, 10, 20]
+    hashes = multimodal.phash64(media, decoder="fake").toPandas()
+    assert len(hashes) == 12
+    # deterministic: same payload → same hash
+    hashes2 = multimodal.phash64(media, decoder="fake").toPandas()
+    a = hashes.sort_values("media_id").reset_index(drop=True)
+    b = hashes2.sort_values("media_id").reset_index(drop=True)
+    assert a["phash"].tolist() == b["phash"].tolist()
 
     with pytest.raises(Exception):
-        multimodal.decode_and_featurize(media, decoder="real").collect()
+        multimodal.phash64(media, decoder="real").collect()
 
 
 def _encode_bmp24(img_rgb: np.ndarray) -> bytes:
@@ -113,16 +105,10 @@ def _encode_bmp24(img_rgb: np.ndarray) -> bytes:
     return header + raster.tobytes()
 
 
-def _pool(img: np.ndarray, patch: int) -> np.ndarray:
-    ph, pw = img.shape[0] // patch, img.shape[1] // patch
-    return img[:ph * patch, :pw * patch] \
-        .reshape(patch, ph, patch, pw).mean(axis=(1, 3)) \
-        .astype(np.float32).ravel()
-
-
 def test_real_decode_roundtrip(spark):
-    """Pure-numpy real decoders: encode BMP/PGM/PPM with numpy, run through
-    the Spark operator, compare features to the locally pooled image."""
+    """Pure-numpy real decoders: encode BMP/PGM/PPM with numpy, decode them
+    back exactly, and hash them through the Spark operator to the hash of
+    the original image."""
     rng = np.random.RandomState(7)
     gray = rng.randint(0, 256, size=(24, 33), dtype=np.uint8)  # odd width
     rgb = rng.randint(0, 256, size=(17, 22, 3), dtype=np.uint8)
@@ -135,22 +121,22 @@ def test_real_decode_roundtrip(spark):
     luma = np.clip(np.round(0.299 * rgb[..., 0].astype(float)
                             + 0.587 * rgb[..., 1]
                             + 0.114 * rgb[..., 2]), 0, 255).astype(np.uint8)
-    expected = {
-        0: _pool(gray, 4), 1: _pool(luma, 4), 2: _pool(luma, 4),
-    }
+    expected = {0: gray, 1: luma, 2: luma}
 
     rows = [(0, bytearray(pgm), "image/x-portable-graymap",
              33, 24, 1),
             (1, bytearray(ppm), "image/x-portable-pixmap",
              22, 17, 1),
             (2, bytearray(bmp), "image/bmp", 22, 17, 1)]
+    for mid, payload, *_ in rows:
+        np.testing.assert_array_equal(
+            multimodal._real_decode(bytes(payload)), expected[mid])
     media = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
-    got = (multimodal.decode_and_featurize(media, decoder="real", patch=4)
-           .toPandas().set_index("media_id"))
-    for mid, exp in expected.items():
-        np.testing.assert_allclose(
-            np.asarray(got.loc[mid, "features"], dtype=np.float32), exp,
-            rtol=0, atol=1e-6)
+    got = (multimodal.phash64(media, decoder="real")
+           .toPandas().set_index("media_id")["phash"])
+    dct = multimodal._dct_matrix(32)
+    for mid, img in expected.items():
+        assert got[mid] == multimodal._phash_one(img, 32, 8, dct)
 
 
 def test_real_decode_compressed_raises(spark):
@@ -158,7 +144,7 @@ def test_real_decode_compressed_raises(spark):
              "image/png", 8, 8, 1)]
     media = spark.createDataFrame(rows, schema=multimodal.MEDIA_SCHEMA)
     with pytest.raises(Exception, match="NotImplementedError|Pillow"):
-        multimodal.decode_and_featurize(media, decoder="real").collect()
+        multimodal.phash64(media, decoder="real").collect()
 
 
 def test_array_function_exprs(spark):
