@@ -30,15 +30,26 @@ def median_and_iqr(values: np.ndarray) -> tuple[float, float]:
     return med, q75 - q25
 
 
+def lerp(a, b, t: float):
+    """numpy's quantile interpolation between neighbours ``a`` and ``b``
+    (``numpy.lib.function_base._lerp``): ``a + (b - a)·t`` below
+    ``t = 0.5`` and ``b - (b - a)·(1 - t)`` from it on. ``a`` and ``b`` may
+    be arrays sharing the one weight ``t``."""
+    if t < 0.5:
+        return a + (b - a) * t
+    return b - (b - a) * (1 - t)
+
+
 def interp_quantile_from_sorted(n: int, q: float) -> tuple[int, int, float]:
     """Plan an exact linear-interpolation quantile lookup over a sorted column.
 
     Returns ``(lo_rank, hi_rank, frac)`` (0-based ranks) such that
-    ``value = sorted[lo] + frac * (sorted[hi] - sorted[lo])`` reproduces
-    ``np.percentile(..., method='linear')``. Used by the distributed exact
-    quantile operator so the Spark path matches numpy bit-for-bit.
+    ``lerp(sorted[lo], sorted[hi], frac)`` is bit for bit
+    ``np.percentile(sorted, 100 * q)``: the position is taken from
+    ``(100·q)/100``, as ``np.percentile`` divides its argument. Used by the
+    distributed exact quantile operator so the Spark path matches numpy.
     """
-    pos = q * (n - 1)
+    pos = (n - 1) * ((100.0 * q) / 100)
     lo = int(np.floor(pos))
     hi = min(lo + 1, n - 1)
     frac = pos - lo

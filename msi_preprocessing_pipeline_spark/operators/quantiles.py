@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..kernels.stats import interp_quantile_from_sorted
+from ..kernels.stats import interp_quantile_from_sorted, lerp
 from .layout import global_rank
 
 
@@ -33,8 +33,10 @@ def exact_quantiles(df: DataFrame, col: str, qs,
     Scale-adaptive physical plan: below ``collect_threshold`` non-null values
     the single projected column is collected and numpy computes the
     percentile directly (one job); above it, the distributed global-sort +
-    rank-fetch path runs (arithmetically identical — both use the same
-    linear-interpolation formula)."""
+    rank-fetch path runs. Both are bit for bit ``np.percentile``: the
+    distributed path takes numpy's position and interpolation rule
+    (:func:`~..kernels.stats.interp_quantile_from_sorted`,
+    :func:`~..kernels.stats.lerp`)."""
     qs = np.atleast_1d(np.asarray(qs, dtype=float))
     values = df.select(col).where(f"{col} is not null")
     n = values.count()
@@ -54,10 +56,8 @@ def exact_quantiles(df: DataFrame, col: str, qs,
         int(r["__gr"]): float(r["__v"])
         for r in ranked.where(F.col("__gr").isin(*wanted)).collect()
     }
-    return np.array([
-        fetched[lo] + frac * (fetched[hi] - fetched[lo])
-        for lo, hi, frac in plans
-    ])
+    return np.array([lerp(fetched[lo], fetched[hi], frac)
+                     for lo, hi, frac in plans])
 
 
 def grouped_exact_quantiles(df: DataFrame, col: str, group_cols,

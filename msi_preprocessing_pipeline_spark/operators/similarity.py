@@ -890,15 +890,16 @@ def _hard_negatives_arrow(base: DataFrame, k: int, id_col: str,
     closure; each batch of anchors scores against it with an EXACT
     matmul and ranks (cos_q desc, id asc) locally.  Returns None when
     the matrix exceeds ``broadcast_limit`` cells (the caller falls back
-    to the JVM nested-loop)."""
+    to the JVM nested-loop); one aggregate sizes it first, so no row
+    reaches the driver then."""
     import numpy as np
     import pandas as pd
 
-    rows = base.select(id_col, label_col, "__q", "__n2").collect()
-    n = len(rows)
-    d = len(rows[0]["__q"]) if n else 0
+    n, d = base.agg(F.count("*"), F.max(F.size("__q"))).first()
+    d = d or 0
     if n * d > broadcast_limit:
         return None
+    rows = base.select(id_col, label_col, "__q", "__n2").collect()
     ids = np.array([r[id_col] for r in rows], dtype=np.int64)
     labels = np.array([r[label_col] for r in rows])
     q = np.array([r["__q"] for r in rows], dtype=np.int64) \

@@ -16,10 +16,12 @@ serving applies exactly the stage arithmetic the fit used.
 No per-row Python at the DataFrame level: the work runs inside the UDF over
 numpy arrays, one Arrow record batch at a time (the reference's
 ``Pool.map(chunksize=800)`` analog is
-``spark.sql.execution.arrow.maxRecordsPerBatch=800``). Resample and
-baseline loop over the rows of a batch; PaFFT
+``spark.sql.execution.arrow.maxRecordsPerBatch=800``). Only the resample
+loops over the rows of a batch (each row has its source's axis); baseline
+removal (:func:`~..kernels.baseline.remove_baseline_rows`), PaFFT
 (:func:`~..kernels.alignment.pafft_rows`) and the TIC rescale each run once
-over the batch's whole ``[rows, channels]`` matrix.
+over the batch's whole ``[rows, channels]`` matrix, bit-identical to the
+per-row kernels the oracle runs.
 """
 
 from __future__ import annotations
@@ -129,31 +131,37 @@ def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
              new_axis: np.ndarray, cfg: PipelineConfig,
              rows: Sequence[int]) -> np.ndarray:
     """Stages 2+3 for ``rows`` of ``batch``: each row's ``tokens`` resampled
-    from its source's m/z axis onto ``new_axis``, then baseline-removed.
+    from its source's m/z axis onto ``new_axis``, then every row
+    baseline-removed in one call over the batch
+    (:func:`~..kernels.baseline.remove_baseline_rows`, bit-identical to the
+    per-row :func:`~..kernels.baseline.remove_baseline` the oracle runs).
     Returns float32 ``[len(rows), new_axis.size]``.
 
     A row whose source has no axis, or whose token count (0 for empty or
     null ``tokens``) differs from its source axis length, raises
-    ``ValueError`` naming the row's ``doc_id``."""
+    ``ValueError`` naming the row's ``doc_id`` before any row is
+    resampled."""
     names = batch.schema.names
     tokens = batch.column(names.index("tokens"))
     flat, offs = _list_col_np(batch, "tokens")
     nulls = tokens.is_null().to_numpy(zero_copy_only=False)
     srcs = batch.column(names.index("source")).to_pylist()
-    out = np.empty((len(rows), new_axis.size), dtype=np.float32)
-    for j, i in enumerate(rows):
+    src_axes = []
+    for i in rows:
         ax = axes.get(srcs[i])
         n_tok = 0 if nulls[i] else int(offs[i + 1] - offs[i])
         if ax is None or n_tok != ax.size:
             raise _row_error(
                 batch, i, "no m/z axis artifact for the source" if ax is None
                 else f"{n_tok} tokens != source axis length {ax.size}")
-        x = axis_k.resample_row(new_axis, ax,
-                                flat[offs[i]:offs[i + 1]].astype(float))
-        out[j] = baseline_k.remove_baseline(
-            new_axis, x, cfg.baseline_max_width, cfg.baseline_min_width,
-            cfg.baseline_increment)
-    return out
+        src_axes.append(ax)
+    x = np.empty((len(rows), new_axis.size), dtype=np.float32)
+    for j, (i, ax) in enumerate(zip(rows, src_axes)):
+        x[j] = axis_k.resample_row(new_axis, ax,
+                                   flat[offs[i]:offs[i + 1]].astype(float))
+    return baseline_k.remove_baseline_rows(
+        new_axis, x, cfg.baseline_max_width, cfg.baseline_min_width,
+        cfg.baseline_increment)
 
 
 def _aligned(mat: np.ndarray, ref: np.ndarray, axis: np.ndarray,
@@ -188,8 +196,9 @@ def with_ts(df: DataFrame, config: PipelineConfig | None = None) -> DataFrame:
 def resample_baseline_stage(df: DataFrame, source_axes: dict[str, np.ndarray],
                             new_axis: np.ndarray,
                             config: PipelineConfig) -> DataFrame:
-    """Stages 2+3 fused: per-row resample onto the common axis + adaptive
-    baseline removal; emits the float32 spectrum and its TIC.
+    """Stages 2+3 fused (:func:`_spectra`): per-row resample onto the
+    common axis, then adaptive baseline removal over the whole batch; emits
+    the float32 spectrum and its TIC.
 
     The TIC is the float32 row sum (reference ``pipeline/outlier.py:42``
     sums the float32 matrix) — computed in numpy, not JVM, to stay

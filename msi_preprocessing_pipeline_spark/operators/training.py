@@ -425,7 +425,7 @@ def count_encode_pit(df: DataFrame, category_col: str,
 
 def oof_target_stats(df: DataFrame, category_col: str, target_col: str,
                      fold_col: str = "fold", scale: int = 6,
-                     out_scale: int = 6, densify: bool = False) -> DataFrame:
+                     out_scale: int = 6) -> DataFrame:
     """Out-of-fold target-encoding table: for every (category, fold)
     cell, the mean target over the SAME category in ALL OTHER folds —
     the cross-fitting complement of :func:`target_encode_pit` (PIT
@@ -458,20 +458,6 @@ def oof_target_stats(df: DataFrame, category_col: str, target_col: str,
         F.count("*").cast(dec).alias("__n_cf"),
         F.sum(quantize(F.col(target_col), scale).cast(dec))
         .alias("__s_cf"))
-    if densify:
-        # categories × observed folds, absent cells as (0, 0): a cell
-        # with no valid-target rows still has a well-defined
-        # out-of-fold mean (the other folds' total) — without this its
-        # corpus rows encode null despite real signal
-        cells = (cf.select(category_col).distinct()
-                 .crossJoin(df.where(fold.isNotNull())
-                            .select(fold_col).distinct()))
-        cf = (cells.join(cf, [category_col, fold_col], "left")
-              .select(category_col, fold_col,
-                      F.coalesce("__n_cf", F.lit(0).cast(dec))
-                      .alias("__n_cf"),
-                      F.coalesce("__s_cf", F.lit(0).cast(dec))
-                      .alias("__s_cf")))
     wall = Window.partitionBy(category_col)
     oof = cf.select(
         category_col, fold_col,

@@ -138,14 +138,16 @@ def test_exact_quantiles_match_numpy(spark):
     rng = np.random.RandomState(21)
     vals = rng.lognormal(3, 1, 5000)
     df = spark.createDataFrame(pd.DataFrame({"v": vals}))
-    qs = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0]
+    qs = [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99, 1.0] \
+        + list(np.random.default_rng(22).uniform(0.0, 1.0, 40))
     expected = np.percentile(vals, [q * 100 for q in qs])
     # collect path (n below threshold)
     got = quantiles.exact_quantiles(df, "v", qs)
     np.testing.assert_allclose(got, expected, rtol=1e-12)
-    # distributed sort+rank path (force it)
+    # distributed sort+rank path (force it): numpy's position and
+    # interpolation rule, so bit for bit
     got_dist = quantiles.exact_quantiles(df, "v", qs, collect_threshold=0)
-    np.testing.assert_allclose(got_dist, expected, rtol=1e-12)
+    np.testing.assert_array_equal(got_dist, expected)
 
 
 # ---------------------------------------------------------------------------

@@ -242,6 +242,13 @@ def test_baseline_adaptive_remove_verbatim_golden():
         mzs, signal, 15, 5, 1,
         estimator=lambda seg: next(faulty_original_quantiles))
     npt.assert_almost_equal(removed, expected)
+    # the same input, with the kernels' own 10th-percentile estimates, as a
+    # 3-row stack (row, reversed row, zero row) through the whole-batch
+    # kernel the spectrum UDFs run: bit-identical to the per-row kernel
+    mat = np.stack([signal, signal[::-1], np.zeros_like(signal)])
+    npt.assert_array_equal(
+        bl.remove_baseline_rows(mzs, mat, 15, 5, 1),
+        np.stack([bl.remove_baseline(mzs, row, 15, 5, 1) for row in mat]))
 
 
 def test_remove_baseline_single_segment_degenerate():

@@ -613,41 +613,6 @@ def test_oof_target_stats_hand_case(spark):
     assert tab[("A", 1)].te_oof_u == 15_000_000
     assert tab[("B", 0)].n_oof == 0 and tab[("B", 0)].te_oof_u is None
 
-    # densified: categories × observed folds, so (B, 1) — no B rows in
-    # fold 1 — still encodes from fold 0; the null-fold/null-category
-    # rows add no cell
-    dense = {(r.cat, r.fold): (r.n_oof, r.te_oof_u) for r in
-             oof_target_stats(df, "cat", "y", "fold",
-                              densify=True).collect()}
-    assert dense == {("A", 0): (1, 40_000_000), ("A", 1): (2, 15_000_000),
-                     ("B", 0): (0, None), ("B", 1): (1, 5_000_000)}
-
-
-def test_oof_encode_densifies_empty_cells(spark):
-    """A (category, fold) cell with zero valid-target rows still encodes
-    from the other folds' mean in the densified stats table; a category
-    with no out-of-fold signal anywhere stays null."""
-    from msi_preprocessing_pipeline_spark.operators.training import (
-        oof_target_stats)
-
-    rows = [
-        ("A", 0, 10.0), ("A", 0, 20.0), ("A", 1, 40.0),
-        ("A", 2, None),   # fold 2: A present but NO valid target rows
-        ("B", 2, 5.0),
-    ]
-    df = spark.createDataFrame(rows, "cat string, fold int, y double")
-    enc = {(r.cat, r.fold): r.te_oof_u for r in
-           oof_target_stats(df, "cat", "y", "fold",
-                            densify=True).collect()}
-    # (A, 2) has no valid rows of its own but folds 0+1 average
-    # (10+20+40)/3 = 23.333333 exactly truncated on the micro grid
-    assert enc[("A", 2)] == 23_333_333
-    # B appears only in fold 2 — no other fold carries it: still null
-    assert enc[("B", 2)] is None
-    # the plain (non-densified) stats table is unchanged: no (A, 2) row
-    tab = oof_target_stats(df, "cat", "y", "fold").collect()
-    assert ("A", 2) not in {(r.cat, r.fold) for r in tab}
-
 
 def test_oof_target_stats_no_self_leak_and_invariance(spark):
     import numpy as np
