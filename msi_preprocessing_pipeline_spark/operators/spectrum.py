@@ -40,7 +40,7 @@ from ..functions.arrowutil import list_col_matrix
 from ..kernels import alignment, axis as axis_k, baseline as baseline_k
 from ..kernels import convolve as convolve_k, merge as merge_k
 from ..kernels import outlier as outlier_k
-from ..oracle import PipelineConfig
+from ..oracle import NO_AXIS, ZERO_SUM, PipelineConfig, row_error
 
 
 @dataclass
@@ -120,11 +120,11 @@ def _uniform_list_array(mat: np.ndarray) -> "pa.ListArray":
 # nothing else per row, so serving applies exactly the fit's arithmetic.
 
 def _row_error(batch: "pa.RecordBatch", i: int, reason: str) -> ValueError:
-    """The error for row ``i`` of ``batch``, naming its doc_id and source."""
+    """The error for row ``i`` of ``batch``, naming its doc_id and source
+    (:func:`~..oracle.row_error`, which the oracle raises too)."""
     names = batch.schema.names
-    doc_id, src = (batch.column(names.index(c))[i].as_py()
-                   for c in ("doc_id", "source"))
-    return ValueError(f"row doc_id={doc_id!r} source={src!r}: {reason}")
+    return row_error(*(batch.column(names.index(c))[i].as_py()
+                       for c in ("doc_id", "source")), reason)
 
 
 def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
@@ -152,7 +152,7 @@ def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
         n_tok = 0 if nulls[i] else int(offs[i + 1] - offs[i])
         if ax is None or n_tok != ax.size:
             raise _row_error(
-                batch, i, "no m/z axis artifact for the source" if ax is None
+                batch, i, NO_AXIS if ax is None
                 else f"{n_tok} tokens != source axis length {ax.size}")
         src_axes.append(ax)
     x = np.empty((len(rows), new_axis.size), dtype=np.float32)
@@ -484,9 +484,7 @@ def serve_features(df: DataFrame, artifacts: Sequence[ArtifactSet],
                     rows = _tic_scaled(aligned, art.tic_reference_tic)
                 except FloatingPointError as e:
                     zero = np.flatnonzero(aligned.sum(axis=1) == 0)[0]
-                    raise _row_error(
-                        b, idxs[zero], "spectrum sums to zero; it cannot "
-                        "be rescaled to the reference TIC") from e
+                    raise _row_error(b, idxs[zero], ZERO_SUM) from e
                 merged = merge_k.apply_merging(
                     convolve_k.featurize_batch(rows, bands),
                     art.merge_starts, art.merge_lengths)

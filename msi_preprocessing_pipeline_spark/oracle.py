@@ -275,17 +275,31 @@ def fit_artifacts(rows: Sequence[tuple],
     return art
 
 
+NO_AXIS = "no m/z axis artifact for the source"
+ZERO_SUM = "spectrum sums to zero; it cannot be rescaled to the reference TIC"
+
+
+def row_error(doc_id, source, reason: str) -> ValueError:
+    """The error for one bad row, naming its ``doc_id`` and ``source``; the
+    serve UDF raises the same text."""
+    return ValueError(f"row doc_id={doc_id!r} source={source!r}: {reason}")
+
+
 def transform_rows(rows: Sequence[tuple],
                    source_axes: dict[str, np.ndarray],
                    art: PipelineArtifacts,
                    config: PipelineConfig) -> np.ndarray:
     """Apply fitted artifacts to rows → merged feature matrix (row order =
     input order). This is the 'serving' pass — in the Spark engine it is the
-    serve UDF (``operators.spectrum.serve_features``)."""
+    serve UDF (``operators.spectrum.serve_features``). A row whose source has
+    no axis, or whose aligned spectrum sums to zero, raises the serve's
+    :func:`row_error`."""
     bands = convolve.build_bands(art.mz_axis, art.gmm_mu, art.gmm_sig,
                                  art.gmm_w)
     out = []
     for doc_id, tokens, _n, src in rows:
+        if src not in source_axes:
+            raise row_error(doc_id, src, NO_AXIS)
         x = axis.resample_row(art.mz_axis, source_axes[src],
                               np.asarray(tokens, dtype=float))
         x = baseline.remove_baseline(art.mz_axis, x,
@@ -295,7 +309,10 @@ def transform_rows(rows: Sequence[tuple],
         x = alignment.pafft(x, art.pafft_reference, art.mz_axis,
                             config.pafft_minimum_segment,
                             config.pafft_shift_limit)
-        x = x * (art.tic_reference_tic / x.sum())
+        total = x.sum()
+        if total == 0:
+            raise row_error(doc_id, src, ZERO_SUM)
+        x = x * (art.tic_reference_tic / total)
         feats = convolve.featurize_batch(x[None, :], bands)
         out.append(merge.apply_merging(feats, art.merge_starts,
                                        art.merge_lengths)[0])

@@ -65,12 +65,14 @@ class FeaturePipeline:
         ``coalesce(cores)`` (no Exchange), exactly ``cores`` are returned
         unchanged.
 
-        Every Python task pays a fixed set-up before the UDF starts —
-        about 0.2 s on a 4-vCPU host, mostly pyspark's per-task
-        ``setup_spark_files`` → ``importlib.invalidate_caches()`` re-reading
-        the zip and jar entries on ``sys.path`` — so more tasks than cores
-        only multiply that cost. A stream is returned unchanged (its
-        partitioning is per micro-batch and ``df.rdd`` cannot run on it)."""
+        Every Python task pays a fixed start before the UDF runs. Under the
+        package's worker daemon (:mod:`..daemon`) the worker's own set-up
+        steps take under 1 ms; what is left, about 0.15 s per task on a
+        4-vCPU host, is mostly the worker waiting for the JVM to send the
+        task. More tasks than cores still only add that cost: on the
+        ``serve`` input 8 tasks were no faster than 4, and 16 were slower.
+        A stream is returned unchanged (its partitioning is per
+        micro-batch and ``df.rdd`` cannot run on it)."""
         if df.isStreaming:
             return df
         cores = self.spark.sparkContext.defaultParallelism

@@ -4,7 +4,12 @@ Local testing runs a single JVM (``local[N]``); the configs below are the
 ones that matter at cluster scale too: AQE (runtime re-plan + skew-join
 splitting), Arrow for the pandas-UDF hot path, shuffle partitions sized to
 parallelism instead of the 200 default, UTC so DuckDB oracle comparisons are
-timezone-stable.
+timezone-stable. Python workers fork from the package's own daemon
+(``spark.python.daemon.module`` = :mod:`.daemon`), which stops pyspark's
+per-task ``importlib.invalidate_caches()`` from re-reading the unchanged
+pyspark and py4j zip archives on every task. The directory that holds the
+package is put on the workers' ``PYTHONPATH``, so the daemon imports
+wherever the driver was started.
 """
 
 from __future__ import annotations
@@ -12,6 +17,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import daemon
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def build_session(app_name: str = "msi-spark", parallelism: int | None = None,
@@ -44,6 +53,8 @@ def build_session(app_name: str = "msi-spark", parallelism: int | None = None,
         # cores are coalesced without a shuffle, fewer are round-robined.
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "2m")
+        .config("spark.python.daemon.module", daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -201,24 +201,40 @@ def test_short_token_row_error_names_the_row(table, axes):
         pipe.transform(short, [art]).collect()
 
 
-def test_unknown_source_row_error_names_the_row(table, axes):
+def _oracle_artifacts(art: sp.ArtifactSet) -> oracle.PipelineArtifacts:
+    """The numpy oracle's view of a Spark artifact."""
+    return oracle.PipelineArtifacts(
+        mz_axis=art.mz_axis, tic_thresholds=(art.b1, art.b2),
+        pafft_reference=art.pafft_reference,
+        tic_reference_tic=art.tic_reference_tic,
+        gmm_mu=art.gmm_mu, gmm_sig=art.gmm_sig, gmm_w=art.gmm_w,
+        merge_starts=art.merge_starts, merge_lengths=art.merge_lengths)
+
+
+def test_unknown_source_row_error_names_the_row(table, axes, oracle_rows):
     """A row whose source has no m/z axis fails the serve with an error
-    naming its doc_id — never silent null features."""
+    naming its doc_id — never silent null features — and the oracle raises
+    the same ValueError text, not a bare KeyError."""
     pipe = FeaturePipeline(table.sparkSession, axes, CFG)
     bad_id = table.orderBy(F.desc("doc_id")).select("doc_id").first()[0]
     unknown = table.withColumn(
         "source", F.when(F.col("doc_id") == bad_id, F.lit("zzz"))
         .otherwise(F.col("source")))
     art = pipe.fit(table)
-    with pytest.raises(Exception, match=(
-            rf"doc_id={re.escape(repr(bad_id))} source='zzz': "
-            "no m/z axis artifact for the source")):
+    message = (rf"row doc_id={re.escape(repr(bad_id))} source='zzz': "
+               "no m/z axis artifact for the source")
+    with pytest.raises(Exception, match=message):
         pipe.transform(unknown, [art]).collect()
+    _, tokens, n, _ = next(r for r in oracle_rows if r[0] == bad_id)
+    with pytest.raises(ValueError, match=rf"^{message}$"):
+        oracle.transform_rows([(bad_id, tokens, n, "zzz")], axes,
+                              _oracle_artifacts(art), CFG)
 
 
-def test_zero_sum_row_error_names_the_row(table, axes):
+def test_zero_sum_row_error_names_the_row(table, axes, oracle_rows):
     """An all-zero row fails the serve with a ValueError naming its doc_id
-    — not a bare FloatingPointError, and never NaN features."""
+    — not a bare FloatingPointError, and never NaN features — and the
+    oracle raises the same ValueError text."""
     pipe = FeaturePipeline(table.sparkSession, axes, CFG)
     bad_id, bad_src = table.orderBy(F.desc("doc_id")).select(
         "doc_id", "source").first()
@@ -227,10 +243,15 @@ def test_zero_sum_row_error_names_the_row(table, axes):
                          F.transform("tokens", lambda _: F.lit(0)))
         .otherwise(F.col("tokens")))
     art = pipe.fit(table)
-    with pytest.raises(Exception, match=(
-            rf"ValueError: row doc_id={re.escape(repr(bad_id))} "
-            rf"source={re.escape(repr(bad_src))}: spectrum sums to zero")):
+    message = (rf"row doc_id={re.escape(repr(bad_id))} "
+               rf"source={re.escape(repr(bad_src))}: spectrum sums to zero; "
+               "it cannot be rescaled to the reference TIC")
+    with pytest.raises(Exception, match=rf"ValueError: {message}"):
         pipe.transform(zeroed, [art]).collect()
+    n = axes[bad_src].size
+    with pytest.raises(ValueError, match=rf"^{message}$"):
+        oracle.transform_rows([(bad_id, np.zeros(n), n, bad_src)], axes,
+                              _oracle_artifacts(art), CFG)
 
 
 def test_serve_version_pick(spark):
