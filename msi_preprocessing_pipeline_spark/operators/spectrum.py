@@ -10,8 +10,9 @@ arithmetic-identical modulo float64 aggregation order.
 
 The per-row chain — resample → baseline (:func:`_spectra`), PaFFT
 (:func:`_aligned`), TIC rescale (:func:`_tic_scaled`) — is written once;
-the fit stages and the serve UDF are thin ``mapInArrow`` bodies over it, so
-serving applies exactly the stage arithmetic the fit used.
+the fit passes and the serve UDF are thin ``mapInArrow`` bodies over it, so
+serving applies exactly the stage arithmetic the fit used. The fit writes
+one row stage; its references are inlier partial sums (:func:`_inlier_means`).
 
 No per-row Python at the DataFrame level: the work runs inside the UDF over
 numpy arrays, one Arrow record batch at a time (the reference's
@@ -40,7 +41,8 @@ from ..functions.arrowutil import list_col_matrix
 from ..kernels import alignment, axis as axis_k, baseline as baseline_k
 from ..kernels import convolve as convolve_k, merge as merge_k
 from ..kernels import outlier as outlier_k
-from ..oracle import NO_AXIS, ZERO_SUM, PipelineConfig, row_error
+from ..oracle import (NO_AXIS, TOKEN_COUNT, ZERO_SUM, PipelineConfig,
+                      row_error)
 
 
 @dataclass
@@ -153,7 +155,7 @@ def _spectra(batch: "pa.RecordBatch", axes: dict[str, np.ndarray],
         if ax is None or n_tok != ax.size:
             raise _row_error(
                 batch, i, NO_AXIS if ax is None
-                else f"{n_tok} tokens != source axis length {ax.size}")
+                else TOKEN_COUNT.format(n_tok=n_tok, n_axis=ax.size))
         src_axes.append(ax)
     x = np.empty((len(rows), new_axis.size), dtype=np.float32)
     for j, (i, ax) in enumerate(zip(rows, src_axes)):
@@ -174,9 +176,10 @@ def _aligned(mat: np.ndarray, ref: np.ndarray, axis: np.ndarray,
 
 
 def _tic_scaled(mat: np.ndarray, tic: float) -> np.ndarray:
-    """Stage 6: each float32 row rescaled to total ``tic`` — float32 row sum,
-    float64 divide, factor rounded to float32, float32 multiply. A zero-sum
-    row raises ``FloatingPointError`` rather than yielding NaN."""
+    """Stage 6 in the serve (the fit rescales no row): each float32 row
+    rescaled to total ``tic`` — float32 row sum, float64 divide, factor
+    rounded to float32, float32 multiply. A zero-sum row raises
+    ``FloatingPointError`` rather than yielding NaN."""
     with np.errstate(divide="raise", invalid="raise"):
         factors = tic / mat.sum(axis=1).astype(np.float64)
     return mat * factors.astype(np.float32)[:, None]
@@ -247,75 +250,96 @@ def with_inlier_mask(df: DataFrame, thr: outlier_k.TicThresholds) -> DataFrame:
         ~((F.col("tic") <= F.lit(thr.b1)) | (F.col("tic") >= F.lit(thr.b2))))
 
 
-def masked_mean_reference(df: DataFrame, vec_col: str,
-                          scale_to_tic: float | None = None) -> np.ndarray:
-    """Reference-spectrum aggregation (``pipeline/_base.py:77-90``):
-    per-source mean over the ``is_inlier`` rows, count-weighted average
-    across sources.
-
-    Scalable shape: per-partition float64 partial sums (tiny: one vector per
-    (partition × source)) → driver combine. No applyInPandas group
-    materialization, no skew sensitivity.
-
-    ``scale_to_tic`` fuses the TIC normalize (oracle stage 6) into this
-    pass: each float32 row goes through :func:`_tic_scaled` — the same
-    function the serve UDF calls — before float64 accumulation, without
-    shipping the normalized vectors through another Arrow round trip.
-    Oracle stage 6 divides in float32 where :func:`_tic_scaled` rounds a
-    float64 factor to float32, so the normalized rows match the oracle's to
-    one float32 rounding — allclose, not bitwise.
-    """
+def _inlier_means(df: DataFrame, row_vectors) -> np.ndarray:
+    """Count-weighted mean across sources of the per-source ``is_inlier``
+    mean (``pipeline/_base.py:77-90``) of the float64 rows
+    ``row_vectors(batch, mask)`` returns for a batch's inliers, from
+    per-(partition, source) partial sums and counts combined on the driver."""
 
     def partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc: dict[str, tuple[np.ndarray, int]] = {}
         for b in batches:
             names = b.schema.names
-            mat = list_col_matrix(b, vec_col, np.float32)
             mask = b.column(names.index("is_inlier")) \
                 .to_numpy(zero_copy_only=False).astype(bool)
-            srcs = np.asarray(
-                b.column(names.index("source")).to_pylist(), dtype=object)
-            for src in sorted(set(srcs[mask])):
-                sub = mat[mask & (srcs == src)]
-                if scale_to_tic is not None:
-                    sub = _tic_scaled(sub, scale_to_tic)
+            srcs = np.asarray(b.column(names.index("source")).to_pylist(),
+                              dtype=object)[mask]
+            if not srcs.size:
+                continue
+            vecs = row_vectors(b, mask)
+            for src in sorted(set(srcs)):
+                sub = vecs[srcs == src]
                 s, c = acc.get(src, (0.0, 0))
-                acc[src] = (s + sub.astype(np.float64).sum(axis=0),
-                            c + len(sub))
+                acc[src] = (s + sub.sum(axis=0), c + len(sub))
         if acc:
-            keys = list(acc)
-            mat = np.stack([acc[k][0] for k in keys])
             yield pa.RecordBatch.from_arrays(
-                [pa.array(keys, type=pa.string()),
-                 _uniform_list_array(mat),
-                 pa.array(np.array([acc[k][1] for k in keys],
-                                   dtype=np.int64))],
+                [pa.array(list(acc), type=pa.string()),
+                 _uniform_list_array(np.stack([v[0] for v in acc.values()])),
+                 pa.array([v[1] for v in acc.values()], type=pa.int64())],
                 names=["source", "vec_sum", "n"])
 
-    rows = (df.select("source", vec_col, "is_inlier")
-            .mapInArrow(partials,
-                        schema="source string, vec_sum array<double>, n long")
-            .collect())
+    rows = df.mapInArrow(
+        partials, schema="source string, vec_sum array<double>, n long"
+    ).collect()
     # total deterministic order: collect() returns partials in task-completion
     # order, and float64 addition is not associative — sort by content so
     # repeated runs produce bit-identical references
-    def _key(r):
-        return (r["source"], r["n"], bytes(np.asarray(r["vec_sum"])))
-
     by_src: dict[str, tuple[np.ndarray, int]] = {}
-    for r in sorted(rows, key=_key):
+    for r in sorted(rows, key=lambda r: (r["source"], r["n"],
+                                         bytes(np.asarray(r["vec_sum"])))):
         s, c = by_src.get(r["source"], (0.0, 0))
         by_src[r["source"]] = (s + np.asarray(r["vec_sum"]), c + r["n"])
-    refs = [v[0] / v[1] for _, v in sorted(by_src.items())]
-    counts = [v[1] for _, v in sorted(by_src.items())]
-    return np.average(np.asarray(refs), axis=0, weights=np.asarray(counts))
+    means = [(s / c, c) for _, (s, c) in sorted(by_src.items())]
+    return np.average([m for m, _ in means], axis=0,
+                      weights=[c for _, c in means])
+
+
+def masked_mean_reference(df: DataFrame, vec_col: str) -> np.ndarray:
+    """Reference spectrum of the float32 ``vec_col`` (oracle stage 5): the
+    count-weighted mean across sources of the per-source ``is_inlier`` mean
+    (:func:`_inlier_means`)."""
+    return _inlier_means(
+        df.select("source", vec_col, "is_inlier"),
+        lambda b, mask: list_col_matrix(b, vec_col, np.float32)[mask]
+        .astype(np.float64))
+
+
+def aligned_references(df: DataFrame, reference: np.ndarray,
+                       mz_axis: np.ndarray,
+                       config: PipelineConfig) -> tuple[float, np.ndarray]:
+    """Oracle stages 5–7 in one pass: the inlier rows of ``spectrum``
+    aligned to ``reference`` inside the UDF (no aligned row leaves it), then
+    the :func:`_inlier_means` of ``aligned`` and of ``aligned / row_sum``.
+    Returns ``(tic, gmm_reference)``: ``tic`` is the sum of the mean aligned
+    row, as in the oracle; ``gmm_reference`` is ``tic`` times the second
+    mean, allclose to the oracle's mean of float32-normalized rows. An
+    inlier whose aligned row sums to zero raises the oracle's ``ZERO_SUM``
+    row error."""
+    spark = df.sparkSession
+    ref_bc = spark.sparkContext.broadcast(np.asarray(reference, dtype=float))
+    ax_bc = spark.sparkContext.broadcast(np.asarray(mz_axis, dtype=float))
+
+    def row_vectors(b: pa.RecordBatch, mask: np.ndarray) -> np.ndarray:
+        aligned = _aligned(list_col_matrix(b, "spectrum", np.float32)[mask],
+                           ref_bc.value, ax_bc.value, config)
+        row_sums = aligned.sum(axis=1)
+        zero = np.flatnonzero(row_sums == 0)
+        if zero.size:
+            raise _row_error(b, int(np.flatnonzero(mask)[zero[0]]), ZERO_SUM)
+        vecs = aligned.astype(np.float64)
+        return np.hstack([vecs, vecs / row_sums.astype(np.float64)[:, None]])
+
+    means = _inlier_means(
+        df.select("doc_id", "source", "spectrum", "is_inlier"), row_vectors)
+    mean_aligned, mean_unit = np.split(means, 2)
+    tic = float(mean_aligned.sum())
+    return tic, tic * mean_unit
 
 
 def masked_weighted_mean_scalar(df: DataFrame, col: str) -> float:
     """Count-weighted mean across sources of the per-source ``is_inlier``
-    mean of a SCALAR column — the scalar analog of
-    :func:`masked_mean_reference` (used for the TIC reference:
-    ``Σ_channels mean_vector`` == ``mean of row sums``). Pure JVM
+    mean of a SCALAR column — the scalar analog of :func:`_inlier_means`
+    (the fit takes its TIC from :func:`aligned_references`). Pure JVM
     aggregation: per-(partition, source) partial sums, content-sorted
     driver combine for bit-determinism."""
     parts = (df.where(F.col("is_inlier"))
@@ -330,37 +354,6 @@ def masked_weighted_mean_scalar(df: DataFrame, col: str) -> float:
     counts = [v[1] for _, v in sorted(by_src.items())]
     return float(np.average(np.asarray(means),
                             weights=np.asarray(counts, dtype=float)))
-
-
-def pafft_stage(df: DataFrame, reference: np.ndarray, mz_axis: np.ndarray,
-                config: PipelineConfig) -> DataFrame:
-    """Stage 5: PaFFT alignment of ``spectrum`` against the broadcast
-    reference. Replaces ``spectrum`` with ``aligned`` and adds
-    ``aligned_sum`` (float64 row sum of the aligned float32 row) so the TIC
-    reference runs as a JVM aggregation instead of another full-vector Arrow
-    pass."""
-    spark = df.sparkSession
-    ref_bc = spark.sparkContext.broadcast(np.asarray(reference, dtype=float))
-    ax_bc = spark.sparkContext.broadcast(np.asarray(mz_axis, dtype=float))
-    passthrough = [c for c in df.columns if c != "spectrum"]
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-         if f.name != "spectrum"]
-        + ["aligned array<float>", "aligned_sum double"])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        ref, ax = ref_bc.value, ax_bc.value
-        for b in batches:
-            mat = list_col_matrix(b, "spectrum", np.float32)
-            out = _aligned(mat, ref, ax, config)
-            names = b.schema.names
-            yield pa.RecordBatch.from_arrays(
-                [b.column(names.index(c)) for c in passthrough]
-                + [_uniform_list_array(out),
-                   pa.array(out.sum(axis=1, dtype=np.float64))],
-                names=passthrough + ["aligned", "aligned_sum"])
-
-    return df.mapInArrow(run, schema=schema)
 
 
 def smooth_stage(df: DataFrame, vec_col: str = "spectrum", window: int = 5,

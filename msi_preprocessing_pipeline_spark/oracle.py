@@ -77,7 +77,6 @@ class PipelineArtifacts:
     gmm_w: np.ndarray = None
     merge_starts: np.ndarray = None
     merge_lengths: np.ndarray = None
-    merged_mu: np.ndarray = None
 
 
 def derive_ts(rows: Sequence[tuple], config: PipelineConfig) -> list[int]:
@@ -210,9 +209,7 @@ def fit_artifacts(rows: Sequence[tuple],
     debased = {
         src: np.stack([
             baseline.remove_baseline(
-                art.mz_axis,
-                axis.resample_row(art.mz_axis, source_axes[src],
-                                  np.asarray(rows[i][1], dtype=float)),
+                art.mz_axis, _resampled(rows[i], source_axes, art.mz_axis),
                 config.baseline_max_width, config.baseline_min_width,
                 config.baseline_increment)
             for i in idxs
@@ -244,6 +241,10 @@ def fit_artifacts(rows: Sequence[tuple],
     }
 
     # stage 6: TIC reference + normalize
+    for src in sorted(aligned):
+        zero = np.flatnonzero(inlier[src] & (aligned[src].sum(axis=1) == 0))
+        if zero.size:
+            raise row_error(rows[by_source[src][zero[0]]][0], src, ZERO_SUM)
     tic_reference = _masked_weighted_mean(aligned, inlier)
     art.tic_reference_tic = float(np.sum(tic_reference))
     normalized = {
@@ -271,11 +272,11 @@ def fit_artifacts(rows: Sequence[tuple],
         model.mu[keep], model.sig[keep], model.w[keep]
     merged = merge.merge_components(art.gmm_mu, art.gmm_sig, art.gmm_w)
     art.merge_starts, art.merge_lengths = merged.starts, merged.lengths
-    art.merged_mu = merged.mu
     return art
 
 
 NO_AXIS = "no m/z axis artifact for the source"
+TOKEN_COUNT = "{n_tok} tokens != source axis length {n_axis}"
 ZERO_SUM = "spectrum sums to zero; it cannot be rescaled to the reference TIC"
 
 
@@ -285,6 +286,18 @@ def row_error(doc_id, source, reason: str) -> ValueError:
     return ValueError(f"row doc_id={doc_id!r} source={source!r}: {reason}")
 
 
+def _resampled(row: tuple, source_axes: dict[str, np.ndarray],
+               mz_axis: np.ndarray) -> np.ndarray:
+    """Stage 2 for one row; a bad row raises the serve's :func:`row_error`."""
+    doc_id, tokens, _n, src = row
+    ax = source_axes.get(src)
+    n_tok = 0 if tokens is None else len(tokens)
+    if ax is None or n_tok != ax.size:
+        raise row_error(doc_id, src, NO_AXIS if ax is None else
+                        TOKEN_COUNT.format(n_tok=n_tok, n_axis=ax.size))
+    return axis.resample_row(mz_axis, ax, np.asarray(tokens, dtype=float))
+
+
 def transform_rows(rows: Sequence[tuple],
                    source_axes: dict[str, np.ndarray],
                    art: PipelineArtifacts,
@@ -292,17 +305,15 @@ def transform_rows(rows: Sequence[tuple],
     """Apply fitted artifacts to rows → merged feature matrix (row order =
     input order). This is the 'serving' pass — in the Spark engine it is the
     serve UDF (``operators.spectrum.serve_features``). A row whose source has
-    no axis, or whose aligned spectrum sums to zero, raises the serve's
-    :func:`row_error`."""
+    no axis, whose token count is not its source axis length, or whose
+    aligned spectrum sums to zero raises the serve's :func:`row_error`."""
     bands = convolve.build_bands(art.mz_axis, art.gmm_mu, art.gmm_sig,
                                  art.gmm_w)
     out = []
-    for doc_id, tokens, _n, src in rows:
-        if src not in source_axes:
-            raise row_error(doc_id, src, NO_AXIS)
-        x = axis.resample_row(art.mz_axis, source_axes[src],
-                              np.asarray(tokens, dtype=float))
-        x = baseline.remove_baseline(art.mz_axis, x,
+    for row in rows:
+        doc_id, src = row[0], row[3]
+        x = baseline.remove_baseline(art.mz_axis,
+                                     _resampled(row, source_axes, art.mz_axis),
                                      config.baseline_max_width,
                                      config.baseline_min_width,
                                      config.baseline_increment)

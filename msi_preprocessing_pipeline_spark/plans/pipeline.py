@@ -93,7 +93,7 @@ class FeaturePipeline:
     # (CLI ``recompute --stage X``) invalidates X and everything after it
     CHECKPOINT_ORDER = (
         "mz_axis", "resample_baseline", "tic_thresholds", "pafft_reference",
-        "pafft", "tic_reference_tic", "gmm_reference", "artifact_set")
+        "aligned_references", "artifact_set")
 
     def fit(self, df: DataFrame, version: int = 1,
             valid_from_ts: int | None = None,
@@ -153,20 +153,15 @@ class FeaturePipeline:
             "pafft_reference",
             lambda: sp.masked_mean_reference(masked, "spectrum").tolist()))
 
-        # pafft emits the float64 row sum so the TIC reference is a JVM
-        # scalar aggregation (relative to the oracle's np.sum over the mean
-        # vector a reordered sum — allclose, not bitwise), and the TIC
-        # normalize is fused into the gmm-reference partials: no normalized
-        # stage, no extra Arrow round trip.
-        stage_b = runner.run_stage(
-            "pafft", lambda: sp.pafft_stage(masked, pafft_ref, mz_axis, cfg))
-        ref_tic = float(runner.run_artifact(
-            "tic_reference_tic",
-            lambda: sp.masked_weighted_mean_scalar(stage_b, "aligned_sum")))
-        gmm_ref = np.asarray(runner.run_artifact(
-            "gmm_reference",
-            lambda: sp.masked_mean_reference(
-                stage_b, "aligned", scale_to_tic=ref_tic).tolist()))
+        # stages 5-7 in one pass over stage A: only the aligned inliers'
+        # partial sums leave the UDF, so no aligned row is written
+        def aligned_refs() -> dict:
+            tic, gmm = sp.aligned_references(masked, pafft_ref, mz_axis, cfg)
+            return {"tic": tic, "gmm_reference": gmm.tolist()}
+
+        refs = runner.run_artifact("aligned_references", aligned_refs)
+        ref_tic = float(refs["tic"])
+        gmm_ref = np.asarray(refs["gmm_reference"])
 
         def build_model() -> dict:
             # driver-side model fitting on the single reference vector

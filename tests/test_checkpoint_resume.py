@@ -43,9 +43,9 @@ def test_resume_after_partial_run(spark, table, tmp_path_factory):
     runner = StageRunner(spark, work)
     art_full = pipe.fit_checkpointed(table, runner)
 
-    # simulate a crash after the pafft stage: wipe everything produced later
-    for name in ["artifact_tic_reference_tic.json",
-                 "artifact_gmm_reference.json",
+    # simulate a crash after the pafft reference: wipe everything produced
+    # later
+    for name in ["artifact_aligned_references.json",
                  "artifact_artifact_set.json"]:
         os.remove(f"{work}/{name}")
 
@@ -76,7 +76,7 @@ def test_lineage_records(spark, table, tmp_path_factory):
     assert tuple(r["stage"] for r in records) \
         == FeaturePipeline.CHECKPOINT_ORDER
     stages = [r for r in records if r["kind"] == "stage"]
-    assert {r["stage"] for r in stages} == {"resample_baseline", "pafft"}
+    assert {r["stage"] for r in stages} == {"resample_baseline"}
     for r in stages:
         assert r["rows"] == 20
         assert r["partitions"] >= 1
@@ -84,7 +84,7 @@ def test_lineage_records(spark, table, tmp_path_factory):
         assert r["rows_per_sec"] > 0
     arts = {r["stage"] for r in records if r["kind"] == "artifact"}
     assert {"mz_axis", "tic_thresholds", "pafft_reference",
-            "tic_reference_tic", "gmm_reference", "artifact_set"} <= arts
+            "aligned_references", "artifact_set"} <= arts
 
     # resumed run adds NO new stage records (everything skipped)
     n_before = len(records)

@@ -51,13 +51,14 @@ def test_cli_recompute_single_stage_reuses_upstream(spark, tmp_path, capsys):
     capsys.readouterr()
 
     assert main(["recompute", "--input", in_dir, "--work-dir", work,
-                 "--stage", "pafft",
+                 "--stage", "aligned_references",
                  "--sources", "src-000,src-001",
                  "--base-channels", "512"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # pafft and everything downstream recomputed; upstream stages
-    # (resample_baseline, thresholds, pafft_reference) reused from checkpoint
-    assert "pafft" in out["recomputed"]
+    # aligned_references and everything downstream recomputed; upstream
+    # stages (resample_baseline, thresholds, pafft_reference) reused from
+    # checkpoint
+    assert "aligned_references" in out["recomputed"]
     assert "artifact_set" in out["recomputed"]
     for upstream in ("resample_baseline", "tic_thresholds",
                      "pafft_reference", "mz_axis"):
@@ -65,11 +66,11 @@ def test_cli_recompute_single_stage_reuses_upstream(spark, tmp_path, capsys):
 
     # --only-stage: strictly one stage rebuilt
     assert main(["recompute", "--input", in_dir, "--work-dir", work,
-                 "--stage", "pafft", "--only-stage",
+                 "--stage", "aligned_references", "--only-stage",
                  "--sources", "src-000,src-001",
                  "--base-channels", "512"]) == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out2["recomputed"] == ["pafft"]
+    assert out2["recomputed"] == ["aligned_references"]
 
 
 def test_cli_transform_work_dir_serves_current_artifacts(spark, tmp_path,

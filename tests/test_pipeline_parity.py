@@ -199,6 +199,11 @@ def test_short_token_row_error_names_the_row(table, axes):
     art = pipe.fit(table)
     with pytest.raises(Exception, match=reason):
         pipe.transform(short, [art]).collect()
+    tokens = np.asarray(table.where(F.col("doc_id") == bad_id)
+                        .select("tokens").first()[0])[:10]
+    with pytest.raises(ValueError, match=rf"^row {reason}$"):
+        oracle.transform_rows([(bad_id, tokens, 10, bad_src)], axes,
+                              _oracle_artifacts(art), CFG)
 
 
 def _oracle_artifacts(art: sp.ArtifactSet) -> oracle.PipelineArtifacts:
@@ -252,6 +257,31 @@ def test_zero_sum_row_error_names_the_row(table, axes, oracle_rows):
     with pytest.raises(ValueError, match=rf"^{message}$"):
         oracle.transform_rows([(bad_id, np.zeros(n), n, bad_src)], axes,
                               _oracle_artifacts(art), CFG)
+
+
+def test_zero_sum_inlier_row_fails_the_fit_naming_the_row(spark):
+    """Under MIN_POPULATION rows every row is an inlier, so an all-zero row
+    reaches the TIC normalize of the fit: the Spark fit and the oracle fit
+    both raise the ValueError naming its doc_id — not a FloatingPointError
+    from a UDF, nor NaN references."""
+    sources = {"src-000": 3, "src-001": 3}
+    axes = synthetic.source_axes_for(sources, 512)
+    bad_id, bad_src = "src-001-00000001", "src-001"
+    df = sp.with_ts(synthetic.sequences_df(spark, sources, base_channels=512),
+                    CFG)
+    zeroed = df.withColumn(
+        "tokens", F.when(F.col("doc_id") == bad_id,
+                         F.transform("tokens", lambda _: F.lit(0)))
+        .otherwise(F.col("tokens")))
+    message = (rf"row doc_id={re.escape(repr(bad_id))} "
+               rf"source={re.escape(repr(bad_src))}: spectrum sums to zero; "
+               "it cannot be rescaled to the reference TIC")
+    with pytest.raises(Exception, match=rf"ValueError: {message}"):
+        FeaturePipeline(spark, axes, CFG).fit(zeroed)
+    rows = [(d, np.zeros_like(t) if d == bad_id else t, n, s)
+            for d, t, n, s in synth.make_table(sources, base_channels=512)]
+    with pytest.raises(ValueError, match=rf"^{message}$"):
+        oracle.fit_artifacts(rows, axes, CFG)
 
 
 def test_serve_version_pick(spark):
