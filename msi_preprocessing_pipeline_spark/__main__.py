@@ -8,7 +8,8 @@ driver. Subcommands:
 * ``transform``  — featurize each row under the artifact version valid at
                    its ts (one map pass); writes the feature table.
 * ``pit``        — point-in-time end-to-end: fit one artifact version per
-                   checkpoint, serve all rows, write features.
+                   checkpoint in memory (no ``--work-dir``), serve all
+                   rows, write features.
 * ``recompute``  — invalidate one checkpoint stage (and, by default, the
                    stages after it) and refit from the kept checkpoints.
 
@@ -17,8 +18,8 @@ Examples::
     spark-submit --master local[32] \
         --py-files msi_preprocessing_pipeline_spark.zip \
         -m msi_preprocessing_pipeline_spark pit \
-        --input /data/sequences --work-dir /data/run1 \
-        --output /data/features --checkpoints 1600000000,1600030000
+        --input /data/sequences --output /data/features \
+        --checkpoints 1600000000,1600030000
 """
 
 from __future__ import annotations
@@ -60,7 +61,7 @@ def main(argv=None) -> int:
                    help="parquet dir of (doc_id, tokens, n_tok, source[, ts])")
     p.add_argument("--output", default=None, help="feature parquet dir")
     p.add_argument("--work-dir", default=None,
-                   help="checkpoint/lineage dir (fit, pit)")
+                   help="checkpoint/lineage dir (fit, recompute)")
     p.add_argument("--artifacts", default=None,
                    help="artifact JSON path (fit output / transform input)")
     p.add_argument("--checkpoints", default=None,
@@ -70,6 +71,8 @@ def main(argv=None) -> int:
     p.add_argument("--base-channels", type=int, default=2048)
     p.add_argument("--parallelism", type=int, default=None)
     args = p.parse_args(argv)
+    if args.command == "pit" and args.work_dir:
+        p.error("pit fits in memory and takes no --work-dir")
 
     from msi_preprocessing_pipeline_spark.operators import spectrum as sp
     from msi_preprocessing_pipeline_spark.oracle import PipelineConfig

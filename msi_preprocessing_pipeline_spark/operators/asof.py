@@ -50,23 +50,15 @@ def _asof(left: DataFrame, keys: list[str], left_ts: str,
     row's instant always matches. One exchange, one sort and one Window
     node for any number of sides. Output names are not checked for
     collisions here — the callers do that with their own advice."""
-    left_types = {f.name: f.dataType for f in left.schema.fields}
-    # (output column, its type, its side) for every picked column
-    vals = []
-    for i, s in enumerate(sides, start=1):
-        fields = s.df.select(*s.cols.values()).schema.fields
-        vals += [(n, f.dataType, i) for n, f in zip(s.cols, fields)]
-
-    unioned = left.select(
-        "*", F.col(left_ts).alias(_TS), F.lit(0).alias(_SIDE),
-        *[F.lit(None).cast(t).alias(n) for n, t, _ in vals])
+    # every side carries only its keys, ts, tag and values;
+    # allowMissingColumns pads the rest of the union with typed nulls
+    unioned = left.select("*", F.col(left_ts).alias(_TS),
+                          F.lit(0).alias(_SIDE))
     for i, s in enumerate(sides, start=1):
         unioned = unioned.unionByName(s.df.select(
-            *[F.col(c) if c in keys else F.lit(None).cast(t).alias(c)
-              for c, t in left_types.items()],
-            F.col(s.ts).alias(_TS), F.lit(i).alias(_SIDE),
-            *[F.col(s.cols[n]).alias(n) if j == i
-              else F.lit(None).cast(t).alias(n) for n, t, j in vals]))
+            *keys, F.col(s.ts).alias(_TS), F.lit(i).alias(_SIDE),
+            *[F.col(c).alias(n) for n, c in s.cols.items()]),
+            allowMissingColumns=True)
 
     # a side row at the left row's instant must precede it
     ts_order = F.col(_TS).asc() if direction == "backward" \
@@ -79,12 +71,13 @@ def _asof(left: DataFrame, keys: list[str], left_ts: str,
                       ignorenulls=True).over(w)
 
     filled = unioned.select(
-        "*", *[pick(i, n).alias(f"__asof_v_{n}") for n, _t, i in vals],
+        "*", *[pick(i, n).alias(f"__asof_v_{n}")
+               for i, s in enumerate(sides, start=1) for n in s.cols],
         *[pick(i, _TS).alias(f"__asof_m_{i}")
           for i in range(1, len(sides) + 1)],
     ).where(F.col(_SIDE) == 0)
 
-    out = [F.col(c) for c in left_types]
+    out = [F.col(c) for c in left.columns]
     for i, s in enumerate(sides, start=1):
         matched = F.col(f"__asof_m_{i}")
         values = [F.col(f"__asof_v_{n}") for n in s.cols]
@@ -122,10 +115,13 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str] | str,
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in on and c != right_ts]
     value_cols = _as_list(value_cols)
-    for c in value_cols:
-        if c in left.columns:
-            raise ValueError(f"value column {c!r} collides with a left column;"
-                             " rename it on the right side first")
+    names = [*value_cols, *([matched_ts_col] if matched_ts_col else [])]
+    dupes = {n for n in names if names.count(n) > 1} | \
+        (set(names) & set(left.columns))
+    if dupes:
+        raise ValueError(
+            f"output columns collide: {sorted(dupes)} — rename them on the "
+            "right side first, or pick another matched_ts_col")
     side = _Side(right, right_ts, {c: c for c in value_cols}, tolerance,
                  matched_ts_col)
     return _asof(left, on, left_ts, [side], direction)
@@ -133,30 +129,20 @@ def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str] | str,
 
 def backfill(df: DataFrame, cols: Sequence[str] | str,
              partition_by: Sequence[str] | str,
-             order_by: Sequence[str] | str = "ts",
-             direction: str = "forward") -> DataFrame:
-    """Fill nulls from the previous non-null value per entity
-    (``direction='forward'``, i.e. LOCF) or the next one (``'backward'``).
+             order_by: Sequence[str] | str = "ts") -> DataFrame:
+    """Fill nulls from the previous non-null value per entity (LOCF, last
+    observation carried forward): a row is only ever filled from an
+    earlier one, never from its future.
 
     SQL shape: ``last(col, ignorenulls) OVER (PARTITION BY entity ORDER BY ts
     ROWS UNBOUNDED PRECEDING)`` — single shuffle on the entity key.
     """
-    cols = _as_list(cols)
-    partition_by = _as_list(partition_by)
-    order_cols = _as_list(order_by)
-    if direction == "forward":
-        w = (Window.partitionBy(*partition_by)
-             .orderBy(*[F.col(c).asc() for c in order_cols])
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    elif direction == "backward":
-        w = (Window.partitionBy(*partition_by)
-             .orderBy(*[F.col(c).desc() for c in order_cols])
-             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    else:
-        raise ValueError(f"direction must be forward|backward, got {direction}")
+    w = (Window.partitionBy(*_as_list(partition_by))
+         .orderBy(*[F.col(c).asc() for c in _as_list(order_by)])
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return df.withColumns({
         c: F.coalesce(F.col(c), F.last(F.col(c), ignorenulls=True).over(w))
-        for c in cols
+        for c in _as_list(cols)
     })
 
 

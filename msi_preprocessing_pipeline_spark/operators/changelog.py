@@ -51,12 +51,11 @@ def apply_changelog(base: DataFrame, changes: DataFrame,
 
 
 def diff_snapshots(old: DataFrame, new: DataFrame,
-                   keys, compare_cols=None,
-                   include_unchanged: bool = False) -> DataFrame:
+                   keys, compare_cols=None) -> DataFrame:
     """Row-level diff between two snapshots of the same table: one row per
-    key with ``change_type`` in ``added | removed | changed`` (plus
-    ``unchanged`` when ``include_unchanged``) and ``changed_cols`` — the
-    names of the compared columns whose values differ (null-safe; empty
+    added, removed or changed key (unchanged keys drop out) with
+    ``change_type`` in ``added | removed | changed`` and ``changed_cols`` —
+    the names of the compared columns whose values differ (null-safe; empty
     for added/removed). The audit primitive for dataset versioning:
     "what did this rebuild actually change".
 
@@ -90,8 +89,6 @@ def diff_snapshots(old: DataFrame, new: DataFrame,
                           & F.col("__in_new").isNotNull(), diffs)
                    .otherwise(F.array().cast("array<string>"))
                    .alias("changed_cols"))
-    if include_unchanged:
-        return out
     return out.where(F.col("change_type") != "unchanged")
 
 
@@ -123,14 +120,12 @@ def scd2_intervals(df: DataFrame, key_cols, ts_col: str,
 
 
 def merge_into(target: DataFrame, source: DataFrame,
-               key: Sequence[str] | str,
-               when_matched: str = "update",
-               when_not_matched: str = "insert") -> DataFrame:
+               key: Sequence[str] | str) -> DataFrame:
     """ANSI / Delta-style MERGE as a plain relational plan: the new
-    snapshot of ``target`` after applying ``source`` rows by key —
-    matched keys ``'update'`` (take the source row), ``'delete'``, or
-    ``'keep'`` (ignore the source); unmatched source keys ``'insert'``
-    or ``'skip'``.  ``source`` must carry every target column (minus
+    snapshot of ``target`` after applying ``source`` rows by key — WHEN
+    MATCHED UPDATE (a matched key takes the source row), WHEN NOT MATCHED
+    INSERT (an unmatched source key is added); target keys the source
+    lacks stay as they are.  ``source`` must carry every target column (minus
     nothing) and AT MOST ONE row per key — like Delta/Iceberg MERGE,
     a multi-match fails the job (enforced IN-PLAN with a window count
     + ``raise_error``, so the guard costs no extra action and runs
@@ -149,12 +144,6 @@ def merge_into(target: DataFrame, source: DataFrame,
     CDC story (``apply_changelog``, ``refresh_group_agg``) composes
     with.
     """
-    if when_matched not in ("update", "delete", "keep"):
-        raise ValueError(f"when_matched must be update/delete/keep, "
-                         f"got {when_matched!r}")
-    if when_not_matched not in ("insert", "skip"):
-        raise ValueError(f"when_not_matched must be insert/skip, "
-                         f"got {when_not_matched!r}")
     keys = as_list(key)
     cols = target.columns
     missing = [c for c in cols if c not in source.columns]
@@ -172,21 +161,16 @@ def merge_into(target: DataFrame, source: DataFrame,
     s = source.select(*cols).select(
         *[F.col(c).alias(f"__s_{c}") for c in cols],
         guard.alias("__s"))
-    t = target.select(*cols, F.lit(1).alias("__t"))
     cond = None
     for k in keys:
         c = F.col(k).eqNullSafe(F.col(f"__s_{k}"))
         cond = c if cond is None else (cond & c)
-    j = t.join(s, cond, "full_outer")
-    matched = F.col("__t").isNotNull() & F.col("__s").isNotNull()
-    t_only = F.col("__s").isNull()
-    s_only = F.col("__t").isNull()
-    keep = t_only | (matched & F.lit(when_matched != "delete")) | \
-        (s_only & F.lit(when_not_matched == "insert"))
-    pick_source = (matched & F.lit(when_matched == "update")) | s_only
-    out = [F.when(pick_source, F.col(f"__s_{c}"))
+    j = target.join(s, cond, "full_outer")
+    # a row with a source side (matched or source-only) takes the source
+    # row; a target-only row keeps its own
+    out = [F.when(F.col("__s").isNotNull(), F.col(f"__s_{c}"))
            .otherwise(F.col(c)).alias(c) for c in cols]
-    return j.where(keep).select(*out)
+    return j.select(*out)
 
 
 def to_changelog(old: DataFrame, new: DataFrame,

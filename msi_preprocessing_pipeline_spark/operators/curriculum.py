@@ -40,12 +40,10 @@ _SHUFFLE_MOD = 1 << 30
 
 
 def curriculum_keys(df: DataFrame, score_col: str, n_buckets: int = 4,
-                    id_col: str = "doc_id", seed: int = 7,
-                    ascending: bool = True) -> DataFrame:
+                    id_col: str = "doc_id", seed: int = 7) -> DataFrame:
     """Appends ``(cur_bucket int, cur_key long)``: the difficulty bucket
-    (0 = easiest under ``ascending=True``; pass ``ascending=False`` to
-    reverse, i.e. hardest-first anti-curriculum) and the deterministic
-    intra-bucket shuffle key.  NULL scores get NULL bucket (order them
+    (0 = easiest, i.e. lowest score) and the deterministic intra-bucket
+    shuffle key.  NULL scores get NULL bucket (order them
     explicitly or filter upstream — a silent default bucket would hide
     missing difficulty signals).
 
@@ -57,28 +55,22 @@ def curriculum_keys(df: DataFrame, score_col: str, n_buckets: int = 4,
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
     binned = quantile_bin(df, score_col, n_bins=n_buckets,
                           out_col="__qbin")
-    bucket = F.col("__qbin")
-    if not ascending:
-        bucket = F.when(bucket.isNotNull(),
-                        F.lit(int(n_buckets) - 1) - bucket)
     key = md5_bucket(
         F.concat(F.col(id_col).cast("string"), F.lit(f":cur:{seed}")),
         _SHUFFLE_MOD)
     return (binned
-            .withColumn("cur_bucket", bucket.cast("int"))
+            .withColumn("cur_bucket", F.col("__qbin").cast("int"))
             .withColumn("cur_key", key.cast("long"))
             .drop("__qbin"))
 
 
 def curriculum_order(df: DataFrame, score_col: str, n_buckets: int = 4,
-                     id_col: str = "doc_id", seed: int = 7,
-                     ascending: bool = True) -> DataFrame:
+                     id_col: str = "doc_id", seed: int = 7) -> DataFrame:
     """The materialized curriculum stream: :func:`curriculum_keys` +
     Spark's distributed total sort on ``(cur_bucket, cur_key, id)`` —
     range-partitioned, no single-reducer stage.  NULL-score rows sort
     last (nulls-last on the bucket), keeping the defined curriculum
     prefix clean."""
-    keyed = curriculum_keys(df, score_col, n_buckets, id_col, seed,
-                            ascending)
+    keyed = curriculum_keys(df, score_col, n_buckets, id_col, seed)
     return keyed.orderBy(F.col("cur_bucket").asc_nulls_last(),
                          F.col("cur_key").asc(), F.col(id_col).asc())

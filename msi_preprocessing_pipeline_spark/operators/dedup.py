@@ -749,8 +749,7 @@ def positional_word_grams(df: DataFrame, n: int, text_col: str = "text",
 
 def duplicate_spans(df: DataFrame, n: int = 8, text_col: str = "text",
                     id_col: str = "doc_id", min_docs: int = 2,
-                    max_df: int | None = None,
-                    hash_grams: bool = True) -> DataFrame:
+                    max_df: int | None = None) -> DataFrame:
     """Substring-level duplicate detection (the Lee et al. 2022
     "Deduplicating Training Data Makes Language Models Better" shape,
     re-expressed relationally): per document, the maximal word-coordinate
@@ -775,17 +774,16 @@ def duplicate_spans(df: DataFrame, n: int = 8, text_col: str = "text",
     Returns ``(doc_id, span_start, span_end, span_words)`` — word
     coordinates, inclusive.
 
-    ``hash_grams`` (default on) replaces the gram STRING with its
-    ``xxhash64`` before anything shuffles: the doc-frequency aggregation
+    Each gram STRING is replaced by its ``xxhash64`` before anything
+    shuffles: the doc-frequency aggregation
     and the semi-join move 8 bytes per gram instead of ~n words of text —
     the difference between shuffling the corpus twice and shuffling a
     fixed-width key column at 100 TB. A collision (2^-64 per gram pair)
     could at worst mark one extra span as duplicated; output is identical
     in practice and pinned so by the oracle.
     """
-    grams = positional_word_grams(df, n, text_col, id_col)
-    if hash_grams:
-        grams = grams.withColumn("gram", F.xxhash64("gram"))
+    grams = positional_word_grams(df, n, text_col, id_col) \
+        .withColumn("gram", F.xxhash64("gram"))
     # the gram relation feeds the frequency aggregation AND the semi-join
     # probe side: materialize once so gram generation (split + NGram +
     # explode over the corpus) runs one pass, not two

@@ -19,7 +19,7 @@ map-side-combined aggregation over the corpus:
   IEEE tree evaluated over those exact integers, then micro-quantized —
   bit-identical in Spark / DuckDB / numpy PROVIDED the three derived
   components stay below 2^53 (above it a decimal→double cast may
-  double-round differently per engine); ``assert_exact`` enforces that
+  double-round differently per engine); every call enforces that
   bound IN-PLAN with ``raise_error`` folded into the kept output column
   (a standalone guard column would be pruned by the optimizer and never
   evaluate — see PLANS.md `changelog.merge_into`).
@@ -70,8 +70,8 @@ def _pair_aggs(cols, scales):
     return aggs, pairs
 
 
-def corr_matrix(df: DataFrame, cols, scales=None, out_scale: int = 6,
-                assert_exact: bool = True) -> DataFrame:
+def corr_matrix(df: DataFrame, cols, scales=None,
+                out_scale: int = 6) -> DataFrame:
     """All-pairs Pearson correlation over numeric ``cols`` in ONE scan.
 
     ``scales``: int or {col: int} quantization scales (default 6).
@@ -105,16 +105,15 @@ def corr_matrix(df: DataFrame, cols, scales=None, out_scale: int = 6,
         corr = num / F.sqrt(denx * deny)
         corr_u = F.when((denx > 0) & (deny > 0),
                         quantize(corr, out_scale))
-        if assert_exact:
-            worst = F.greatest(F.abs(num), F.abs(denx), F.abs(deny))
-            corr_u = F.when(
-                worst > F.lit(_TWO53),
-                F.raise_error(F.lit(
-                    f"corr_matrix({cols[i]},{cols[j]}): a derived moment "
-                    f"exceeds 2^53 — the decimal->double cast may "
-                    f"double-round differently per engine; lower the "
-                    f"quantization scale or pass assert_exact=False"))
-                .cast("bigint")).otherwise(corr_u)
+        worst = F.greatest(F.abs(num), F.abs(denx), F.abs(deny))
+        corr_u = F.when(
+            worst > F.lit(_TWO53),
+            F.raise_error(F.lit(
+                f"corr_matrix({cols[i]},{cols[j]}): a derived moment "
+                f"exceeds 2^53 — the decimal->double cast may "
+                f"double-round differently per engine; lower the "
+                f"quantization scale"))
+            .cast("bigint")).otherwise(corr_u)
         structs.append(F.struct(
             F.lit(cols[i]).alias("feat_a"), F.lit(cols[j]).alias("feat_b"),
             F.col(f"n_{tag}").alias("n"), corr_u.alias("corr_u")))
@@ -197,8 +196,8 @@ def chi2_scores(df: DataFrame, feature_cols, label_col: str) -> DataFrame:
 
 
 def split_candidates(df: DataFrame, feature_cols, label_col: str,
-                     x_scales=2, y_scale: int = 0, out_scale: int = 4,
-                     assert_exact: bool = True) -> DataFrame:
+                     x_scales=2, y_scale: int = 0,
+                     out_scale: int = 4) -> DataFrame:
     """Decision-stump split search: for every feature and every candidate
     threshold, the variance-reduction gain of the binary split ``x <= t``
     against a numeric label — the CART regression-split primitive
@@ -286,17 +285,16 @@ def split_candidates(df: DataFrame, feature_cols, label_col: str,
     den = (F.col("nl") * nr
            * F.lit(10 ** (2 * y_scale + den_exp)).cast(dec))
     gain = trunc_div(num, den).cast("bigint")
-    if assert_exact:
-        # only the numerator can overflow decimal(38,0): diff²·10^num_exp
-        # (bound can exceed int64 — ship it as a string-typed literal)
-        bound = _isqrt_pow10(38 - num_exp)
-        gain = F.when(
-            F.abs(diff) > F.lit(str(bound)).cast(dec),
-            F.raise_error(F.lit(
-                "split_candidates: |SL*nR - SR*nL| exceeds the "
-                "decimal(38,0) headroom for this out_scale/y_scale - "
-                "coarsen y_scale or lower out_scale"))
-            .cast("bigint")).otherwise(gain)
+    # only the numerator can overflow decimal(38,0): diff²·10^num_exp
+    # (bound can exceed int64 — ship it as a string-typed literal)
+    bound = _isqrt_pow10(38 - num_exp)
+    gain = F.when(
+        F.abs(diff) > F.lit(str(bound)).cast(dec),
+        F.raise_error(F.lit(
+            "split_candidates: |SL*nR - SR*nL| exceeds the "
+            "decimal(38,0) headroom for this out_scale/y_scale - "
+            "coarsen y_scale or lower out_scale"))
+        .cast("bigint")).otherwise(gain)
     return cand.select(
         "feature", F.col("xq").cast("bigint").alias("threshold_u"),
         F.col("nl").cast("bigint").alias("n_left"),

@@ -346,12 +346,13 @@ def label_prop(edges: DataFrame, src_col: str, dst_col: str,
 
 def bfs_hops(edges: DataFrame, src_col: str, dst_col: str,
              seeds: DataFrame, seed_col: str | None = None,
-             max_hops: int = 6, directed: bool = False) -> DataFrame:
-    """Multi-source BFS: the exact hop distance from the nearest seed
-    for every node within ``max_hops`` — the graph family's reachability
-    leg (PageRank ranks, k-core prunes, label_prop clusters; this
-    MEASURES distance, e.g. "how far is every supplier from a trusted
-    seed set", the contamination-radius / influence-horizon shape).
+             max_hops: int = 6) -> DataFrame:
+    """Multi-source BFS over the undirected graph: the exact hop distance
+    from the nearest seed for every node within ``max_hops`` — the graph
+    family's reachability leg (PageRank ranks, k-core prunes, label_prop
+    clusters; this MEASURES distance, e.g. "how far is every supplier from
+    a trusted seed set", the contamination-radius / influence-horizon
+    shape).
 
     Returns ``(node, hops)`` — seeds at 0 (isolated seeds included),
     unreachable-within-``max_hops`` nodes absent.  Deterministic: the
@@ -369,8 +370,8 @@ def bfs_hops(edges: DataFrame, src_col: str, dst_col: str,
     native complexity — and ``max_hops`` bounds the plan depth a
     priori.
 
-    ``directed=False`` (default) walks edges both ways; duplicates,
-    loops and null endpoints are dropped either way.
+    Every edge is walked both ways; duplicates, loops and null endpoints
+    are dropped.
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
@@ -382,7 +383,7 @@ def bfs_hops(edges: DataFrame, src_col: str, dst_col: str,
          .select(F.col(src_col).cast(node_t).alias("__u"),
                  F.col(dst_col).cast(node_t).alias("__v"))
          .where(F.col("__u") != F.col("__v")))
-    adj = e if directed else e.union(
+    adj = e.union(
         e.select(F.col("__v").alias("__u"), F.col("__u").alias("__v")))
     # materialize the adjacency once: every BFS round joins against it,
     # and a lazy adj re-runs the caller's edge construction (here often

@@ -2,14 +2,14 @@
 
 Media payloads are opaque ``binary`` columns with typed metadata structs;
 decode / resize / perceptual hash (:func:`phash64`) run as one Arrow-batched
-UDF over ``mapInPandas``. ``decoder='fake'`` produces a deterministic
-hash-seeded pixel array with the declared shape; ``decoder='real'``
-decodes UNCOMPRESSED formats in pure numpy (BMP 8/24-bit BI_RGB, PNM
-P5/P6 — zero new dependencies, round-trip tested) and raises
-``NotImplementedError`` for compressed formats (JPEG/PNG/video), which
-need Pillow/ffmpeg that this container does not ship. The Spark-side
-plumbing (schema, batch shape, partitioning, UDF signatures) is identical
-for both decoders.
+UDF over ``mapInPandas``. ``decoder='real'`` (the default) decodes
+UNCOMPRESSED formats in pure numpy (BMP 8/24-bit BI_RGB, PNM P5/P6 — zero
+new dependencies, round-trip tested) and raises ``NotImplementedError``
+for compressed formats (JPEG/PNG/video), which need Pillow/ffmpeg, not
+dependencies of this package. ``decoder='fake'`` is the stand-in for
+such media: a deterministic hash-seeded pixel array with the declared
+shape. The Spark-side plumbing (schema, batch shape, partitioning, UDF
+signatures) is identical for both decoders.
 """
 
 from __future__ import annotations
@@ -145,7 +145,7 @@ def _phash_one(img: np.ndarray, img_size: int, hash_size: int,
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-def phash64(df: DataFrame, decoder: str = "fake",
+def phash64(df: DataFrame, decoder: str = "real",
             id_col: str = "media_id", img_size: int = 32,
             hash_size: int = 8) -> DataFrame:
     """64-bit perceptual hash per media row: decode → box-filter resize to

@@ -432,7 +432,7 @@ def sax_breakpoints(alphabet_size: int) -> list[float]:
 def sax_symbols(df: DataFrame, value_col: str, partition_by,
                 order_by: str = "ts", n_segments: int = 8,
                 alphabet_size: int = 4, scale: int = 3,
-                tiebreak=None, assert_exact: bool = True) -> DataFrame:
+                tiebreak=None) -> DataFrame:
     """SAX symbolization per entity series: PAA-reduce each ordered
     series to ``n_segments`` means, z-normalize against the SERIES'
     own mean/σ, and map each segment to its Gaussian-breakpoint symbol
@@ -515,15 +515,14 @@ def sax_symbols(df: DataFrame, value_col: str, partition_by,
          / (F.col("n_in_seg").cast("double")
             * F.sqrt(varnum.cast("double"))))
     z_u = F.when(varnum > 0, quantize(z, 6))
-    if assert_exact:
-        z_u = F.when(
-            F.greatest(F.abs(num), F.abs(varnum))
-            > two53.cast("decimal(38,0)"),
-            F.raise_error(F.lit(
-                "sax_symbols: a moment exceeds 2^53 - the "
-                "decimal->double cast may double-round differently "
-                "per engine; lower the quantization scale"))
-            .cast("bigint")).otherwise(z_u)
+    z_u = F.when(
+        F.greatest(F.abs(num), F.abs(varnum))
+        > two53.cast("decimal(38,0)"),
+        F.raise_error(F.lit(
+            "sax_symbols: a moment exceeds 2^53 - the "
+            "decimal->double cast may double-round differently "
+            "per engine; lower the quantization scale"))
+        .cast("bigint")).otherwise(z_u)
     sym = None
     for bp in bps:
         c = F.when(z > F.lit(bp), 1).otherwise(0)

@@ -957,11 +957,11 @@ def compression_metrics(df: DataFrame, text_col: str = "text",
 
 
 def dict_tag(df: DataFrame, keywords, text_col: str = "text",
-             id_col: str = "doc_id",
-             case_insensitive: bool = True) -> DataFrame:
+             id_col: str = "doc_id") -> DataFrame:
     """Per-document dictionary tagging: for every keyword in a bounded
     lexicon, the number of (non-overlapping, left-to-right) substring
-    occurrences in the document — the primitive behind blocklist
+    occurrences in the document, case-insensitively (document and
+    keywords are lower-cased) — the primitive behind blocklist
     filters (C4's "bad words" pass, Raffel et al. 2020 §2.2) and
     topic-lexicon tagging.
 
@@ -984,12 +984,10 @@ def dict_tag(df: DataFrame, keywords, text_col: str = "text",
         raise ValueError("keywords must be non-empty strings")
     if len(set(kws)) != len(kws):
         raise ValueError("duplicate keywords")
-    hay = F.coalesce(F.col(text_col), F.lit(""))
-    if case_insensitive:
-        hay = F.lower(hay)
-        kws = [k.lower() for k in kws]
-        if len(set(kws)) != len(kws):
-            raise ValueError("keywords collide after lower()")
+    hay = F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    kws = [k.lower() for k in kws]
+    if len(set(kws)) != len(kws):
+        raise ValueError("keywords collide after lower()")
     lex = F.array(*[F.lit(k) for k in sorted(set(kws))])
     hits = F.filter(
         F.transform(
@@ -1005,11 +1003,11 @@ def dict_tag(df: DataFrame, keywords, text_col: str = "text",
 
 
 def blocklist_filter(df: DataFrame, keywords, max_hits: int = 0,
-                     text_col: str = "text",
-                     case_insensitive: bool = True) -> DataFrame:
+                     text_col: str = "text") -> DataFrame:
     """Drop documents whose TOTAL blocklist-keyword occurrence count
-    exceeds ``max_hits`` (default 0 — any hit drops, the C4 rule).
-    Null documents carry zero hits and are kept.
+    exceeds ``max_hits`` (default 0 — any hit drops, the C4 rule),
+    counted case-insensitively. Null documents carry zero hits and are
+    kept.
 
     Same exact counting idiom as :func:`dict_tag`, but summed with
     ``F.aggregate`` inside the projection — the filter is a map-only
@@ -1020,11 +1018,8 @@ def blocklist_filter(df: DataFrame, keywords, max_hits: int = 0,
     kws = [str(k) for k in keywords]
     if not kws or any(len(k) == 0 for k in kws):
         raise ValueError("keywords must be non-empty strings")
-    hay = F.coalesce(F.col(text_col), F.lit(""))
-    if case_insensitive:
-        hay = F.lower(hay)
-        kws = [k.lower() for k in kws]
-    lex = F.array(*[F.lit(k) for k in sorted(set(kws))])
+    hay = F.lower(F.coalesce(F.col(text_col), F.lit("")))
+    lex = F.array(*[F.lit(k) for k in sorted({k.lower() for k in kws})])
     total = F.aggregate(
         lex, F.lit(0).cast("long"),
         lambda acc, k: acc + ((F.length(hay)

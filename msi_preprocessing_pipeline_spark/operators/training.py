@@ -12,9 +12,10 @@ Scale shapes:
   in ONE union + one fused window (1 shuffle total vs F), the many-side
   form of the one as-of plan, :func:`~.asof._asof`;
 * :func:`pit_window_agg` / :func:`pit_window_agg_multi` — trailing
-  (feature) or leading (label) interval aggregates at each observation,
-  any number of horizons/sources/aggregates in one entity-partitioned
-  Window node (one shared plan, :func:`_interval_agg`).
+  (feature) interval aggregates at each observation, and leading (label)
+  ones from one source; any number of horizons/sources/aggregates in one
+  entity-partitioned Window node (one shared plan, :func:`_interval_agg`).
+  No frame holds the observation's own instant.
 No Python on any hot path; composition is purely lazy, so Catalyst sees
 the whole multi-join program and can reorder scans/prune columns across
 stages.
@@ -60,7 +61,6 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
                    window: int | Sequence[int],
                    fns: Sequence[str] = ("count", "sum"),
                    prefix: str = "f_",
-                   include_current_instant: bool = False,
                    frame: str = "trailing") -> DataFrame:
     """Trailing-window aggregate features evaluated AT each spine row's
     timestamp: "count/sum/avg of the entity's events in the ``window``
@@ -77,9 +77,9 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
     are requested — vs a range join's candidate blow-up or one pass per
     feature.
 
-    Leakage contract: the frame ends at ``ts - 1`` (strictly before the
-    observation) unless ``include_current_instant=True``; with it, events
-    at exactly the observation instant are peers and included.
+    Leakage contract: the frame is ``[ts - window, ts - 1]`` and ends
+    strictly before the observation, so an event at the observation's own
+    instant never enters its features.
 
     ``window`` may be a list of horizons (e.g. 1h/24h/7d): every
     (window, fn) feature comes out of the SAME exchange and sort — one
@@ -87,14 +87,13 @@ def pit_window_agg(spine: DataFrame, events: DataFrame,
     the partitioning and ordering.
 
     ``frame='leading'`` flips to the LABEL side: events in the window
-    strictly AFTER the observation (``(ts, ts + window]``; with
-    ``include_current_instant`` the instant itself joins the frame) —
-    "did/how-much the entity convert within the horizon" targets, with the
-    same zero-peeking-backward symmetry.
+    strictly AFTER the observation (``[ts + 1, ts + window]``) —
+    "did/how-much the entity convert within the horizon" targets, with the same
+    zero-peeking-backward symmetry.
     """
     source = EventSource(events, event_ts, value_col, prefix)
     return _interval_agg(spine, on, spine_ts, [source], window, fns,
-                         include_current_instant, frame, value_type=None)
+                         frame, value_type=None)
 
 
 def build_training_set_fused(spine: DataFrame, on: Sequence[str] | str,
@@ -147,16 +146,15 @@ class EventSource:
 def pit_window_agg_multi(spine: DataFrame, on: Sequence[str] | str,
                          spine_ts: str, sources: Sequence[EventSource],
                          window: int | Sequence[int],
-                         fns: Sequence[str] = ("count", "sum"),
-                         include_current_instant: bool = False,
-                         frame: str = "trailing") -> DataFrame:
+                         fns: Sequence[str] = ("count", "sum")
+                         ) -> DataFrame:
     """:func:`pit_window_agg` over SEVERAL event streams at once: every
     (source, horizon, fn) feature — e.g. click/view/error counts and sums
     for 1h and 24h — out of ONE union, one shuffle, one fused Window node.
     Aggregates select their stream via ``fn(when(src == i, val))`` inside
-    the shared RANGE frame (``frame='trailing'`` for features,
-    ``'leading'`` for labels). Same leakage contract and plan as the
-    single-source operator; values are aggregated as double.
+    the shared trailing RANGE frame ``[ts - window, ts - 1]``. Same leakage
+    contract and plan as the single-source operator; values are aggregated
+    as double.
     """
     prefixes = [src.prefix for src in sources]
     dupes = {p for p in prefixes if prefixes.count(p) > 1}
@@ -165,52 +163,47 @@ def pit_window_agg_multi(spine: DataFrame, on: Sequence[str] | str,
             f"duplicate EventSource prefixes: {sorted(dupes)} — feature "
             "columns would collide")
     return _interval_agg(spine, on, spine_ts, sources, window, fns,
-                         include_current_instant, frame, value_type="double")
+                         "trailing", value_type="double")
 
 
 def _interval_agg(spine: DataFrame, on: Sequence[str] | str, spine_ts: str,
                   sources: Sequence[EventSource],
                   window: int | Sequence[int], fns: Sequence[str],
-                  include_current_instant: bool, frame: str,
-                  value_type: str | None) -> DataFrame:
+                  frame: str, value_type: str | None) -> DataFrame:
     """The one plan behind :func:`pit_window_agg` and
     :func:`pit_window_agg_multi`: the spine (tag 0, value null) and source
     ``i`` (tag ``i``) in one union; every (horizon, source, fn) feature
     ``<prefix><fn>_<horizon>`` is ``fn(when(tag == i, value))`` over a
     RANGE frame on ``ts`` in ONE select (one exchange, one Window node);
-    the spine rows are then filtered back out. ``value_type=None`` keeps
-    the source's own value type; otherwise every value is cast to it."""
+    the spine rows are then filtered back out. The frame is
+    ``[ts - w, ts - 1]`` (``trailing``) or ``[ts + 1, ts + w]``
+    (``leading``): the observation's own instant is in neither.
+    ``value_type=None`` keeps the source's own value type; otherwise every
+    value is cast to it."""
     if frame not in ("trailing", "leading"):
         raise ValueError(f"frame must be trailing|leading, got {frame!r}")
     keys = _as_list(on)
-    spine_types = {f.name: f.dataType for f in spine.schema.fields}
 
     def value(src: EventSource):
         v = F.col(src.value_col)
         return v if value_type is None else v.cast(value_type)
 
-    spine_value = value_type or \
-        sources[0].df.select(sources[0].value_col).schema[0].dataType
+    # every source carries only its keys, ts, tag and value;
+    # allowMissingColumns pads the rest of the union with typed nulls
     unioned = spine.select("*", F.col(spine_ts).cast("long").alias("__ts"),
-                           F.lit(None).cast(spine_value).alias("__val"),
                            F.lit(0).alias("__src"))
     for i, src in enumerate(sources, start=1):
         unioned = unioned.unionByName(src.df.select(
-            *[F.col(c) if c in keys
-              else F.lit(None).cast(spine_types[c]).alias(c)
-              for c in spine.columns],
-            F.col(src.ts_col).cast("long").alias("__ts"),
-            value(src).alias("__val"), F.lit(i).alias("__src")))
+            *keys, F.col(src.ts_col).cast("long").alias("__ts"),
+            value(src).alias("__val"), F.lit(i).alias("__src")),
+            allowMissingColumns=True)
 
     windows = [window] if isinstance(window, int) else list(window)
     # all window columns in ONE select so Catalyst emits one fused Window
     # node (chained withColumn blocks CollapseWindow across frames)
     exprs = []
     for win in windows:
-        if frame == "trailing":
-            lo, hi = -int(win), (0 if include_current_instant else -1)
-        else:
-            lo, hi = (0 if include_current_instant else 1), int(win)
+        lo, hi = (-int(win), -1) if frame == "trailing" else (1, int(win))
         w = (Window.partitionBy(*keys).orderBy("__ts")
              .rangeBetween(lo, hi))
         for i, src in enumerate(sources, start=1):

@@ -109,12 +109,19 @@ def test_backfill_forward(spark):
     pd.testing.assert_series_equal(
         got["v"].reset_index(drop=True),
         pd.Series([np.nan, 1.0, 1.0, 1.0, 4.0, 4.0]), check_names=False)
-    got_b = (asof.backfill(spark.createDataFrame(pdf), "v", "entity", "ts",
-                           direction="backward")
-             .toPandas().sort_values("ts"))
-    pd.testing.assert_series_equal(
-        got_b["v"].reset_index(drop=True),
-        pd.Series([1.0, 1.0, 4.0, 4.0, 4.0, np.nan]), check_names=False)
+
+
+@pytest.mark.parametrize("matched", ["ts", "w"])
+def test_asof_join_rejects_colliding_matched_ts_col(spark, matched):
+    """The matched-ts column may not repeat a left or a value column: the
+    output would carry two columns of one name."""
+    left = spark.createDataFrame([("a", 1, 1.0)],
+                                 "k string, ts long, v double")
+    right = spark.createDataFrame([("a", 0, 2.0)],
+                                  "k string, ts long, w double")
+    with pytest.raises(ValueError, match="collide"):
+        asof.asof_join(left, right, "k", value_cols=["w"],
+                       matched_ts_col=matched)
 
 
 def test_sessionize(spark):

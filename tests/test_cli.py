@@ -3,6 +3,8 @@ checkpoints → transform from saved artifacts → PIT end-to-end."""
 
 import json
 
+import pytest
+
 from msi_preprocessing_pipeline_spark.__main__ import main
 from msi_preprocessing_pipeline_spark.sources import synthetic
 
@@ -36,6 +38,17 @@ def test_cli_fit_transform_pit(spark, tmp_path, capsys):
                  "--base-channels", "512"]) == 0
     pit_out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert pit_out["rows"] == 20 and pit_out["versions"] == 2
+
+
+def test_cli_pit_rejects_work_dir(tmp_path, capsys):
+    """pit fits in memory: a --work-dir it would ignore is an error."""
+    with pytest.raises(SystemExit) as e:
+        main(["pit", "--input", str(tmp_path / "seq"),
+              "--work-dir", str(tmp_path / "work"),
+              "--output", str(tmp_path / "pit"), "--checkpoints", "1",
+              "--sources", "src-000"])
+    assert e.value.code == 2
+    assert "--work-dir" in capsys.readouterr().err
 
 
 def test_cli_recompute_single_stage_reuses_upstream(spark, tmp_path, capsys):

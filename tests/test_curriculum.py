@@ -1,6 +1,6 @@
 """Curriculum keys/order: bucket monotone in score, deterministic md5
-shuffle key, anti-curriculum reversal, null handling, partition
-invariance, and the total-sort materialization."""
+shuffle key, null handling, partition invariance, and the total-sort
+materialization."""
 import hashlib
 
 from pyspark.sql import Row
@@ -36,19 +36,6 @@ def test_shuffle_key_is_md5_of_id(spark):
     got = {r["doc_id"]: r["cur_key"]
            for r in curriculum_keys(_df(spark), "score").collect()}
     assert got == {i: _key(i) for i in range(1, 10)}
-
-
-def test_anti_curriculum_reverses_buckets(spark):
-    df = _df(spark)
-    a = {r["doc_id"]: r["cur_bucket"]
-         for r in curriculum_keys(df, "score", 4).collect()}
-    d = {r["doc_id"]: r["cur_bucket"]
-         for r in curriculum_keys(df, "score", 4,
-                                  ascending=False).collect()}
-    for i in a:
-        if a[i] is not None:
-            assert d[i] == 3 - a[i]
-    assert d[9] is None
 
 
 def test_order_is_bucket_then_key_nulls_last(spark):

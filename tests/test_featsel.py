@@ -84,10 +84,6 @@ def test_exactness_guard_fires(spark):
          for i in range(1, 200)])
     with pytest.raises(Exception, match="2\\^53"):
         corr_matrix(df, ["a", "b"], scales=6).collect()
-    # same data, assert_exact off: runs (value may be ulp-wobbly)
-    rows = corr_matrix(df, ["a", "b"], scales=6,
-                       assert_exact=False).collect()
-    assert rows[0].corr_u is not None
 
 
 def test_validation_errors(spark):

@@ -1,4 +1,4 @@
-"""merge_into: update/delete/keep × insert/skip semantics, null-safe
+"""merge_into: update + insert semantics, null-safe
 keys, multi-match fail-fast, column checks, partition invariance."""
 import pytest
 from pyspark.sql import Row
@@ -27,21 +27,6 @@ def test_update_insert(spark):
     assert got == {1: "a", 2: "B", 3: "C", None: "N"}
 
 
-def test_delete_skip(spark):
-    got = {r["k"]: r["v"]
-           for r in merge_into(_t(spark), _s(spark), "k",
-                               when_matched="delete",
-                               when_not_matched="skip").collect()}
-    assert got == {1: "a"}  # 2 and null deleted; 3 never inserted
-
-
-def test_keep_matched(spark):
-    got = {r["k"]: r["v"]
-           for r in merge_into(_t(spark), _s(spark), "k",
-                               when_matched="keep").collect()}
-    assert got == {1: "a", 2: "b", 3: "C", None: "n"}
-
-
 def test_multi_match_raises_at_runtime(spark):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.captured import SparkRuntimeException
@@ -57,8 +42,6 @@ def test_missing_column_and_bad_clause(spark):
     bad = spark.createDataFrame([Row(k=2)], "k int")
     with pytest.raises(ValueError, match="missing target columns"):
         merge_into(_t(spark), bad, "k")
-    with pytest.raises(ValueError, match="when_matched"):
-        merge_into(_t(spark), _s(spark), "k", when_matched="upsert")
 
 
 def test_partition_invariance_and_extra_source_cols_ignored(spark):

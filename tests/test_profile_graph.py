@@ -258,14 +258,13 @@ def test_kcore_empty_and_validation(spark):
 # bfs_hops
 
 
-def _np_bfs(edges, seeds, max_hops, directed):
+def _np_bfs(edges, seeds, max_hops):
     adj = {}
     for u, v in edges:
         if u is None or v is None or u == v:
             continue
         adj.setdefault(u, set()).add(v)
-        if not directed:
-            adj.setdefault(v, set()).add(u)
+        adj.setdefault(v, set()).add(u)
     dist = {s: 0 for s in seeds}
     frontier = set(seeds)
     for h in range(1, max_hops + 1):
@@ -289,12 +288,9 @@ def test_bfs_hops_matches_bruteforce(spark):
     seeds = [0, 1, 2, 777]     # 777: isolated seed, still hop 0
     edf = spark.createDataFrame(edges, "s long, d long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
-    for directed in (False, True):
-        got = {r.node: r.hops
-               for r in bfs_hops(edf, "s", "d", sdf, max_hops=3,
-                                 directed=directed).collect()}
-        exp = _np_bfs(edges, seeds, 3, directed)
-        assert got == exp, f"directed={directed}"
+    got = {r.node: r.hops
+           for r in bfs_hops(edf, "s", "d", sdf, max_hops=3).collect()}
+    assert got == _np_bfs(edges, seeds, 3)
     assert got[777] == 0
 
 

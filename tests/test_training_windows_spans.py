@@ -250,20 +250,18 @@ def test_pit_window_agg_matches_bruteforce(spark):
     assert got[1] == (1, 1.0)
 
 
-def test_pit_window_agg_include_current_instant(spark):
+def test_pit_window_agg_excludes_observation_instant(spark):
+    """Leakage: the trailing frame is ``[ts - w, ts - 1]``, so an event at
+    the observation's own instant never enters its features."""
     from msi_preprocessing_pipeline_spark.operators.training import (
         pit_window_agg)
 
     spine = spark.createDataFrame([(1, 100)], "user_id long, ts long")
     ev = spark.createDataFrame([(1, 100, 5.0), (1, 99, 1.0)],
                                "user_id long, ets long, v double")
-    strict = pit_window_agg(spine, ev, "user_id", "ts", "ets", "v",
-                            window=10).collect()[0]
-    peer = pit_window_agg(spine, ev, "user_id", "ts", "ets", "v",
-                          window=10,
-                          include_current_instant=True).collect()[0]
-    assert (strict["f_count_10"], strict["f_sum_10"]) == (1, 1.0)
-    assert (peer["f_count_10"], peer["f_sum_10"]) == (2, 6.0)
+    got = pit_window_agg(spine, ev, "user_id", "ts", "ets", "v",
+                         window=10).collect()[0]
+    assert (got["f_count_10"], got["f_sum_10"]) == (1, 1.0)
 
 
 def test_pit_window_agg_single_window_node(spark):
@@ -516,32 +514,6 @@ def test_pit_window_agg_leading_matches_brute_force(spark):
         m = ev[(ev.k == s.k) & (ev.ets > s.ts) & (ev.ets <= s.ts + 250)]
         r = plain[plain.obs_id == s.obs_id].iloc[0]
         assert r["f_count_250"] == len(m)
-
-
-def test_pit_window_agg_multi_leading_matches_single(spark):
-    from msi_preprocessing_pipeline_spark.operators.training import (
-        EventSource, pit_window_agg, pit_window_agg_multi)
-    import numpy as np
-
-    rng = np.random.RandomState(31)
-    spine = pd.DataFrame({"obs_id": np.arange(40),
-                          "k": rng.randint(0, 2, 40),
-                          "ts": rng.randint(0, 300, 40).astype("int64")})
-    ev = pd.DataFrame({"k": rng.randint(0, 2, 80),
-                       "ets": rng.randint(0, 300, 80).astype("int64"),
-                       "v": rng.rand(80)})
-    sdf, edf = spark.createDataFrame(spine), spark.createDataFrame(ev)
-    multi = pit_window_agg_multi(
-        sdf, on="k", spine_ts="ts",
-        sources=[EventSource(edf, "ets", "v", "x_")],
-        window=100, frame="leading").toPandas()
-    single = pit_window_agg(sdf, edf, on="k", spine_ts="ts",
-                            event_ts="ets", value_col="v", window=100,
-                            frame="leading", prefix="x_").toPandas()
-    cols = ["obs_id", "x_count_100", "x_sum_100"]
-    canon = lambda p: (p[cols].sort_values("obs_id")  # noqa: E731
-                       .reset_index(drop=True).round(9))
-    pd.testing.assert_frame_equal(canon(multi), canon(single))
 
 
 def test_fused_training_set_duplicate_prefix_raises(spark):
